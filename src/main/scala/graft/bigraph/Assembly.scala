@@ -3,7 +3,7 @@ package graft.bigraph
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.hier.PlaceTables
-import graft.react.BigraphState
+import graft.react.{BigraphState, World}
 
 /** Assembly of PlaceTables into the numbered bigraph form: canonical
   * deterministic node ids (rank over uid — SURVEY.md §2.8/§7.5; OCaml fold
@@ -12,8 +12,9 @@ import graft.react.BigraphState
   * sink and the S6 loader into a reaction-ready [[BigraphState]]. */
 object Assembly {
 
-  /** places (id, ctrl, name, parent) + junction edge membership
-    * (edge_key, place_id). Region parent = -1. */
+  /** The cached [[World]] of the tables — places (id, ctrl, name, parent,
+    * parent_ctrl), junction edge membership (edge_key, place_id) and the
+    * street links — with an empty agent delta. Region parent = -1. */
   def toState(spark: SparkSession, t: PlaceTables): BigraphState = {
     // uid scheme keys entities by construction (never by display chain)
     val bo = t.boundaries.select(
@@ -49,20 +50,23 @@ object Assembly {
     val all = numberByUid(spark, bo.unionByName(st).unionByName(bu).unionByName(ju))
       .cache()
     val withParent = all.as("c")
-      .join(all.select(col("uid").as("p_uid"), col("id").as("p_id")).as("p"),
+      .join(all.select(col("uid").as("p_uid"), col("id").as("p_id"), col("ctrl").as("p_ctrl")).as("p"),
         col("c.parent_uid") === col("p.p_uid"), "left")
       .select(col("c.id").as("id"), col("c.ctrl").as("ctrl"), col("c.name").as("name"),
-        coalesce(col("p_id"), lit(-1L)).as("parent"), col("c.edge_key").as("edge_key"))
-    val places = withParent.select("id", "ctrl", "name", "parent").cache()
-    val edges = withParent.filter(col("edge_key").isNotNull)
-      .select(col("edge_key"), col("id").as("place_id")).cache()
-    // materialize the returned caches, then free the numbering intermediate —
-    // the state's two frames are the only caches this call leaves behind
-    places.count()
-    edges.count()
+        coalesce(col("p_id"), lit(-1L)).as("parent"), col("p_ctrl").as("parent_ctrl"),
+        col("c.edge_key").as("edge_key"))
+      .cache()
+    val ports = withParent.filter(col("edge_key").isNotNull)
+    val world = World(withParent.drop("edge_key"),
+      ports.select(col("edge_key"), col("id").as("place_id")),
+      World.streetLinks(ports.select(col("edge_key"), col("parent").as("street"),
+        col("parent_ctrl"))).cache())
+    // one action fills both caches — the numbered places with their parent
+    // ctrl (the move index, built once here and read by every reaction) and
+    // the street links — then the numbering intermediate is freed
+    world.streetLinks.count()
     all.unpersist(false)
-    import spark.implicits._
-    BigraphState(places, edges, Seq.empty[(Long, Long)].toDF("agent_a", "agent_b"))
+    BigraphState(world, Vector.empty, Vector.empty)
   }
 
   /** Canonical dense numbering by uid WITHOUT a global single-partition

@@ -62,10 +62,12 @@ object PlacePipeline {
             metas: Seq[BoundaryMeta]): PlaceTables = {
     import spark.implicits._
 
-    // Small dimension: one row per boundary. Broadcast into every join.
-    val metaDf = broadcast(
+    // Small dimension: one row per boundary. Broadcast into every join — the
+    // hint sits at each join site, since `boundaries` reuses the frame
+    // outside any join.
+    val metaDf =
       metas.map(m => (m.bkey, m.level, m.name, m.parentKey, m.postIdx, m.path, m.nameChain))
-        .toDF("bkey", "level", "bname_", "parent_bkey", "post_idx", "path", "chain"))
+        .toDF("bkey", "level", "bname_", "parent_bkey", "post_idx", "path", "chain")
 
     // ── P6/P7 classification dispatch (hierarchy.ml:107-176) ──
     val classified = elems.toDF()
@@ -100,7 +102,7 @@ object PlacePipeline {
       .withColumn("s_name",
         when(col("cls") === "highway", coalesce(tag("name"), tag("ref"), col("elem_key"))))
       .drop("tags")
-      .join(metaDf, "bkey")
+      .join(broadcast(metaDf), "bkey")
       .cache()
 
     // ── outer names: every bare node in the extract (hierarchy.ml:151-156).

@@ -1,86 +1,195 @@
 package graft.react
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** Bigraph world state for reaction rules (SURVEY.md §2.9): the place
-  * forest as a parent-pointer table plus the junction link hypergraph and
-  * agent contact links.
+/** One Agent of a state's delta — the only place rows reactions move. */
+final case class Agent(id: Long, name: String, parent: Long)
+
+/** The fixed part of a bigraph world (SURVEY.md §2.9): every non-Agent place
+  * and the junction link hypergraph. No reaction rule rewrites either, so
+  * the move index over them is derived ONCE per world and shared by every
+  * state and every matcher query:
   *
-  *   places: (id LONG, ctrl STRING, name STRING, parent LONG)  parent -1 = region
-  *   junctionEdges: (edge_key STRING, place_id LONG)           hyperedge membership
-  *   contacts: (agent_a LONG, agent_b LONG)                    B6 links
+  *   index: (id, ctrl, name, parent, parent_ctrl)  parent -1 = region;
+  *          parent_ctrl = ctrl of the parent row (null when there is none)
+  *   junctionEdges: (edge_key STRING, place_id LONG)  hyperedge membership
+  *   streetLinks: (street, target)  distinct pairs: a Junction in Street
+  *          `street` shares a hyperedge with a Junction in place `target`
+  *          ≠ `street` — move_across_linked_streets' whole 3-way join
   *
-  * Each reaction is a declarative transformation: the LHS pattern is a join
-  * over these tables, the rewrite is a point update — no SAT search
-  * (reference uses MiniSAT subgraph isomorphism, builder.ml:237-238; our
-  * rules match by keyed joins, SURVEY.md §2.9). "First occurrence" is the
-  * canonical minimum over the match keys, making every rule deterministic
-  * (reference's solver order is unspecified; SURVEY.md §7.5).
+  * [[graft.bigraph.Assembly.toState]] caches them (its parent join yields
+  * parent_ctrl and the Junction ports for free); the
+  * `BigraphState(places, edges, contacts)` constructor leaves them uncached
+  * — those frames are the caller's. */
+final case class World(index: DataFrame, junctionEdges: DataFrame, streetLinks: DataFrame) {
+  def places: DataFrame = index.select("id", "ctrl", "name", "parent")
+
+  /** Largest place id of the world (-1 when empty): fresh agents number past it. */
+  lazy val maxId: Long = {
+    val r = index.agg(max(col("id"))).collect()(0)
+    if (r.isNullAt(0)) -1L else r.getLong(0)
+  }
+}
+
+object World {
+  /** A world from (id, ctrl, name, parent, parent_ctrl) place rows and
+    * (edge_key, place_id) hyperedge membership. */
+  def apply(index: DataFrame, junctionEdges: DataFrame): World =
+    World(index, junctionEdges, streetLinks(index.filter(col("ctrl") === "Junction")
+      .join(junctionEdges, col("id") === col("place_id"))
+      .select(col("edge_key"), col("parent").as("street"), col("parent_ctrl"))))
+
+  /** The street links from Junction ports (edge_key, street, parent_ctrl),
+    * `street` being the Junction's parent: ONE self-join on the hyperedge. */
+  def streetLinks(ports: DataFrame): DataFrame =
+    ports.filter(col("parent_ctrl") === "Street").as("j1")
+      .join(ports.as("j2"), col("j2.edge_key") === col("j1.edge_key") &&
+        col("j2.street") =!= col("j1.street"))
+      .select(col("j1.street").as("street"), col("j2.street").as("target"))
+      .distinct()
+}
+
+/** Bigraph world state for reaction rules (SURVEY.md §2.9): a fixed [[World]]
+  * plus a driver-local delta — the Agent rows and the agent contact links
+  * (B6). A reaction rewrites only the delta, so a state costs
+  * O(agents + contacts) driver rows and a rewrite never touches the world's
+  * O(places) rows; the trade-off is that every state's delta lives on the
+  * driver.
+  *
+  * Each reaction is a declarative transformation: the LHS pattern is ONE join
+  * of the agent delta with a branch of the world's move index (or with the
+  * delta itself, for Agent-ctrl patterns), the rewrite is a point update of
+  * the delta — no SAT search (reference uses MiniSAT subgraph isomorphism,
+  * builder.ml:237-238; our rules match by keyed joins, SURVEY.md §2.9).
+  * "First occurrence" is the canonical minimum over the match keys, making
+  * every rule deterministic (reference's solver order is unspecified;
+  * SURVEY.md §7.5).
   */
-case class BigraphState(places: DataFrame, junctionEdges: DataFrame, contacts: DataFrame) {
-  def spark: SparkSession = places.sparkSession
+final case class BigraphState(world: World, agents: Vector[Agent], contactPairs: Vector[(Long, Long)]) {
+  def spark: SparkSession = world.index.sparkSession
 
-  def countCtrl(ctrl: String): Long = places.filter(col("ctrl") === ctrl).count()
+  def junctionEdges: DataFrame = world.junctionEdges
+
+  /** The agent delta as a local relation (id, ctrl, name, parent). */
+  lazy val agentRows: DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(agents.map(a => Row(a.id, "Agent", a.name, a.parent)): _*),
+    BigraphState.placeSchema)
+
+  /** world ∪ delta: (id, ctrl, name, parent), parent -1 = region. */
+  private[react] def forest: DataFrame = world.places.unionByName(agentRows)
+
+  /** The whole place forest, marked cached on first read. A view for callers
+    * and exports — no matcher or reaction reads it. */
+  lazy val places: DataFrame = forest.cache()
+
+  /** (agent_a, agent_b) contact links as a local relation. */
+  lazy val contacts: DataFrame = {
+    val sp = spark
+    import sp.implicits._
+    contactPairs.toDF("agent_a", "agent_b")
+  }
+
+  def countCtrl(ctrl: String): Long =
+    if (ctrl == "Agent") agents.size.toLong
+    else world.index.filter(col("ctrl") === ctrl).count()
 
   /** Location of an agent: (parent id, parent ctrl, parent name). */
   def whereIs(agentName: String): Option[(Long, String, String)] = {
-    places.as("a").filter(col("a.ctrl") === "Agent" && col("a.name") === agentName)
-      .join(places.as("p"), col("a.parent") === col("p.id"))
-      .select(col("p.id"), col("p.ctrl"), col("p.name"))
-      .collect().headOption.map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    val agentById = agents.map(a => a.id -> a).toMap
+    agents.iterator.filter(_.name == agentName).map { a =>
+      agentById.get(a.parent).map(p => (p.id, "Agent", p.name)).orElse(
+        world.index.filter(col("id") === a.parent).select("id", "ctrl", "name")
+          .collect().headOption.map(r => (r.getLong(0), r.getString(1), r.getString(2))))
+    }.collectFirst { case Some(loc) => loc }
+  }
+}
+
+object BigraphState {
+  private[react] val placeSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false), StructField("ctrl", StringType),
+    StructField("name", StringType), StructField("parent", LongType, nullable = false)))
+
+  /** A state from whole-forest tables — places (id, ctrl, name, parent),
+    * junctionEdges (edge_key, place_id), contacts (agent_a, agent_b): the
+    * Agent rows and the contacts are collected as the delta, the other rows
+    * become an uncached [[World]]. */
+  def apply(places: DataFrame, junctionEdges: DataFrame, contacts: DataFrame): BigraphState = {
+    val index = places.filter(!(col("ctrl") <=> "Agent")).as("c")
+      .join(places.select(col("id").as("p_id"), col("ctrl").as("parent_ctrl")),
+        col("c.parent") === col("p_id"), "left")
+      .select(col("c.id").as("id"), col("c.ctrl").as("ctrl"), col("c.name").as("name"),
+        col("c.parent").as("parent"), col("parent_ctrl"))
+    val agents = places.filter(col("ctrl") === "Agent").select("id", "name", "parent")
+      .collect().map(r => Agent(r.getLong(0), r.getString(1), r.getLong(2))).toVector
+    val pairs = contacts.select("agent_a", "agent_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toVector
+    BigraphState(World(index, junctionEdges), agents, pairs)
   }
 }
 
 object Reactions {
 
-  /** Rewrite helper: set `parent` of one place id. */
-  private def reparent(s: BigraphState, placeId: Long, newParent: Long): BigraphState =
-    s.copy(places = s.places.withColumn("parent",
-      when(col("id") === placeId, lit(newParent)).otherwise(col("parent")))
-      .cache())
-
-  private def nextId(s: BigraphState): Long =
-    s.places.agg(max(col("id"))).collect()(0).getLong(0) + 1
+  /** Rewrite helper: set `parent` of one Agent. Fails loudly on an id that
+    * is not an Agent of the state — a matcher returning one would otherwise
+    * move a place that reactions never rewrite. */
+  private def reparent(s: BigraphState, agent: Long, newParent: Long): BigraphState = {
+    val i = s.agents.indexWhere(_.id == agent)
+    require(i >= 0, s"reparent: place $agent is not an Agent of this state")
+    s.copy(agents = s.agents.updated(i, s.agents(i).copy(parent = newParent)))
+  }
 
   /** B1 add_agent_to_building (builder.ml:240-276): insert Agent under the
     * canonically-first Building with `buildingName`; error if absent. */
   def addAgentToBuilding(s: BigraphState, buildingName: String, agentName: String): BigraphState = {
-    val b = s.places.filter(col("ctrl") === "Building" && col("name") === buildingName)
+    val b = s.world.index.filter(col("ctrl") === "Building" && col("name") === buildingName)
       .orderBy(col("id")).limit(1).collect()
     require(b.nonEmpty, s"""Building name "$buildingName" not found""")
-    val id = nextId(s)
-    val sp = s.spark
-    import sp.implicits._
-    val fresh = Seq((id, "Agent", agentName, b(0).getAs[Long]("id")))
-      .toDF("id", "ctrl", "name", "parent")
-    s.copy(places = s.places.unionByName(fresh).cache())
+    val id = (s.world.maxId +: s.agents.map(_.id)).max + 1
+    s.copy(agents = s.agents :+ Agent(id, agentName, b(0).getAs[Long]("id")))
+  }
+
+  /** The relation a pattern's `ctrl`-side node ranges over: Agents live in
+    * the delta, every other ctrl in the world's index. */
+  private def placesOf(s: BigraphState, ctrl: String): DataFrame =
+    if (ctrl == "Agent") s.agentRows else s.world.index
+
+  /** `branch` ⋈ delta on branch.`key` = agent.parent: each branch row once
+    * per Agent whose parent is its `key`, that Agent's id in column `agent`.
+    * The delta rides in the plan as a map literal parent → agent ids, so the
+    * join is a lookup inside ONE scan of the branch — a broadcast of the
+    * delta would cost a job of its own per matcher query. */
+  private def joinAgents(s: BigraphState, branch: DataFrame, key: String): DataFrame = {
+    val byParent: Map[Long, Seq[Long]] = s.agents.groupBy(_.parent).view.mapValues(_.map(_.id)).toMap
+    branch.filter(col(key).isin(byParent.keys.toSeq: _*))
+      .withColumn("agent", explode(element_at(typedLit(byParent), col(key))))
   }
 
   /** All occurrences of leave_* (builder.ml:309-332) as a Dataset:
     * (agent, target) where target = the grandparent the agent moves beside. */
   def leaveMatches(s: BigraphState, ctrl: String): DataFrame =
-    s.places.as("a")
-      .filter(col("a.ctrl") === "Agent")
-      .join(s.places.as("p"), col("a.parent") === col("p.id") && col("p.ctrl") === lit(ctrl))
-      .select(col("a.id").as("agent"), col("p.parent").as("target"))
+    joinAgents(s, placesOf(s, ctrl).filter(col("ctrl") === lit(ctrl)), "id")
+      .select(col("agent"), col("parent").as("target"))
 
   /** B2 leave_*: Agent nested in a `ctrl` ⇒ beside it (builder.ml:309-332). */
   def leave(s: BigraphState, ctrl: String): Option[BigraphState] =
     applyFirst(s, leaveMatches(s, ctrl))
 
-  /** All occurrences of enter_* (builder.ml:334-351): (agent, target). */
+  /** All occurrences of enter_* (builder.ml:334-351): (agent, target). A
+    * world target's parent IS the agent's parent, so the index's
+    * parent_ctrl decides `viaParentCtrl`; an Agent target is a delta row,
+    * whose parent's ctrl is looked up in the forest. */
   def enterMatches(s: BigraphState, ctrl: String,
                    viaParentCtrl: Option[String] = None): DataFrame = {
-    var m = s.places.as("a")
-      .filter(col("a.ctrl") === "Agent")
-      .join(s.places.as("t"),
-        col("t.parent") === col("a.parent") && col("t.ctrl") === lit(ctrl) &&
-          col("t.id") =!= col("a.id"))
-    for (pc <- viaParentCtrl)
-      m = m.join(s.places.as("p"),
-        col("a.parent") === col("p.id") && col("p.ctrl") === lit(pc))
-    m.select(col("a.id").as("agent"), col("t.id").as("target"))
+    val m = joinAgents(s, placesOf(s, ctrl).filter(col("ctrl") === lit(ctrl)), "parent")
+      .filter(col("id") =!= col("agent"))
+    viaParentCtrl.fold(m) { pc =>
+      if (ctrl == "Agent")
+        m.as("t").join(s.forest.as("p"), col("t.parent") === col("p.id") && col("p.ctrl") === lit(pc))
+          .select("t.*")
+      else m.filter(col("parent_ctrl") === lit(pc))
+    }.select(col("agent"), col("id").as("target"))
   }
 
   /** B3/B4 enter_* (+ optional parent-ctrl constraint for
@@ -90,19 +199,10 @@ object Reactions {
     applyFirst(s, enterMatches(s, ctrl, viaParentCtrl))
 
   /** All occurrences of move_across_linked_streets (builder.ml:353-368):
-    * (agent, target street). */
-  def moveAcrossMatches(s: BigraphState): DataFrame = {
-    val j = s.places.filter(col("ctrl") === "Junction")
-      .join(s.junctionEdges, col("id") === col("place_id"))
-      .select(col("id").as("jid"), col("parent").as("street"), col("edge_key"))
-    s.places.as("a").filter(col("a.ctrl") === "Agent")
-      .join(s.places.as("st"), col("a.parent") === col("st.id") && col("st.ctrl") === "Street")
-      .join(j.as("j1"), col("j1.street") === col("st.id"))
-      .join(j.as("j2"), col("j2.edge_key") === col("j1.edge_key") &&
-        col("j2.street") =!= col("j1.street"))
-      .select(col("a.id").as("agent"), col("j2.street").as("target"))
-      .distinct()
-  }
+    * (agent, target street) — the agent's Street looked up in the world's
+    * street links (distinct per street, so distinct per agent). */
+  def moveAcrossMatches(s: BigraphState): DataFrame =
+    joinAgents(s, s.world.streetLinks, "street").select(col("agent"), col("target"))
 
   /** B5 move_across_linked_streets (builder.ml:353-368): Agent in Street s₁
     * beside a Junction on hyperedge e; another Junction on e sits in
@@ -111,13 +211,16 @@ object Reactions {
     applyFirst(s, moveAcrossMatches(s))
 
   /** All occurrences of connect_to_nearby_agent (builder.ml:381-408) after
-    * the AppCond anti join: (agent_a, agent_b) pairs not yet linked. */
+    * the AppCond anti join: (agent_a, agent_b) pairs not yet linked. Both
+    * sides are delta rows, so the pairs are formed on the driver. */
   def connectMatches(s: BigraphState): DataFrame = {
-    val agents = s.places.filter(col("ctrl") === "Agent").select(col("id"), col("parent"))
-    agents.as("x").join(agents.as("y"),
-        col("x.parent") === col("y.parent") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("agent_a"), col("y.id").as("agent_b"))
-      .join(s.contacts, Seq("agent_a", "agent_b"), "left_anti")
+    val linked = s.contactPairs.toSet
+    val pairs = for (x <- s.agents; y <- s.agents
+                     if x.parent == y.parent && x.id < y.id && !linked((x.id, y.id)))
+      yield (x.id, y.id)
+    val sp = s.spark
+    import sp.implicits._
+    pairs.toDF("agent_a", "agent_b")
   }
 
   /** B6 connect_to_nearby_agent (builder.ml:381-408): two Agents sharing a
@@ -126,13 +229,7 @@ object Reactions {
   def connectToNearbyAgent(s: BigraphState): Option[BigraphState] = {
     val fresh = connectMatches(s)
       .orderBy(col("agent_a"), col("agent_b")).limit(1).collect()
-    fresh.headOption.map(r => addContact(s, r.getLong(0), r.getLong(1)))
-  }
-
-  private def addContact(s: BigraphState, a: Long, b: Long): BigraphState = {
-    val sp = s.spark
-    import sp.implicits._
-    s.copy(contacts = s.contacts.unionByName(Seq((a, b)).toDF("agent_a", "agent_b")).cache())
+    fresh.headOption.map(r => s.copy(contactPairs = s.contactPairs :+ ((r.getLong(0), r.getLong(1)))))
   }
 
   /** Canonical first occurrence of a reparenting match set (§7.5: "first" =
@@ -208,93 +305,23 @@ object Reactions {
     }
   }
 
-  /** Distributed canonical identity of a state: an ORDER-INDEPENDENT
-    * digest — (sum, bit_xor, count) of per-row xxhash64 over the places
-    * relation, the same triple over the contacts relation — computed on
-    * EXECUTORS, so exactly one scalar row reaches the driver per candidate
-    * state. Node ids are stable across reactions (rewrites only change
-    * parent pointers / add links), so two states are isomorphic for BRS
-    * purposes iff their row multisets are equal (SURVEY.md §2.9); the
-    * digest is a hash of that multiset. The round-3 shape collected every
-    * `places` row of every candidate (at Berlin scale, GBs per bfs
-    * expansion); now full rows are collected only for states seen for the
-    * FIRST time ([[canon]] — instrumented by [[fullStateCollects]]).
-    *
-    * The sum rides a DECIMAL(38,0) (a Long sum of xxhash64 values
-    * overflows, which ANSI mode makes a job-killing error). The xor runs
-    * over a SECOND, independent hash (a constant extra column changes
-    * xxhash64's output completely) — sum and xor of the same hash would
-    * give only ~2⁻⁶⁴ resistance for two-row swaps; with independent
-    * hashes + the exact row count the bound is ~2⁻¹²⁸ per comparison,
-    * vanishing against maxStates ≤ 10⁶. */
-  private case class StateDigest(pSum: BigInt, pXor: Long, pCnt: Long,
-                                 cSum: BigInt, cXor: Long, cCnt: Long)
-
-  private def stateDigest(s: BigraphState): StateDigest = {
-    val r = s.places.agg(
-        sum(xxhash64(col("id"), col("ctrl"), col("name"), col("parent"))
-          .cast("decimal(38,0)")).as("ps"),
-        expr("bit_xor(xxhash64(id, ctrl, name, parent, 7919))").as("px"),
-        count(lit(1)).as("pc"))
-      .crossJoin(s.contacts.agg(
-        sum(xxhash64(col("agent_a"), col("agent_b")).cast("decimal(38,0)")).as("cs"),
-        expr("bit_xor(xxhash64(agent_a, agent_b, 7919))").as("cx"),
-        count(lit(1)).as("cc")))
-      .collect()(0)
-    def dec(i: Int): BigInt = // empty relation sums to null → 0
-      if (r.isNullAt(i)) BigInt(0) else BigInt(r.getDecimal(i).toBigInteger)
-    def lng(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-    StateDigest(dec(0), lng(1), r.getLong(2), dec(3), lng(4), r.getLong(5))
-  }
-
-  /** Count of full-state row collects ([[canon]] calls) — bfs moves
-    * O(distinct states) of these, NOT O(generated successors); asserted by
-    * BrsSpec's driver-traffic test. */
+  /** Count of states admitted into a [[bfs]] transition graph — one per
+    * DISTINCT state, never one per generated successor; asserted by
+    * BrsSpec's driver-traffic test and reported by the benchmark. */
   private[graft] val fullStateCollects = new java.util.concurrent.atomic.AtomicLong
 
-  /** Full canonical rows of a state: sorted (id, ctrl, name, parent) +
-    * sorted contact pairs, collected to the driver — called only for
-    * digest-fresh states (exploration keeps whole kept states in driver
-    * memory, as the reference does with its transition graph). */
-  private def canon(s: BigraphState, dropCache: Boolean)
-      : (Vector[(Long, String, String, Long)], Vector[(Long, Long)]) = {
-    fullStateCollects.incrementAndGet()
-    val p = s.places.select(col("id"), col("ctrl"), col("name"), col("parent")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .sortBy(_._1).toVector
-    val c = s.contacts.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toVector
-    // reparent marks its output cached; exploration materialized it via the
-    // collect above — drop the blocks so bfs never accumulates caches
-    // (dropCache=false for caller-owned states like s0, whose cache is not
-    // ours to free)
-    if (dropCache) s.places.unpersist(false)
-    (p, c)
-  }
-
-  /** Rebuild a state from its canon as flat local relations — plan depth
-    * O(1) regardless of how many reactions produced it, nothing cached. */
-  private def ofCanon(spark: SparkSession,
-                      k: (Vector[(Long, String, String, Long)], Vector[(Long, Long)])): BigraphState = {
-    import spark.implicits._
-    BigraphState(k._1.toDF("id", "ctrl", "name", "parent"),
-      // junction edges are invariant under every reaction rule; bfs/sim
-      // thread the initial state's frame through (see below)
-      null, k._2.toDF("agent_a", "agent_b"))
-  }
+  /** Canonical identity of a state within its world: the sorted agent rows
+    * and contact pairs. The world is shared by every state a reaction
+    * sequence reaches and node ids are stable across reactions, so two such
+    * states are isomorphic for BRS purposes iff these are equal (SURVEY.md
+    * §2.9) — an exact O(agents + contacts) key, computed on the driver. */
+  private def canon(s: BigraphState): (Vector[Agent], Vector[(Long, Long)]) =
+    (s.agents.sortBy(a => (a.id, a.parent)), s.contactPairs.sorted)
 
   /** The transition system explored by [[bfs]]: canonical states (index 0 =
     * s0) and labeled edges (fromState, ruleName, toState). `truncated` is
     * true when maxStates stopped the exploration (the reference's MAX
-    * exception, builder.mli:139).
-    *
-    * PROBABILISTIC IDENTITY CONTRACT: state dedup runs on the executor-side
-    * [[StateDigest]] (two independent xxhash64 streams + exact counts,
-    * ~2⁻¹²⁸ collision odds per comparison — see [[stateDigest]]); a
-    * colliding pair would silently merge two distinct states into one
-    * node. At the bounded maxStates ≤ 10⁶ this engine explores, the union
-    * bound stays below 10⁻²⁶ per exploration — accepted by design rather
-    * than paying a full-row collect per GENERATED successor (the round-3
-    * shape, O(successors × places) driver rows at Berlin scale). */
+    * exception, builder.mli:139). */
   case class TransitionGraph(states: IndexedSeq[BigraphState],
                              edges: Seq[(Int, String, Int)],
                              truncated: Boolean) {
@@ -383,13 +410,12 @@ object Reactions {
                      priorities: Seq[Seq[(String, BigraphState => DataFrame)]],
                      maxStates: Int = 256,
                      maxOccurrencesPerRule: Int = 64): TransitionGraph = {
-    val sp = s0.spark
-    val d0 = stateDigest(s0)
-    val k0 = canon(s0, dropCache = false)
-    val states = scala.collection.mutable.ArrayBuffer(ofCanon(sp, k0).copy(junctionEdges = s0.junctionEdges))
-    val seen = scala.collection.mutable.HashMap(d0 -> 0)
+    val states = scala.collection.mutable.ArrayBuffer(s0)
+    val seen = scala.collection.mutable.HashMap(canon(s0) -> 0)
+    fullStateCollects.incrementAndGet()
     val edges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Int)]
     var truncated = false
+    var cutExpansions = 0
     var frontier = List(0)
     while (frontier.nonEmpty) {
       val next = scala.collection.mutable.ListBuffer.empty[Int]
@@ -397,26 +423,21 @@ object Reactions {
         // the applicable class: first one where any rule has an occurrence
         val expansions = priorities.iterator.map { cls =>
           cls.flatMap { case (name, matcher) =>
-            step(states(si), matcher(states(si)), maxOccurrencesPerRule)
-              .map(succ => (name, succ))
+            val (succs, cut) = stepTruncated(states(si), matcher(states(si)), maxOccurrencesPerRule)
+            if (cut) cutExpansions += 1
+            succs.map(succ => (name, succ))
           }
         }.find(_.nonEmpty).getOrElse(Nil)
         for ((name, succ) <- expansions) {
-          // identity check moves ONE scalar row; full rows are collected
-          // only below, on first sight of the digest
-          val dg = stateDigest(succ)
-          seen.get(dg) match {
-            case Some(ti) =>
-              succ.places.unpersist(false) // reparent's cache, now dead
-              edges += ((si, name, ti))
-            case None if states.length >= maxStates =>
-              succ.places.unpersist(false)
-              truncated = true
+          val k = canon(succ)
+          seen.get(k) match {
+            case Some(ti) => edges += ((si, name, ti))
+            case None if states.length >= maxStates => truncated = true
             case None =>
               val ti = states.length
-              states += ofCanon(sp, canon(succ, dropCache = true))
-                .copy(junctionEdges = s0.junctionEdges)
-              seen(dg) = ti
+              states += succ
+              fullStateCollects.incrementAndGet()
+              seen(k) = ti
               edges += ((si, name, ti))
               next += ti
           }
@@ -424,6 +445,10 @@ object Reactions {
       }
       frontier = next.toList
     }
+    if (cutExpansions > 0)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"bfs: $cutExpansions rule expansions truncated at maxOccurrencesPerRule=" +
+          s"$maxOccurrencesPerRule (raise the bound to explore every occurrence)")
     TransitionGraph(states.toIndexedSeq, edges.toSeq, truncated)
   }
 
@@ -450,10 +475,6 @@ object Reactions {
     var t = 0
     val trace = scala.collection.mutable.ArrayBuffer.empty[String]
     var dead = false
-    // deferred frees, same discipline as fix(): a state's cache only
-    // materializes at the NEXT iteration's matcher collect, so superseded
-    // frames free one step late and every materialization stays one-hop
-    var pending: List[DataFrame] = Nil
     while (t < steps && !dead) {
       val sNow = s
       // ONE-ROW seeded pick: occurrences are COUNTED per rule on executors
@@ -478,9 +499,6 @@ object Reactions {
             .map(c => (name, ms(ri), math.min(c, maxOccurrencesPerRule.toLong)))
         }.toList
       }.find(_.nonEmpty).getOrElse(Nil)
-      // the counts above materialized s → anything superseded before it is dead
-      pending.foreach(_.unpersist(false))
-      pending = Nil
       if (counted.isEmpty) dead = true
       else {
         val total = counted.map(_._3).sum
@@ -489,87 +507,25 @@ object Reactions {
         while (i >= counted(ri)._3) { i -= counted(ri)._3; ri += 1 }
         val name = counted(ri)._1
         val chosen = occurrenceAt(counted(ri)._2, i)
-        val (agent, target) = (chosen.getLong(0), chosen.getLong(1))
-        val nextState = reparent(s, agent, target)
-        // same plan-collapse cadence as fix(): without it the stacked
-        // point-update projections grow analysis cost unboundedly
-        val (newState, superseded) =
-          if ((t + 1) % CollapseEvery == 0)
-            (nextState.copy(places = truncateLineage(nextState.places)),
-              List(s.places, nextState.places))
-          else (nextState, List(s.places))
-        // frame-identity guards as in fix(): never the caller's s0 frame,
-        // never a frame the new state still carries
-        pending = superseded.distinct.filter(f =>
-          (f ne s0.places) && (f ne newState.places))
-        s = newState
+        s = reparent(s, chosen.getLong(0), chosen.getLong(1))
         trace += name
         t += 1
       }
     }
-    pending.foreach(_.unpersist(false))
     (s, t, trace.toSeq)
   }
 
-  /** Truncate a DataFrame's logical plan without carrying stale constraints
-    * (plain localCheckpoint's LogicalRDD keeps constraints that break later
-    * unions — observed on Spark 4.1). */
-  private def truncateLineage(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.rdd, df.schema).cache()
-
-  /** Plan-collapse cadence for the iterative loops ([[fix]]/[[sim]]/
-    * [[rewritePrioritized]]): every 4 applications the stacked point-update
-    * projections are truncated. 4, not the round-4 16: rule matchers
-    * SELF-JOIN places, and optimizer constraint derivation over a deep
-    * when-chain on both join sides grows super-linearly in chain depth —
-    * at Dover scale (2.2k places, 5-rule probes) a 16-deep chain exhausted
-    * an 8 GB driver, while depth ≤4 runs 50 applications in ~0.7 s/step
-    * flat. */
-  private val CollapseEvery = 4
-
   /** B7 fix: apply `rule` until no occurrence (bounded;
-    * builder.mli:124-136). Every [[CollapseEvery]] steps the stacked point-update
-    * projections are collapsed by materializing the plan — without this the
-    * plan nests one `when` per step and analysis cost grows unboundedly.
-    * Returns (state, stepsApplied). */
+    * builder.mli:124-136). Returns (state, stepsApplied). */
   def fix(s0: BigraphState, rule: BigraphState => Option[BigraphState],
           maxSteps: Int = 1000): (BigraphState, Int) = {
     var s = s0
     var n = 0
     var more = true
-    // DEFERRED cache frees: a state's cache only materializes when the NEXT
-    // rule application collects over it, so the superseded frames are freed
-    // one rule application late — each materialization stays one-hop
-    // incremental, and at most one superseded generation is ever pinned
-    // (round-2 shape pinned one DataFrame per step for the session).
-    var pending: List[DataFrame] = Nil
     while (more && n < maxSteps) rule(s) match {
-      case Some(next) =>
-        // rule(s) just collected over s → frames superseded BEFORE s are dead
-        pending.foreach(_.unpersist(false))
-        val (newState, superseded) =
-          if ((n + 1) % CollapseEvery == 0) {
-            val tr = next.copy(places = truncateLineage(next.places),
-              contacts = truncateLineage(next.contacts))
-            (tr, List(s.places, s.contacts, next.places, next.contacts))
-          } else (next, List(s.places, s.contacts))
-        // free only frames that are (a) not the caller's s0 frames and
-        // (b) not shared with the new state — a rule that rewrites only one
-        // frame (e.g. connectToNearbyAgent copies contacts, shares places)
-        // carries the other frame forward BY REFERENCE; freeing it would
-        // force every later collect to replay the stacked projections
-        pending = superseded.distinct.filter(f =>
-          (f ne s0.places) && (f ne s0.contacts) &&
-            (f ne newState.places) && (f ne newState.contacts))
-        s = newState
-        n += 1
-      case None =>
-        // the final (matchless) rule application still collected over s
-        pending.foreach(_.unpersist(false))
-        pending = Nil
-        more = false
+      case Some(next) => s = next; n += 1
+      case None => more = false
     }
-    pending.foreach(_.unpersist(false))
     (s, n)
   }
 
@@ -592,10 +548,7 @@ object Reactions {
     * occurrence (the fixpoint) or at `maxSteps` (reparenting rule sets can
     * cycle — move_across is its own inverse — so the bound is load-bearing,
     * as in [[fix]]). Returns (final state, steps applied, fired-rule
-    * trace); the reference returns the (state, steps) pair.
-    *
-    * Cache discipline is [[fix]]'s: deferred frees one application late,
-    * plan collapse every [[CollapseEvery]] steps. */
+    * trace); the reference returns the (state, steps) pair. */
   def rewritePrioritized(s0: BigraphState,
                          priorities: Seq[Seq[(String, BigraphState => DataFrame)]],
                          maxSteps: Int = 1000): (BigraphState, Int, Seq[String]) = {
@@ -603,7 +556,6 @@ object Reactions {
     var n = 0
     val trace = scala.collection.mutable.ArrayBuffer.empty[String]
     var more = true
-    var pending: List[DataFrame] = Nil
     val names = priorities.map(_.map(_._1))
     while (more && n < maxSteps) {
       val sNow = s
@@ -626,34 +578,16 @@ object Reactions {
         else taggedParts.reduce(_ unionByName _)
           .orderBy(col("cls"), col("rule"), col("agent"), col("target"))
           .limit(1).collect()
-      // the probe above materialized s → frames superseded before it are dead
-      pending.foreach(_.unpersist(false))
-      pending = Nil
       (if (rows.isEmpty) None
        else Some((names(rows(0).getInt(2))(rows(0).getInt(3)), rows))) match {
         case Some((name, rows)) =>
-          val nextState = reparent(sNow, rows(0).getLong(0), rows(0).getLong(1))
-          // collapse every CollapseEvery (a shared 4, same as fix):
-          // rewrite PROBES up to every rule per step, and optimizer
-          // constraint derivation on a deep when-chain SELF-JOIN
-          // (leave/enter match both sides of places⋈places) grows
-          // super-linearly in chain depth — at Dover scale a 16-deep
-          // chain exhausted an 8 GB driver
-          val (newState, superseded) =
-            if ((n + 1) % CollapseEvery == 0)
-              (nextState.copy(places = truncateLineage(nextState.places)),
-                List(sNow.places, nextState.places))
-            else (nextState, List(sNow.places))
-          pending = superseded.distinct.filter(f =>
-            (f ne s0.places) && (f ne newState.places))
-          s = newState
+          s = reparent(sNow, rows(0).getLong(0), rows(0).getLong(1))
           trace += name
           n += 1
         case None =>
           more = false
       }
     }
-    pending.foreach(_.unpersist(false))
     (s, n, trace.toSeq)
   }
 }
