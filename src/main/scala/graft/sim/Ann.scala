@@ -310,10 +310,10 @@ object Ann {
   /** Single-slot displaced cache for the normed rows frame — it is
     * consumed ~6× per IVF call (count guard, k-means sample, assignment,
     * probes, both re-rank join sides), which uncached meant ~6 full
-    * re-evaluations of the upstream scan/pipeline per call. Same posture
-    * as NearDup.lastSetCache: the previous call's slot is
-    * unpersist(false)-ed, so a still-lazy plan over it recomputes instead
-    * of failing — consume each IVF result before building the next. */
+    * re-evaluations of the upstream scan/pipeline per call. The previous
+    * call's slot is unpersist(false)-ed, so a still-lazy plan over it
+    * recomputes instead of failing — consume each IVF result before
+    * building the next. */
   private val lastRowsCache =
     new java.util.concurrent.atomic.AtomicReference[DataFrame]()
 

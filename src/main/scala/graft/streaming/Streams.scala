@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.synth.SynthWorld
+import graft.text.NearDup
 import graft.web.{Flagship, Geocode}
 
 /** Structured Streaming layer (SURVEY.md §2.10 — extension, not in the
@@ -88,20 +89,11 @@ object Streams {
                            numHashes: Int = 16, bands: Int = 4,
                            thresholdPct: Int = 50,
                            watermark: String = "10 minutes"): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val toks = array_distinct(filter(split(col("text"), " "), t => t =!= ""))
-    // per-row MinHash: sig_i = min over tokens of xxhash64(i, token) —
-    // identical values to NearDup.minhashSignatures' groupBy form (min is
-    // dedup-insensitive), but expressible on a stream
-    val sig = array((0 until numHashes).map(i =>
-      array_min(transform(toks, t => xxhash64(lit(i), t)))): _*)
     val banded = stream
       .withWatermark("warc_ts", watermark)
-      .withColumn("s_toks", toks)
-      .withColumn("sig", sig)
+      .select(col("doc_id"), col("warc_ts"), NearDup.tokens(col("text")).as("s_toks"))
       .select(col("doc_id"), col("warc_ts"), col("s_toks"),
-        posexplode(graft.text.NearDup.bandBuckets(col("sig"), bands, rows)))
+        posexplode(NearDup.lshBuckets(col("s_toks"), numHashes, bands)))
       .toDF("doc_id", "warc_ts", "s_toks", "band", "bucket")
     banded.join(corpusBands, Seq("band", "bucket"))
       .dropDuplicatesWithinWatermark("doc_id", "corpus_id")
@@ -109,8 +101,7 @@ object Streams {
       .withColumn("inter", size(array_intersect(col("s_toks"), col("c_toks"))))
       .withColumn("size_a", size(col("s_toks")))
       .withColumn("size_b", size(col("c_toks")))
-      .filter(col("inter") * 100 >=
-        (col("size_a") + col("size_b") - col("inter")) * thresholdPct)
+      .filter(NearDup.jaccardAtLeast(thresholdPct))
       .select(col("doc_id"), col("corpus_id"), col("inter"),
         col("size_a"), col("size_b"))
   }
@@ -118,23 +109,21 @@ object Streams {
   /** The static side of [[nearDupAgainstCorpus]], computed ONCE per corpus
     * snapshot: (corpus_id, band, bucket) band index + (corpus_id, c_toks)
     * distinct token arrays, both CACHED — without the persist, the
-    * full-corpus MinHash aggregation would re-execute on every micro-batch
+    * full-corpus tokenize and MinHash would re-execute on every micro-batch
     * of the join, degrading the incremental shape to repeated batch work.
     * The CALLER owns the caches: unpersist both frames when rotating to a
     * new corpus snapshot. Banding goes through the one shared
-    * [[graft.text.NearDup.bandBuckets]] formula, so stream and corpus
+    * [[graft.text.NearDup.lshBuckets]] formula, so stream and corpus
     * buckets collide iff the band signatures are equal. */
   def corpusBandIndex(corpus: DataFrame, numHashes: Int = 16, bands: Int = 4)
       : (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val sigs = graft.text.NearDup.minhashSignatures(corpus, numHashes)
-    val banded = sigs.select(col("doc_id").as("corpus_id"),
-        posexplode(graft.text.NearDup.bandBuckets(col("sig"), bands, rows)))
-      .toDF("corpus_id", "band", "bucket")
-      .cache()
+    // built first: a bad (numHashes, bands) fails before anything is cached
+    val buckets = NearDup.lshBuckets(col("c_toks"), numHashes, bands)
     val toks = corpus.select(col("doc_id").as("corpus_id"),
-        array_distinct(filter(split(col("text"), " "), t => t =!= "")).as("c_toks"))
+        NearDup.tokens(col("text")).as("c_toks"))
+      .cache()
+    val banded = toks.select(col("corpus_id"), posexplode(buckets))
+      .toDF("corpus_id", "band", "bucket")
       .cache()
     (banded, toks)
   }

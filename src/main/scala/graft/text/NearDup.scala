@@ -1,14 +1,18 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection over the `documents` table — the dedup family
-  * a training-data pipeline needs at 100 TB. Three independent methods:
+  * a training-data pipeline needs at 100 TB. One column-level kernel
+  * ([[words]], [[tokens]], [[minhash]], [[lshBuckets]], [[jaccardAtLeast]])
+  * serves these methods and the streaming near-dup of
+  * [[graft.streaming.Streams]]:
   *
-  *  - exact word-set Jaccard via inverted-index pair join (the oracle-able
-  *    exact method; candidate pairs only where a token is shared, so the
-  *    join never goes quadratic on disjoint docs; hot tokens capped)
+  *  - exact set Jaccard over words or character n-grams via one
+  *    inverted-index pair join (the oracle-able exact method; candidate
+  *    pairs only where an element is shared, so the join never goes
+  *    quadratic on disjoint docs; hot elements capped)
   *  - MinHash + banded LSH (the scale path: candidates from band-bucket
   *    equality, then exact verification — one shuffle per stage)
   *  - SimHash with Hamming-ball banding
@@ -23,186 +27,156 @@ object NearDup {
   private def docs(spark: SparkSession, dir: String, maxDocId: Long = 1000L): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") < maxDocId)
 
-  /** Single-slot displaced cache for the token/shingle sets (consumed three
-    * times inside one pair-join plan, so caching is a real win — but a
-    * per-invocation cache nothing unpersists leaks executor storage in
-    * long-lived sessions; same posture as Ann's centroid broadcasts). The
-    * previous call's set is unpersist(false)-ed: a still-lazy plan over it
-    * recomputes instead of failing — so composing two near-dup plans before
-    * consuming the first trades the first plan's 3× token-set reuse for
-    * recomputation. Consume each result before building the next (as
-    * Verify/Bench do) to keep the cache hit. */
-  private val lastSetCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-  private def slotCache(df: DataFrame): DataFrame = {
-    val cached = df.cache()
-    val prev = lastSetCache.getAndSet(cached)
-    if (prev != null) prev.unpersist(false)
-    cached
+  /** Non-empty space-separated words of `text` (null for null text): the
+    * one tokenizer of every word-level method here and in
+    * [[graft.streaming.Streams]]. */
+  def words(text: Column): Column = filter(split(text, " "), t => t =!= "")
+
+  /** The distinct words of `text`: the token set that word Jaccard and
+    * MinHash work on. */
+  def tokens(text: Column): Column = array_distinct(words(text))
+
+  /** MinHash signature of a token array: sig_i = min over tokens of
+    * xxhash64(i, token), as a per-row array expression, so batch and
+    * streaming compute the same values with no aggregation. */
+  def minhash(toks: Column, numHashes: Int): Column =
+    array((0 until numHashes).map(i =>
+      array_min(transform(toks, t => xxhash64(lit(i), t)))): _*)
+
+  /** LSH band buckets from a signature column: band b = xxhash64 of the
+    * b-th length-`rows` slice. */
+  def bandBuckets(sig: Column, bands: Int, rows: Int): Column =
+    array((0 until bands).map(b =>
+      xxhash64(slice(sig, b * rows + 1, rows).cast("string"))): _*)
+
+  /** The band buckets of a token array's MinHash signature, to posexplode
+    * into (band, bucket) rows. ONE definition — [[minhashLsh]] and the
+    * streaming corpus/stream sides must produce bit-identical buckets or
+    * the band join silently finds nothing. Null, so no rows, for a null or
+    * token-less doc: its all-null signature would otherwise share every
+    * bucket with every other token-less doc and fabricate (0,0,0) pairs. */
+  def lshBuckets(toks: Column, numHashes: Int, bands: Int): Column = {
+    // a remainder would silently drop hashes; bands > numHashes gives
+    // empty slices that every doc shares, so candidates go O(n²)
+    require(numHashes > 0 && bands > 0 && numHashes % bands == 0,
+      s"bands ($bands) must be positive and divide numHashes ($numHashes)")
+    when(size(toks) > 0, bandBuckets(minhash(toks, numHashes), bands, numHashes / bands))
   }
 
-  /** (doc_id, token) distinct — token sets, with document-frequency cap on
-    * tokens so a stopword shared by every doc can't create O(n²) pairs. */
-  private def tokenSets(d: DataFrame, maxDf: Int): DataFrame = {
+  /** Jaccard inter/(size_a + size_b − inter) ≥ thresholdPct/100 over the
+    * integer columns inter, size_a, size_b, by cross-multiplication, so the
+    * DuckDB oracle decides every pair the same way. */
+  def jaccardAtLeast(thresholdPct: Int): Column =
+    col("inter") * 100 >= (col("size_a") + col("size_b") - col("inter")) * thresholdPct
+
+  /** Exact set-Jaccard pairs over the per-doc sets of `elems` (an array
+    * column of words or character n-grams). An inverted-index pair join:
+    * candidates arise only where an element is shared, so |candidates| =
+    * Σ_elem df², and an element in more than `maxDf` docs (a stopword) is
+    * dropped so it cannot create O(n²) pairs. Emits (doc_a, doc_b, inter,
+    * size_a, size_b) over the capped sets. */
+  private def setJaccardPairs(d: DataFrame, elems: Column,
+                              thresholdPct: Int, maxDf: Int): DataFrame = {
+    val parts = d.sparkSession.sparkContext.defaultParallelism
     // explicit-count repartition on the distinct keys: the dedup exchange
     // is reused by distinct() (same hash keys) and stays parallel where
-    // AQE would coalesce the tiny bytes to one task (see jaccardPairs)
-    val toks = d.select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .filter(col("token") =!= "")
-      .repartition(d.sparkSession.sparkContext.defaultParallelism,
-        col("doc_id"), col("token"))
+    // AQE would coalesce the tiny bytes to one task
+    val sets = d.select(col("doc_id"), explode(elems).as("elem"))
+      .repartition(parts, col("doc_id"), col("elem"))
       .distinct()
-    val hot = toks.groupBy("token").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select("token")
-    toks.join(broadcast(hot), Seq("token"), "left_anti")
+    val hot = sets.groupBy("elem").agg(count(lit(1)).as("df"))
+      .filter(col("df") > maxDf).select("elem")
+    // explicit-count repartition on the join key: the pair join EXPLODES
+    // (Σdf² candidates from KB-sized sets), and AQE — seeing only the tiny
+    // pre-join bytes — coalesced the exchange to ONE partition, making the
+    // explosion single-threaded (measured 14.6 s serial at sf0.1). A
+    // REPARTITION_BY_NUM exchange is exempt from AQE coalescing, and the
+    // sizes and both self-join sides reuse this one exchange.
+    val ts = sets.join(broadcast(hot), Seq("elem"), "left_anti")
+      .repartition(parts, col("elem"))
+    val sizes = ts.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    ts.as("a").join(ts.as("b"),
+        col("a.elem") === col("b.elem") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("inter"))
+      .join(sizes.toDF("doc_a", "size_a"), "doc_a")
+      .join(sizes.toDF("doc_b", "size_b"), "doc_b")
+      .filter(jaccardAtLeast(thresholdPct))
+      .select("doc_a", "doc_b", "inter", "size_a", "size_b")
   }
 
   /** Exact Jaccard similarity ≥ threshold over (capped) word sets.
-    * Pairs arise only from shared tokens: |candidates| = Σ_token df².
     * Emits (doc_a, doc_b, inter, size_a, size_b) with integer counts so the
     * DuckDB oracle hashes identically (jaccard = inter/(a+b-inter)). */
   def jaccardPairs(spark: SparkSession, dir: String,
                    thresholdPct: Int = 50, maxDf: Int = 1000,
-                   maxDocId: Long = 1000L): DataFrame = {
-    // explicit-count repartition on the join key: the pair join EXPLODES
-    // (Σdf² candidates from KB-sized token sets), and AQE — seeing only the
-    // tiny pre-join bytes — coalesced the exchange to ONE partition, making
-    // the explosion single-threaded (measured 14.6 s serial at sf0.1). A
-    // REPARTITION_BY_NUM exchange is exempt from AQE coalescing, and the
-    // cached partitioning is reused by the self-join (no extra exchange).
-    val ts = slotCache(tokenSets(docs(spark, dir, maxDocId), maxDf)
-      .repartition(spark.sparkContext.defaultParallelism, col("token")))
-    val sizes = ts.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = ts.as("a").join(ts.as("b"),
-        col("a.token") === col("b.token") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "size_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "size_b"), "doc_b")
-      // integer cross-multiplication: inter/(union) >= pct/100
-      .filter(col("inter") * 100 >= (col("size_a") + col("size_b") - col("inter")) * thresholdPct)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("size_a"), col("size_b"))
-  }
+                   maxDocId: Long = 1000L): DataFrame =
+    setJaccardPairs(docs(spark, dir, maxDocId), words(col("text")), thresholdPct, maxDf)
 
   /** Character n-gram (shingle) Jaccard near-dup — the boundary-robust
     * variant of [[jaccardPairs]]: token-set jaccard misses edits that move
-    * word boundaries; character shingles do not. Same inverted-index pair
-    * join over the distinct shingle sets (candidates only where a shingle
-    * is shared, hot shingles df-capped), so the same Σdf² scaling law.
+    * word boundaries; character shingles do not. Same pair join over the
+    * distinct shingle sets, so the same Σdf² scaling law.
     * Emits (doc_a, doc_b, inter, size_a, size_b) like jaccardPairs. */
   def ngramJaccardPairs(spark: SparkSession, dir: String, n: Int = 3,
                         thresholdPct: Int = 80, maxDf: Int = 1000,
                         maxDocId: Long = 1000L): DataFrame = {
-    val d = docs(spark, dir, maxDocId)
-    // all length-n substrings, as a codegen transform over positions —
-    // one row per position after the explode, distinct per doc (guard:
-    // sequence(1, 0) would generate DESCENDING, so short texts get array())
-    val ts0 = d.select(col("doc_id"),
-        explode(transform(
-          when(length(col("text")) >= n, sequence(lit(1), length(col("text")) - (n - 1)))
-            .otherwise(array().cast("array<int>")),
-          i => col("text").substr(i, lit(n)))).as("gram"))
-      // pinned dedup exchange — same rationale as tokenSets
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"), col("gram"))
-      .distinct()
-    val hot = ts0.groupBy("gram").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select("gram")
-    // explicit-count repartition on the join key — same AQE-coalescing
-    // rationale as jaccardPairs (the gram join explodes to Σdf² pairs)
-    val ts = slotCache(ts0.join(broadcast(hot), Seq("gram"), "left_anti")
-      .repartition(spark.sparkContext.defaultParallelism, col("gram")))
-    val sizes = ts.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = ts.as("a").join(ts.as("b"),
-        col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "size_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "size_b"), "doc_b")
-      .filter(col("inter") * 100 >= (col("size_a") + col("size_b") - col("inter")) * thresholdPct)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("size_a"), col("size_b"))
-  }
-
-  /** LSH band buckets from a signature column: band b = xxhash64 of the
-    * b-th length-`rows` slice. ONE definition — minhashLsh and the
-    * streaming corpus/stream sides (graft.streaming.Streams) must produce
-    * bit-identical buckets or the band join silently finds nothing. */
-  def bandBuckets(sig: org.apache.spark.sql.Column, bands: Int, rows: Int)
-      : org.apache.spark.sql.Column =
-    array((0 until bands).map(b =>
-      xxhash64(slice(sig, b * rows + 1, rows).cast("string"))): _*)
-
-  /** MinHash signature: for seed i, sig_i = min over tokens of
-    * xxhash64(i, token). One row per doc with sig ARRAY<LONG>. */
-  def minhashSignatures(d: DataFrame, numHashes: Int): DataFrame = {
-    val ts = d.select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .filter(col("token") =!= "").distinct()
-    val aggs = (0 until numHashes).map(i => min(xxhash64(lit(i), col("token"))).as(s"h$i"))
-    ts.groupBy("doc_id")
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"), array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
+    // all length-n substrings, as a codegen transform over positions
+    // (guard: sequence(1, 0) would generate DESCENDING, so short texts get
+    // array())
+    val text = col("text")
+    val grams = transform(
+      when(length(text) >= n, sequence(lit(1), length(text) - (n - 1)))
+        .otherwise(array().cast("array<int>")),
+      i => text.substr(i, lit(n)))
+    setJaccardPairs(docs(spark, dir, maxDocId), grams, thresholdPct, maxDf)
   }
 
   /** MinHash+LSH near-dup candidates, exact-Jaccard verified.
     * bands × rowsPerBand = numHashes; candidate ⇔ some band identical.
     *
-    * Signatures are PER-ROW array expressions (array_min over transform —
-    * the identical formula [[graft.streaming.Streams.nearDupAgainstCorpus]]
-    * computes statelessly; min over a distinct token ARRAY equals the
-    * round-5 min over the exploded distinct token STREAM), and the exact
-    * verify is an array_intersect over the same cached per-doc arrays —
-    * together that drops the tokenize-explode-distinct exchange, the
-    * 16-agg signature exchange, and the two explode-join-agg verify
-    * exchanges of the round-5 shape. Only the band self-join and the
-    * candidate joins shuffle. */
+    * Signatures are per-row array expressions ([[lshBuckets]], the same
+    * formula [[graft.streaming.Streams.nearDupAgainstCorpus]] computes
+    * statelessly), and the exact verify is an array_intersect over the same
+    * per-doc token arrays, so only the band self-join and the candidate
+    * joins shuffle. */
   def minhashLsh(spark: SparkSession, dir: String, numHashes: Int = 16,
                  bands: Int = 4, thresholdPct: Int = 50,
                  maxDocId: Long = 1000L): DataFrame = {
-    val d = docs(spark, dir, maxDocId)
-    val toks = array_distinct(filter(split(col("text"), " "), t => t =!= ""))
-    // slot-cached: consumed by the banding pass and twice by the verify join
-    val docsArr = slotCache(d.select(col("doc_id"), toks.as("toks")))
-    val sig = array((0 until numHashes).map(i =>
-      array_min(transform(col("toks"), t => xxhash64(lit(i), t)))): _*)
-    val rows = numHashes / bands
+    val parts = spark.sparkContext.defaultParallelism
+    val docsArr = docs(spark, dir, maxDocId)
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
     val banded = docsArr
-      // token-less docs had no rows in the round-5 exploded stream and so
-      // never banded; without this filter their all-null signatures would
-      // collide with each other and fabricate (0,0,0) pairs
-      .filter(size(col("toks")) > 0)
-      .select(col("doc_id"), posexplode(bandBuckets(sig, bands, rows)))
+      .select(col("doc_id"), posexplode(lshBuckets(col("toks"), numHashes, bands)))
       .toDF("doc_id", "band", "bucket")
       // explicit-count repartition on the join key — the band self-join
       // explodes per bucket; AQE would coalesce the tiny input to one
-      // partition and serialize the explosion (see jaccardPairs)
-      .repartition(spark.sparkContext.defaultParallelism, col("band"), col("bucket"))
+      // partition and serialize the explosion (see setJaccardPairs)
+      .repartition(parts, col("band"), col("bucket"))
     val cands = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     // exact verification of candidates only: |A ∩ B| via array_intersect
-    // over the cached distinct-token arrays (token arrays ride the two
-    // candidate joins; candidates are the sparse LSH survivors). The
-    // explicit-count repartition keeps the per-pair intersect work wide —
-    // AQE coalesced the small candidate bytes to ~3 tasks and serialized
-    // the verify
+    // (token arrays ride the two candidate joins; candidates are the sparse
+    // LSH survivors). The explicit-count repartition keeps the per-pair
+    // intersect work wide — AQE coalesced the small candidate bytes to ~3
+    // tasks and serialized the verify
     cands
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_a"))
-      .join(docsArr.select(col("doc_id").as("doc_a"), col("toks").as("a_toks")), "doc_a")
-      .join(docsArr.select(col("doc_id").as("doc_b"), col("toks").as("b_toks")), "doc_b")
+      .repartition(parts, col("doc_a"))
+      .join(docsArr.toDF("doc_a", "a_toks"), "doc_a")
+      .join(docsArr.toDF("doc_b", "b_toks"), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("a_toks"), col("b_toks"))).cast("long").as("inter"),
         size(col("a_toks")).cast("long").as("size_a"),
         size(col("b_toks")).cast("long").as("size_b"))
-      .filter(col("inter") * 100 >= (col("size_a") + col("size_b") - col("inter")) * thresholdPct)
+      .filter(jaccardAtLeast(thresholdPct))
   }
 
   /** 64-bit SimHash over token xxhash64s: sign of the per-bit vote sum. */
   def simhash(d: DataFrame): DataFrame = {
-    val toks = d.select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .filter(col("token") =!= "")
+    val toks = d.select(col("doc_id"), explode(words(col("text"))).as("token"))
       .withColumn("h", xxhash64(col("token")))
     // per bit: votes = Σ ±1; bit set ⇔ votes > 0
     val bitCols = (0 until 64).map { b =>
