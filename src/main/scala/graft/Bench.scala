@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.hier.{BoundaryElem, BoundaryMeta, Hierarchy}
 import graft.synth.SynthWorld
 import graft.web.Flagship
 
@@ -26,16 +27,62 @@ object Bench {
     SynthWorld.Config(seed = 42L, gridP = 3, gridC = 3,
       streetsPerCity = 10, buildingsPerStreet = 8, pages = pages)
 
+  /** Writes the WARC container files of `cfg` once (a `_DONE` sentinel
+    * marks a finished corpus) and returns their directory; the key carries
+    * the FULL config, since a pages-only key would reuse stale WARC files
+    * after a benchCfg change. */
+  def warcCorpus(spark: SparkSession, cfg: SynthWorld.Config): String = {
+    val cfgKey = s"${cfg.seed}-${cfg.gridP}-${cfg.gridC}-" +
+      s"${cfg.streetsPerCity}-${cfg.buildingsPerStreet}-${cfg.pages}"
+    val warcDir = s"${sys.props("java.io.tmpdir")}/graft-warc-bench-$cfgKey"
+    // the shards are written from EXECUTORS into java.io.tmpdir while
+    // the _DONE sentinel and the read happen driver-side — only
+    // coherent when driver and executors share a filesystem, i.e.
+    // local mode; on a real cluster this setup would silently produce
+    // partial input, so fail loudly instead
+    require(spark.sparkContext.isLocal,
+      "warc_ingest bench setup writes executor-local tmpdir shards; local mode only")
+    if (!new java.io.File(s"$warcDir/_DONE").exists()) {
+      new java.io.File(warcDir).mkdirs()
+      // container files are written FROM EXECUTORS (one shard per
+      // partition) — the round-3 shape collected all pages incl. full
+      // HTML bodies to the driver, a memory spike linear in page count
+      SynthWorld.pages(spark, cfg).repartition(32)
+        .foreachPartition { (it: Iterator[SynthWorld.Page]) =>
+          val recs = it.map(p => (p.url, p.warc_ts, p.html)).toSeq
+          if (recs.nonEmpty) {
+            val pid = org.apache.spark.TaskContext.getPartitionId()
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(warcDir, f"crawl-$pid%02d.warc"),
+              graft.sources.WarcSource.writeWarc(recs))
+          }
+          ()
+        }
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(warcDir, "_DONE"), "ok")
+    }
+    warcDir
+  }
+
+  /** The planet-shard hierarchy input: two disjoint 4×4 root subtrees
+    * (the second shifted by 10^12 ids), their metadata, and the union of
+    * their elements spread over 2 × defaultParallelism partitions, cached
+    * and materialized. */
+  def twoShardInput(spark: SparkSession): (Seq[BoundaryMeta], Dataset[BoundaryElem]) = {
+    val shCfg = SynthWorld.Config(seed = 42L, gridP = 4, gridC = 4,
+      streetsPerCity = 10, buildingsPerStreet = 8)
+    val (b1, e1) = SynthWorld.boundaryExtracts(spark, shCfg)
+    val (b2, e2) = SynthWorld.shiftWorld(spark, b1, e1,
+      off = 1000000000000L, suffix = " B")
+    val cached2 = e1.union(e2)
+      .repartition(spark.sparkContext.defaultParallelism * 2).cache()
+    cached2.count()
+    (Hierarchy.metadata(b1 ++ b2), cached2)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.local(cpus)
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -93,15 +140,7 @@ object Bench {
     // one job, not one job per region)
     locally {
       spark.catalog.clearCache()
-      val shCfg = SynthWorld.Config(seed = 42L, gridP = 4, gridC = 4,
-        streetsPerCity = 10, buildingsPerStreet = 8)
-      val (b1, e1) = SynthWorld.boundaryExtracts(spark, shCfg)
-      val (b2, e2) = SynthWorld.shiftWorld(spark, b1, e1,
-        off = 1000000000000L, suffix = " B")
-      val metas2 = graft.hier.Hierarchy.metadata(b1 ++ b2)
-      val cached2 = e1.union(e2)
-        .repartition(spark.sparkContext.defaultParallelism * 2).cache()
-      cached2.count()
+      val (metas2, cached2) = twoShardInput(spark)
       var n2 = 0L
       val t2 = time {
         val st = graft.hier.PlacePipeline.stats(
@@ -157,37 +196,9 @@ object Bench {
       val tAttempt0 = System.nanoTime()
       try {
         // SETUP (error-isolated but NOT timed): write the WARC container
-        // files once; the dir key carries the FULL config — a pages-only
-        // key would reuse stale WARC files after a benchCfg change
+        // files once
         val iCfg = benchCfg(200000L)
-        val cfgKey = s"${iCfg.seed}-${iCfg.gridP}-${iCfg.gridC}-" +
-          s"${iCfg.streetsPerCity}-${iCfg.buildingsPerStreet}-${iCfg.pages}"
-        val warcDir = s"${sys.props("java.io.tmpdir")}/graft-warc-bench-$cfgKey"
-        // the shards are written from EXECUTORS into java.io.tmpdir while
-        // the _DONE sentinel and the read happen driver-side — only
-        // coherent when driver and executors share a filesystem, i.e.
-        // local mode; on a real cluster this setup would silently produce
-        // partial input, so fail loudly instead
-        require(spark.sparkContext.isLocal,
-          "warc_ingest bench setup writes executor-local tmpdir shards; local mode only")
-        if (!new java.io.File(s"$warcDir/_DONE").exists()) {
-          new java.io.File(warcDir).mkdirs()
-          // container files are written FROM EXECUTORS (one shard per
-          // partition) — the round-3 shape collected all pages incl. full
-          // HTML bodies to the driver, a memory spike linear in page count
-          SynthWorld.pages(spark, iCfg).repartition(32)
-            .foreachPartition { (it: Iterator[SynthWorld.Page]) =>
-              val recs = it.map(p => (p.url, p.warc_ts, p.html)).toSeq
-              if (recs.nonEmpty) {
-                val pid = org.apache.spark.TaskContext.getPartitionId()
-                java.nio.file.Files.write(
-                  java.nio.file.Paths.get(warcDir, f"crawl-$pid%02d.warc"),
-                  graft.sources.WarcSource.writeWarc(recs))
-              }
-              ()
-            }
-          java.nio.file.Files.writeString(java.nio.file.Paths.get(warcDir, "_DONE"), "ok")
-        }
+        val warcDir = warcCorpus(spark, iCfg)
         val outDir = java.nio.file.Files.createTempDirectory("graft-ingest-bench").toString
         // TIMED region: the whole ingest (read → extract → geocode → commit)
         tIngest = time {

@@ -1,39 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Inspect.JobTimer
 
 /** Extra isolated benchmarks (guide §1.4 posture) — NOT part of the driver
   * bench contract; cited in OPTIMIZATION_r06.md. Usage:
-  * `runMain graft.BenchExtra <section…>` with sections from:
-  * ivf, hier2shard, warc, curate. Defaults to all. */
+  * `runMain graft.BenchExtra <section…>` on `local[SPARK_GRAFT_CPUS]`
+  * (default 32), with sections from:
+  *  - `hier2shard`: Bench's two-shard hierarchy build, 3 runs;
+  *  - `warc`: the 200k-page WARC ingest, 2 runs, jobs/stages of run 2;
+  *  - `curate`: the 200k-page curation, 2 runs, jobs/stages of run 2;
+  *  - `ivf`: StressBench's IVF recall and candidate-pair law;
+  *  - `dedupstress`: the q25/q26 10x legs alone, 3 rounds each;
+  *  - `ivfprof`: one 50k-vector `ivfTopK` with its jobs/stages.
+  * With no arguments it runs ivf, hier2shard, warc and curate;
+  * `dedupstress` and `ivfprof` run only when named. */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sections = if (args.nonEmpty) args.toSet else Set("ivf", "hier2shard", "warc", "curate")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     def time(l: String)(f: => Any): Unit = {
       val t0 = System.nanoTime(); val r = f
       println(f"[extra] $l: ${(System.nanoTime() - t0) / 1e9}%.2f s ($r)")
     }
 
     if (sections("hier2shard")) {
-      import graft.hier.{Hierarchy, PlacePipeline}
-      import graft.synth.SynthWorld
-      val shCfg = SynthWorld.Config(seed = 42L, gridP = 4, gridC = 4,
-        streetsPerCity = 10, buildingsPerStreet = 8)
-      val (b1, e1) = SynthWorld.boundaryExtracts(spark, shCfg)
-      val (b2, e2) = SynthWorld.shiftWorld(spark, b1, e1,
-        off = 1000000000000L, suffix = " B")
-      val metas2 = Hierarchy.metadata(b1 ++ b2)
-      val cached2 = e1.union(e2)
-        .repartition(spark.sparkContext.defaultParallelism * 2).cache()
-      cached2.count()
+      import graft.hier.PlacePipeline
+      val (metas2, cached2) = Bench.twoShardInput(spark)
       for (i <- 1 to 3) {
         spark.catalog.clearCache()
         cached2.cache().count()
@@ -46,7 +38,7 @@ object BenchExtra {
     }
 
     if (sections("warc") || sections("curate")) {
-      val timer = new graft.tools.HierProfile.JobTimer
+      val timer = new JobTimer
       spark.sparkContext.addSparkListener(timer)
       val iCfg = Bench.benchCfg(200000L)
       val dir = graft.web.Flagship.materializePages(spark, iCfg)
@@ -66,24 +58,7 @@ object BenchExtra {
         }
       }
       if (sections("warc")) {
-        val cfgKey = s"${iCfg.seed}-${iCfg.gridP}-${iCfg.gridC}-" +
-          s"${iCfg.streetsPerCity}-${iCfg.buildingsPerStreet}-${iCfg.pages}"
-        val warcDir = s"${sys.props("java.io.tmpdir")}/graft-warc-bench-$cfgKey"
-        if (!new java.io.File(s"$warcDir/_DONE").exists()) {
-          new java.io.File(warcDir).mkdirs()
-          graft.synth.SynthWorld.pages(spark, iCfg).repartition(32)
-            .foreachPartition { (it: Iterator[graft.synth.SynthWorld.Page]) =>
-              val recs = it.map(p => (p.url, p.warc_ts, p.html)).toSeq
-              if (recs.nonEmpty) {
-                val pid = org.apache.spark.TaskContext.getPartitionId()
-                java.nio.file.Files.write(
-                  java.nio.file.Paths.get(warcDir, f"crawl-$pid%02d.warc"),
-                  graft.sources.WarcSource.writeWarc(recs))
-              }
-              ()
-            }
-          java.nio.file.Files.writeString(java.nio.file.Paths.get(warcDir, "_DONE"), "ok")
-        }
+        val warcDir = Bench.warcCorpus(spark, iCfg)
         for (i <- 1 to 2) {
           val outDir = java.nio.file.Files.createTempDirectory("graft-ingest-extra").toString
           timer.reset()
@@ -111,7 +86,7 @@ object BenchExtra {
         d
       }
       docsDir(200000L)
-      val timer = new graft.tools.HierProfile.JobTimer
+      val timer = new JobTimer
       spark.sparkContext.addSparkListener(timer)
       for (i <- 1 to 3) {
         timer.reset()
@@ -133,7 +108,7 @@ object BenchExtra {
     }
 
     if (sections("ivfprof")) {
-      val timer = new graft.tools.HierProfile.JobTimer
+      val timer = new JobTimer
       spark.sparkContext.addSparkListener(timer)
       val dir = s"${sys.props("java.io.tmpdir")}/graft-stress-emb-50000"
       if (!new java.io.File(s"$dir/embeddings.parquet/_SUCCESS").exists())

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.bigraph.Assembly
 import graft.hier.PlacePipeline
@@ -33,14 +32,7 @@ object BotwCli {
     def flagArg(f: String): Option[String] =
       rest.zipWithIndex.collectFirst { case (`f`, i) if i + 1 < rest.length => rest(i + 1) }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("botw")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

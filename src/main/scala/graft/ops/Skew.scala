@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   *    final agg on key. A hot cell's rows spread over `salts` reducers in
   *    phase one, so no single task owns a hot key's whole volume. Results
   *    are exactly equal to the direct aggregation (oracle-checked, q33).
-  *  - [[saltedRepartition]]: spread rows of hot keys across partitions for
-  *    downstream joins (the broadcast side replicates per salt).
+  *  - [[saltedJoin]]: skew-safe equi-join — the probe side salts, the
+  *    modest build side replicates once per salt (oracle-checked, q39).
   *
   * Complementary to AQE's runtime skew-join splitting (enabled by default);
   * salting is the plan-level guarantee when hot keys are known (city-center
@@ -33,11 +33,6 @@ object Skew {
       .agg(count(lit(1)).as("_n"), sum(valueCol).as("_s"))
       .groupBy(col("key"))
       .agg(sum(col("_n")).as("n"), sum(col("_s")).as("total"))
-
-  /** Repartition so a hot key's rows spread over `salts` partitions. */
-  def saltedRepartition(df: DataFrame, numPartitions: Int, key: Column,
-                        salts: Int, spreadOn: Column): DataFrame =
-    df.repartition(numPartitions, key, saltCol(salts, spreadOn))
 
   /** Skew-safe equi-join: the big probe side salts on `spreadOn`, the
     * modest build side replicates once per salt, and the join key becomes

@@ -18,8 +18,8 @@ object CollapseCellParentOfCellOf extends Rule[LogicalPlan] {
   }
 }
 
-/** Session extensions entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+/** Session extensions entry point: `.withExtensions(new GraftExtensions)`
+  * on a session builder, or
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. For an
   * already-running session use
   * `spark.experimental.extraOptimizations ++= Seq(CollapseCellParentOfCellOf)`. */

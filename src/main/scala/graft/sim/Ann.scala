@@ -14,22 +14,16 @@ import org.apache.spark.sql.functions._
   *    no driver materialization; inherently O(n²) work (that is what "exact
   *    against the whole corpus" means), but every stage is distributed and
   *    codegen'd, so it survives as long as the n² pair count does.
-  *  - [[lshTopK]]: random-hyperplane LSH as the scale path — 64 sign bits in
-  *    4 bands of 16 (bucket collision ≈ 1/65536 per band for unrelated
-  *    vectors, so candidate pairs stay near-linear), candidates carried as
-  *    ID PAIRS ONLY through the shuffle, embeddings joined back for the
-  *    exact cosine re-rank.
+  *  - [[ivfTopK]] / [[ivfSearch]]: spherical k-means IVF as the scale path —
+  *    centroid count and nprobe derive from the corpus size
+  *    ([[ivfParams]]), so candidate pairs stay sub-quadratic.
+  *  - [[cosineNearDup]]: unordered pairs above a cosine threshold, over the
+  *    exact all-pairs join or the IVF candidates.
   */
 object Ann {
 
   private def emb(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/embeddings.parquet")
-
-  /** Deterministic pseudo-random unit-ish hyperplane component. */
-  @inline private def planeComponent(plane: Int, dim: Int): Double = {
-    val h = graft.synth.SynthWorld.mix(plane.toLong * 1315423911L + dim)
-    if ((h & 1L) == 0L) 1.0 else -1.0 // Rademacher planes: exact, fast
-  }
 
   /** Exact cosine top-k for every vector against the whole corpus
     * (excluding self). Output (vec_id, rank, neighbor_id, cos_sim).
@@ -487,64 +481,5 @@ object Ann {
       (s, ci)
     }
     dots.sortBy(t => (-t._1, t._2)).take(p).map(_._2)
-  }
-
-  /** Random-hyperplane signatures: `planes` sign bits split into `bands`
-    * (default 64/4 = 16-bit band buckets — collision prob ~2^-16 per band
-    * for unrelated vectors, so the candidate set stays near-linear in n).
-    * Vectors sharing any band bucket become an ID-ONLY candidate pair
-    * (each unordered pair once); embeddings are joined back for the exact
-    * cosine re-rank. Shuffles carry ids + 8-byte buckets, never the
-    * 64-float payload. */
-  def lshTopK(spark: SparkSession, dir: String, k: Int = 3,
-              planes: Int = 64, bands: Int = 4): DataFrame = {
-    import spark.implicits._
-    // uncached for the same reason as ivfTopK: a per-invocation cache that
-    // nothing unpersists leaks executor storage in long-lived sessions
-    val rows = withNorm(emb(spark, dir).select(col("vec_id"), col("embedding")))
-    val perBand = planes / bands
-    val banded = rows.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        var p = 0
-        val sig = new Array[Boolean](planes)
-        while (p < planes) {
-          var s = 0.0
-          var d = 0
-          while (d < v.length) { s += planeComponent(p, d) * v(d); d += 1 }
-          sig(p) = s >= 0
-          p += 1
-        }
-        (0 until bands).iterator.map { b =>
-          var acc = 0L
-          var i = 0
-          while (i < perBand) { acc = (acc << 1) | (if (sig(b * perBand + i)) 1L else 0L); i += 1 }
-          (id, b, acc)
-        }
-      }.toDF("vec_id", "band", "bucket")
-
-    // each unordered candidate pair exactly once (ids only through the
-    // shuffle); distinct before the cosine so a pair colliding in several
-    // bands is re-ranked once
-    val candPairs = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-    val scored = candPairs
-      .join(rows.select(col("vec_id").as("id_a"), col("embedding").as("qv"),
-        col("norm").as("qn")), "id_a")
-      .join(rows.select(col("vec_id").as("id_b"), col("embedding").as("cv"),
-        col("norm").as("cn")), "id_b")
-      .withColumn("cos_sim", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-      .select(col("id_a"), col("id_b"), col("cos_sim"))
-    // mirror once so every vector ranks its neighbors
-    val directed = scored.select(col("id_a").as("vec_id"), col("id_b").as("neighbor_id"), col("cos_sim"))
-      .unionByName(scored.select(col("id_b").as("vec_id"), col("id_a").as("neighbor_id"), col("cos_sim")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    directed.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("vec_id", "rank", "neighbor_id", "cos_sim")
   }
 }

@@ -27,7 +27,8 @@ object Flagship {
   def geocodePages(spark: SparkSession, pages: DataFrame, cfg: SynthWorld.Config): DataFrame = {
     graft.functions.GeoFunctions.register(spark) // idempotent, per-session
     // geoparsePresent: ONE rlike in the Filter (pushed to the scan), no
-    // regexp_extract copies in any Filter condition (PLANS.md step (3))
+    // regexp_extract copies in any Filter condition (the Filter of the
+    // `Inspect plans` "flagship" dump; asserted by GeocodeSpec)
     val parsed = Geocode.geoparsePresent(pages)
     val bs = boundaries(cfg)
     val bld = SynthWorld.buildings(cfg).map(b => (b.id, b.lat, b.lon))

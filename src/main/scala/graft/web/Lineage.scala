@@ -167,30 +167,21 @@ object Lineage {
     * Lineage stats come from reading back the written files (validates what
     * is on disk); the input plan is computed once (cached).
     *
-    * @param repartitionByBucket false skips the pre-write exchange —
-    *        maximal write parallelism at the cost of tasks × buckets
-    *        output files (the layout [[compact]] exists to repair); the
-    *        default one-exchange layout writes ≤ splitsPerBucket file-sets
-    *        per bucket.
-    * @param splitsPerBucket bounded salt WITHIN each bucket for the
-    *        default layout: a hot bucket (skewed web data) would otherwise
-    *        hash to ONE shuffle partition and serialize its whole write
-    *        into one straggler task. splits > 1 spreads each bucket over
-    *        that many tasks — files per bucket stay ≤ splits (bounded, not
-    *        the unbounded tasks × buckets of the off switch) and write
-    *        parallelism becomes splits × buckets. 0 = AUTO: derive from the
-    *        pending-bucket count so total write parallelism reaches the
-    *        cluster's cores (ceil(cores / pending buckets)) — the
-    *        spatially-bucketed callers (cell_parent buckets concentrate a
-    *        whole region into few buckets) stop serializing their write,
-    *        while callers with ≥ cores buckets keep one file-set each. */
+    * @param splitsPerBucket bounded salt WITHIN each bucket: a hot bucket
+    *        (skewed web data) would otherwise hash to ONE shuffle partition
+    *        and serialize its whole write into one straggler task. splits > 1
+    *        spreads each bucket over that many tasks — files per bucket stay
+    *        ≤ splits (bounded, not the unbounded tasks × buckets of a write
+    *        without the exchange) and write parallelism becomes
+    *        splits × buckets. 0 = AUTO: derive from the pending-bucket
+    *        count so total write parallelism reaches the cluster's cores
+    *        (ceil(cores / pending buckets)) — the spatially-bucketed callers
+    *        (cell_parent buckets concentrate a whole region into few
+    *        buckets) stop serializing their write, while callers with
+    *        ≥ cores buckets keep one file-set each. */
   def run(spark: SparkSession, df: DataFrame, outDir: String,
-          snapshotId: String, repartitionByBucket: Boolean = true,
-          splitsPerBucket: Int = 1): RunResult = {
+          snapshotId: String, splitsPerBucket: Int = 1): RunResult = {
     require(splitsPerBucket >= 0, "splitsPerBucket must be >= 1, or 0 = auto")
-    require(repartitionByBucket || splitsPerBucket <= 1,
-      "splitsPerBucket is a salt for the repartition-by-bucket layout; " +
-        "with repartitionByBucket = false it would be silently ignored")
     val done = completed(outDir)
     val work = df.cache()
     val allBuckets = work.select("bucket").distinct().collect().map(_.getLong(0)).sorted
@@ -212,8 +203,7 @@ object Lineage {
           if (splitsPerBucket > 0) splitsPerBucket
           else math.max(1, (spark.sparkContext.defaultParallelism +
             pending.length - 1) / pending.length) // auto: cores / buckets
-        if (!repartitionByBucket) filtered
-        else if (splits == 1) filtered.repartition(col("bucket"))
+        if (splits == 1) filtered.repartition(col("bucket"))
         else filtered.repartition(col("bucket"),
           pmod(xxhash64(col("url")), lit(splits.toLong)))
       }.write.mode("overwrite")

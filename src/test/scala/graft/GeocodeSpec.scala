@@ -292,10 +292,13 @@ class GeocodeSpec extends AnyFunSuite {
 
   test("compaction rewrites fragmented buckets to one file, manifests stay valid") {
     val outDir = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    // fragment deliberately: skip the bucket repartition so 48 write tasks
-    // each emit into every bucket dir — the layout compact() repairs
-    val df = Flagship.geocode(spark, cfg).repartition(48).cache()
-    Lineage.run(spark, df, outDir, "snap-1", repartitionByBucket = false)
+    // fragment deliberately: salt each bucket over 3 write tasks, with AQE
+    // coalescing off so the salt partitions stay apart (the splits spec's
+    // setup) — the multi-file layout compact() repairs
+    val df = Flagship.geocode(spark, cfg).repartition(16).cache()
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try Lineage.run(spark, df, outDir, "snap-1", splitsPerBucket = 3)
+    finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     def filesOf(b: Long): Long = {
       val d = java.nio.file.Paths.get(outDir, "data", s"bucket=$b")
       java.nio.file.Files.list(d).toArray.count(_.toString.endsWith(".parquet"))
@@ -359,11 +362,6 @@ class GeocodeSpec extends AnyFunSuite {
     assert(buckets.exists(filesOf(_) > 1),
       "the hot bucket must spread over more than one write task")
     assert(Lineage.audit(spark, outDir).isEmpty)
-    // incoherent combination fails loudly instead of silently dropping the salt
-    intercept[IllegalArgumentException] {
-      Lineage.run(spark, df, outDir, "snap-x",
-        repartitionByBucket = false, splitsPerBucket = 2)
-    }
     df.unpersist()
   }
 

@@ -216,28 +216,6 @@ class NearDupAnnSpec extends AnyFunSuite {
     assert(e.getMessage.contains("ivfTopK"))
   }
 
-  test("hyperplane LSH (64 planes / 4 bands) recalls planted high-similarity pairs") {
-    // LSH banding is a THRESHOLD structure: 16-bit buckets recall cos≈0.999
-    // pairs w.p. >0.999 while unrelated vectors collide w.p. ~2^-16/band
-    val dir = java.nio.file.Files.createTempDirectory("graft-lshann").toString
-    val base = (0L until 200L).map { i =>
-      (i, Array.tabulate(64)(d =>
-        ((graft.synth.SynthWorld.mix(i * 131 + d) % 1000L) / 1000.0f)), 0)
-    }
-    val near = base.take(3).map { case (i, v, _) =>
-      val w = v.clone(); w(0) = w(0) + 0.001f // cos ≈ 0.9999
-      (i + 1000L, w, 1)
-    }
-    (base ++ near).toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val top1 = Ann.lshTopK(spark, dir, k = 1).collect()
-      .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    for (i <- 0L until 3L) {
-      assert(top1.get(i + 1000L).contains(i), s"planted twin of ${i + 1000} missed")
-      assert(top1.get(i).contains(i + 1000L), s"planted twin of $i missed")
-    }
-  }
-
   test("distributed exactTopK matches the driver-broadcast brute oracle") {
     val brute = Ann.bruteTopK(spark, sf, k = 3)
       .select("vec_id", "rank", "neighbor_id").collect()
