@@ -260,11 +260,6 @@ object CellIndex {
     out.toArray
   }
 
-  /** Cover of just the boundary ring(s) of a polygon — cells its border
-    * passes through (used for crossing detection, SURVEY.md §2.3 J8). */
-  def boundaryCover(geom: Geometry, maxLevel: Int): Array[Long] =
-    cover(geom.getBoundary, maxLevel)
-
   private final val EarthRadiusM = 6371008.8
 
   /** Great-circle distance in meters. */
@@ -275,7 +270,4 @@ object CellIndex {
       math.cos(p1) * math.cos(p2) * math.sin(dl / 2) * math.sin(dl / 2)
     2 * EarthRadiusM * math.asin(math.min(1.0, math.sqrt(a)))
   }
-
-  /** Stable token form, e.g. "L16:123456" — for debugging / goldens. */
-  def show(cell: Long): String = s"L${level(cell)}:${zBits(cell)}"
 }

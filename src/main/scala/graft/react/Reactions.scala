@@ -235,8 +235,45 @@ object Reactions {
   /** Canonical first occurrence of a reparenting match set (§7.5: "first" =
     * minimum (agent, target), replacing the solver's unspecified order). */
   private def applyFirst(s: BigraphState, matches: DataFrame): Option[BigraphState] =
-    matches.orderBy(col("agent"), col("target")).limit(1).collect()
-      .headOption.map(r => reparent(s, r.getLong(0), r.getLong(1)))
+    stepTruncated(s, matches, 1)._1.headOption
+
+  /** The one occurrence probe behind step, sim, bfs and rewrite: the rules of
+    * the first (highest-priority) class with any occurrence at `s`, in class
+    * order, each with the first min(n, cap + 1) of its n occurrences in
+    * canonical (agent, target) order — so `length > cap` flags truncation,
+    * and an empty result is deadlock. ONE Spark job with no shuffle: the
+    * matchers, tagged (cls, rule), form one UNION ALL; each task keeps its
+    * first cap + 1 rows per rule, and the driver keeps the first cap + 1 of
+    * their union per rule — exact, as a rule's first cap + 1 rows are among
+    * their own tasks' first cap + 1. Driver bound: at most
+    * tasks × rules × (cap + 1) rows. */
+  private def occurrences(s: BigraphState, classes: Seq[Seq[(String, BigraphState => DataFrame)]],
+                          cap: Int): Seq[(String, Vector[(Long, Long)])] = {
+    require(cap >= 1, s"maxOccurrences / maxOccurrencesPerRule must be >= 1, got $cap")
+    // MaxValue - 1 keeps the + 1 truncation probe from overflowing
+    val k = math.min(cap, Int.MaxValue - 1) + 1
+    val tagged = for ((cls, ci) <- classes.zipWithIndex; ((_, matcher), ri) <- cls.zipWithIndex)
+      yield matcher(s).select(lit(ci).as("cls"), lit(ri).as("rule"), col("agent"), col("target"))
+    val byRule = if (tagged.isEmpty) Map.empty[(Int, Int), Vector[(Long, Long)]] else {
+      val sp = s.spark
+      import sp.implicits._
+      tagged.reduce(_ union _).as[(Int, Int, Long, Long)].mapPartitions { rows =>
+        // per rule, a max-heap holding the k smallest (agent, target) so far
+        val firsts = scala.collection.mutable.HashMap
+          .empty[(Int, Int), scala.collection.mutable.PriorityQueue[(Long, Long)]]
+        for ((c, r, a, t) <- rows) {
+          val h = firsts.getOrElseUpdate((c, r), scala.collection.mutable.PriorityQueue.empty)
+          h += ((a, t))
+          if (h.size > k) h.dequeue()
+        }
+        firsts.iterator.flatMap { case ((c, r), h) => h.iterator.map { case (a, t) => (c, r, a, t) } }
+      }.collect().groupBy(o => (o._1, o._2))
+        .map { case (rule, os) => rule -> os.map(o => (o._3, o._4)).sorted.take(k).toVector }
+    }
+    classes.iterator.zipWithIndex.map { case (cls, ci) =>
+      cls.zipWithIndex.map { case ((name, _), ri) => name -> byRule.getOrElse((ci, ri), Vector.empty) }
+    }.find(_.exists(_._2.nonEmpty)).getOrElse(Nil)
+  }
 
   /** BRS `step` (builder.mli:124-133): enumerate occurrences of a
     * reparenting rule and return one successor state per occurrence —
@@ -244,9 +281,9 @@ object Reactions {
     * only ever calls apply/fix). `matches` is one of the *Matches Datasets.
     *
     * BOUNDED: the reference materializes every SAT occurrence in memory;
-    * here the canonical-order LIMIT is pushed into the query, so a large
-    * state cannot flood the driver (`maxOccurrences` occurrences collected,
-    * ids only). Successors are built lazily (LazyList) — a caller that
+    * here the [[occurrences]] probe keeps only the canonically-first
+    * `maxOccurrences` + 1 per task, so a large state cannot flood the driver
+    * (ids only). Successors are built lazily (LazyList) — a caller that
     * consumes only the first few never constructs the rest. When the limit
     * binds, [[stepTruncated]] reports it (mirroring
     * TransitionGraph.truncated); this overload logs loudly instead of
@@ -263,25 +300,22 @@ object Reactions {
 
   /** [[step]] with an explicit truncation indicator: (successors, true when
     * more than `maxOccurrences` occurrences existed — the reference's MAX
-    * posture, builder.mli:139). Probes limit+1 rows so the signal costs no
-    * extra job. */
+    * posture, builder.mli:139). The probe's one extra row per rule is the
+    * signal, so it costs no extra job; a `maxOccurrences` below 1 fails. */
   def stepTruncated(s: BigraphState, matches: DataFrame,
                     maxOccurrences: Int = 1024): (Seq[BigraphState], Boolean) = {
-    // clamp: limit(Int.MaxValue + 1) would overflow to a negative limit and
-    // fail the query — MaxValue-1 keeps the +1 truncation probe valid
-    val cap = math.min(maxOccurrences, Int.MaxValue - 1)
-    val rows =
-      matches.orderBy(col("agent"), col("target")).limit(cap + 1).collect()
-    (LazyList.from(rows.take(cap))
-      .map(r => reparent(s, r.getLong(0), r.getLong(1))),
-      rows.length > cap)
+    val occ = occurrences(s, Seq(Seq(("", (_: BigraphState) => matches))), maxOccurrences)
+      .flatMap(_._2)
+    (LazyList.from(occ.take(maxOccurrences)).map { case (a, t) => reparent(s, a, t) },
+      occ.length > maxOccurrences)
   }
 
   /** The i-th (0-based) occurrence in canonical (agent, target) order, as
     * ONE collected row — executor-side row_number over an unpartitioned
     * window (a single-partition sort of THIS state's occurrences only; the
     * chosen rule pays one extra scan instead of the driver paying O(i)
-    * rows). Shared by [[randomStep]] and [[simPrioritized]]'s seeded pick. */
+    * rows). [[randomStep]]'s pick, which keeps O(1) driver rows for any
+    * match-set size. */
   private def occurrenceAt(matches: DataFrame, i: Long): org.apache.spark.sql.Row = {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("agent"), col("target"))
@@ -420,14 +454,11 @@ object Reactions {
     while (frontier.nonEmpty) {
       val next = scala.collection.mutable.ListBuffer.empty[Int]
       for (si <- frontier) {
-        // the applicable class: first one where any rule has an occurrence
-        val expansions = priorities.iterator.map { cls =>
-          cls.flatMap { case (name, matcher) =>
-            val (succs, cut) = stepTruncated(states(si), matcher(states(si)), maxOccurrencesPerRule)
-            if (cut) cutExpansions += 1
-            succs.map(succ => (name, succ))
-          }
-        }.find(_.nonEmpty).getOrElse(Nil)
+        val expansions = occurrences(states(si), priorities, maxOccurrencesPerRule).flatMap {
+          case (name, occ) =>
+            if (occ.length > maxOccurrencesPerRule) cutExpansions += 1
+            occ.take(maxOccurrencesPerRule).map { case (a, t) => name -> reparent(states(si), a, t) }
+        }
         for ((name, succ) <- expansions) {
           val k = canon(succ)
           seen.get(k) match {
@@ -476,38 +507,16 @@ object Reactions {
     val trace = scala.collection.mutable.ArrayBuffer.empty[String]
     var dead = false
     while (t < steps && !dead) {
-      val sNow = s
-      // ONE-ROW seeded pick: occurrences are COUNTED per rule on executors
-      // (capped at maxOccurrencesPerRule — the same canonical-prefix pool
-      // the round-4 per-step collect drew from, so traces are bit-identical
-      // on any seed); the active class is the first with any occurrence.
-      // Counting is ONE grouped job per probed class (rule-tagged union +
-      // groupBy(rule).count) — the round-5 shape ran one count JOB per
-      // rule per class per step. Driver traffic per step: one scalar per
-      // live rule + the single chosen occurrence row.
-      val counted = priorities.iterator.map { cls =>
-        val ms = cls.map { case (_, matcher) => matcher(sNow) }
-        val countsByRule =
-          if (ms.isEmpty) Map.empty[Int, Long]
-          else ms.iterator.zipWithIndex
-            .map { case (m, ri) => m.select(lit(ri).as("rule")) }
-            .reduce(_ unionByName _)
-            .groupBy(col("rule")).agg(count(lit(1)).as("c"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        cls.iterator.zipWithIndex.flatMap { case ((name, _), ri) =>
-          countsByRule.get(ri).filter(_ > 0)
-            .map(c => (name, ms(ri), math.min(c, maxOccurrencesPerRule.toLong)))
-        }.toList
-      }.find(_.nonEmpty).getOrElse(Nil)
-      if (counted.isEmpty) dead = true
+      // the seeded pick is uniform over the active class's rules in class
+      // order, each with its first maxOccurrencesPerRule occurrences
+      val pool = occurrences(s, priorities, maxOccurrencesPerRule).flatMap { case (name, occ) =>
+        occ.take(maxOccurrencesPerRule).map(name -> _)
+      }
+      if (pool.isEmpty) dead = true
       else {
-        val total = counted.map(_._3).sum
-        var i = math.floorMod(graft.synth.SynthWorld.mix(seed ^ t.toLong), total)
-        var ri = 0
-        while (i >= counted(ri)._3) { i -= counted(ri)._3; ri += 1 }
-        val name = counted(ri)._1
-        val chosen = occurrenceAt(counted(ri)._2, i)
-        s = reparent(s, chosen.getLong(0), chosen.getLong(1))
+        val (name, (agent, target)) =
+          pool(math.floorMod(graft.synth.SynthWorld.mix(seed ^ t.toLong), pool.length.toLong).toInt)
+        s = reparent(s, agent, target)
         trace += name
         t += 1
       }
@@ -556,38 +565,15 @@ object Reactions {
     var n = 0
     val trace = scala.collection.mutable.ArrayBuffer.empty[String]
     var more = true
-    val names = priorities.map(_.map(_._1))
-    while (more && n < maxSteps) {
-      val sNow = s
-      // ONE probe job per step: every rule's matcher, tagged with its
-      // (class, rule) indices, in one union; the (cls, rule, agent,
-      // target) sort picks exactly the row the round-5 per-rule probe
-      // loop found — classIdx leads, so class preemption is preserved (a
-      // low-class rule never fires while any higher-class rule matches),
-      // then rule order in class, then the canonical §7.5 occurrence.
-      // The round-5 loop ran one limit(1) JOB per probed rule per step —
-      // R × N driver-synchronized jobs over a fixpoint run.
-      val taggedParts = priorities.iterator.zipWithIndex.flatMap { case (cls, ci) =>
-        cls.iterator.zipWithIndex.map { case ((_, matcher), ri) =>
-          matcher(sNow).select(col("agent"), col("target"))
-            .withColumn("cls", lit(ci)).withColumn("rule", lit(ri))
-        }
-      }.toList
-      val rows =
-        if (taggedParts.isEmpty) Array.empty[org.apache.spark.sql.Row]
-        else taggedParts.reduce(_ unionByName _)
-          .orderBy(col("cls"), col("rule"), col("agent"), col("target"))
-          .limit(1).collect()
-      (if (rows.isEmpty) None
-       else Some((names(rows(0).getInt(2))(rows(0).getInt(3)), rows))) match {
-        case Some((name, rows)) =>
-          s = reparent(sNow, rows(0).getLong(0), rows(0).getLong(1))
+    while (more && n < maxSteps)
+      occurrences(s, priorities, 1).collectFirst { case (name, occ) if occ.nonEmpty => name -> occ.head } match {
+        case Some((name, (agent, target))) =>
+          s = reparent(s, agent, target)
           trace += name
           n += 1
         case None =>
           more = false
       }
-    }
     (s, n, trace.toSeq)
   }
 }

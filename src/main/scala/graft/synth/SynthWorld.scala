@@ -38,7 +38,6 @@ object SynthWorld {
     x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
     x ^ (x >>> 31)
   }
-  def unif(h: Long): Double = (h >>> 11).toDouble / (1L << 53).toDouble
 
   case class AdminRect(id: Long, level: Int, name: String, parentId: Long,
                        x0: Double, y0: Double, x1: Double, y1: Double) {

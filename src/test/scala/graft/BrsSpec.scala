@@ -50,10 +50,10 @@ class BrsSpec extends AnyFunSuite {
   }
 
   test("bfs collects full state rows once per DISTINCT state, not per successor") {
-    // 4 distinct states but 8 generated successors: duplicate detection
-    // must run on the executor-side digest (one scalar row), with full-row
-    // collects only on first sight — at Berlin scale (277k places) the
-    // round-3 shape moved O(successors × places) rows through the driver
+    // 4 distinct states but 8 generated successors: duplicates are found on
+    // the driver by the exact canonical key (sorted agent rows and contact
+    // pairs), and only a state seen for the first time is admitted and
+    // counted as a full-state collect
     val before = Reactions.fullStateCollects.get()
     val tg = Reactions.bfs(world(), rules)
     val delta = Reactions.fullStateCollects.get() - before
@@ -75,6 +75,17 @@ class BrsSpec extends AnyFunSuite {
     assert(succs1.size == 1 && trunc1, "2 occurrences past a bound of 1 must flag truncation")
     val (succs2, trunc2) = Reactions.stepTruncated(atBoundary, m, maxOccurrences = 2)
     assert(succs2.size == 2 && !trunc2)
+  }
+
+  test("a non-positive occurrence cap fails loudly in sim, bfs and stepTruncated") {
+    val s = world()
+    val errs = Seq(
+      intercept[IllegalArgumentException](
+        Reactions.sim(s, rules, steps = 3, seed = 1L, maxOccurrencesPerRule = 0)),
+      intercept[IllegalArgumentException](Reactions.bfs(s, rules, maxOccurrencesPerRule = 0)),
+      intercept[IllegalArgumentException](
+        Reactions.stepTruncated(s, Reactions.leaveMatches(s, "Building"), maxOccurrences = 0)))
+    for (e <- errs) assert(e.getMessage.contains("maxOccurrences"), e.getMessage)
   }
 
   test("bfs respects maxStates and reports truncation (the reference's MAX)") {

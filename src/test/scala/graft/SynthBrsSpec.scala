@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.bigraph.Assembly
@@ -74,5 +76,43 @@ class SynthBrsSpec extends AnyFunSuite {
       (1, "leave_building", 3), (1, "leave_building", 4), (1, "enter_building", 0),
       (1, "enter_building", 5), (2, "leave_building", 3), (2, "enter_building", 0),
       (3, "enter_building", 2), (5, "leave_building", 1)))
+  }
+
+  /** The number of Spark jobs `body` starts. The listener bus delivers
+    * events in posting order, so they are exactly the job starts that
+    * arrive between those of two marker jobs run before and after `body`. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val starts = new LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        starts.put(String.valueOf(Option(js.properties).map(_.getProperty("spark.job.description")).orNull))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobsOf-begin")
+      body
+      marker("jobsOf-end")
+      val seen = Iterator.continually(starts.poll(60, TimeUnit.SECONDS))
+        .takeWhile(d => d != null && d != "jobsOf-end").toSeq
+      assert(seen.contains("jobsOf-begin"), s"marker jobs not delivered: $seen")
+      seen.dropWhile(_ != "jobsOf-begin").size - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job budget: one probe job per sim step, bfs state and rewrite step") {
+    val s = s0
+    var steps = 0
+    assert(jobsOf { steps = Reactions.sim(s, rules, steps = 4, seed = 7L)._2 } == 4 && steps == 4)
+    var states = 0
+    assert(jobsOf {
+      states = Reactions.bfs(s, rules, maxStates = 10, maxOccurrencesPerRule = 3).states.length
+    } == 10 && states == 10, "every admitted state is expanded once")
+    var applied = 0
+    assert(jobsOf { applied = Reactions.rewrite(s, rules, maxSteps = 3)._2 } == 3 && applied == 3)
   }
 }
