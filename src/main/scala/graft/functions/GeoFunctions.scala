@@ -163,22 +163,24 @@ object GeoFunctions {
     cellCol.between(lit(CellIndex.rangeMinAt(anc, factLevel)),
       lit(CellIndex.rangeMaxAt(anc, factLevel)))
 
-  /** Register the geo expressions for spark.sql / call_function. */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cell_of" -> (es => CellOf(es(0), es(1), es(2))),
+    "cell_parent" -> (es => CellParentAt(es(0), es(1))),
+    "haversine_m" -> (es => HaversineM(es)),
+    "vec_dot" -> (es => VecDot(es(0), es(1))),
+    "cell_centroid_lat" -> (es => CellCentroidLat(es(0))),
+    "cell_centroid_lon" -> (es => CellCentroidLon(es(0))),
+    "min_cell_extent_m" -> (es => MinCellExtentM(es(0), es(1))))
+
+  /** Register the geo expressions for spark.sql / call_function. Idempotent:
+    * only names absent from the session are registered, so a repeat call
+    * keeps the session's builders and replaces nothing. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cell_of",
-      es => CellOf(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("cell_parent",
-      es => CellParentAt(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("haversine_m",
-      es => HaversineM(es), "built-in")
-    reg.createOrReplaceTempFunction("vec_dot",
-      es => VecDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("cell_centroid_lat",
-      es => CellCentroidLat(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("cell_centroid_lon",
-      es => CellCentroidLon(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("min_cell_extent_m",
-      es => MinCellExtentM(es(0), es(1)), "built-in")
+    reg.synchronized {
+      for ((name, builder) <- builders
+           if !reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

@@ -119,24 +119,16 @@ object MultiModal {
     * exact = true is the guarded all-pairs path (loud row bound);
     * exact = false is the IVF candidate path — the corpus-scale shape
     * (candidates sub-quadratic; byte-identical media share an argmax
-    * centroid, so recall of true duplicates is ~certain). */
+    * centroid, so recall of true duplicates is ~certain). The pair
+    * machinery evaluates `feats` several times: a caller that reuses
+    * computed features (decode + extract) caches them first. */
   def mediaNearDup(feats: DataFrame, minCosine: Double = 0.999,
-                   exact: Boolean = true, maxRows: Long = 65536L): DataFrame = {
-    // the pair machinery evaluates its input several times; features come
-    // from a COMPUTED pipeline (decode + extract), so pin one copy — a
-    // single-slot displace cache (previous call's copy freed), the same
-    // posture as NearDup's token sets
-    val cached = feats
-      .select(col("media_id").as("vec_id"), col("feature").as("embedding")).cache()
-    val prev = lastFeatsCache.getAndSet(cached)
-    if (prev != null) prev.unpersist(false)
-    graft.sim.Ann.cosinePairsOf(feats.sparkSession, cached, exact, maxRows)
+                   exact: Boolean = true, maxRows: Long = 65536L): DataFrame =
+    graft.sim.Ann.cosinePairsOf(feats.sparkSession,
+        feats.select(col("media_id").as("vec_id"), col("feature").as("embedding")),
+        exact, maxRows)
       .filter(col("cos") >= minCosine)
       .select(col("id_a"), col("id_b"), col("cos"))
-  }
-
-  private val lastFeatsCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame]()
 
   /** Query-shaped entry: features + per-kind stats over synthetic media. */
   def featureStats(spark: SparkSession, n: Long): DataFrame = {

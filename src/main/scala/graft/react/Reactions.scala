@@ -77,12 +77,10 @@ final case class BigraphState(world: World, agents: Vector[Agent], contactPairs:
     java.util.Arrays.asList(agents.map(a => Row(a.id, "Agent", a.name, a.parent)): _*),
     BigraphState.placeSchema)
 
-  /** world ∪ delta: (id, ctrl, name, parent), parent -1 = region. */
-  private[react] def forest: DataFrame = world.places.unionByName(agentRows)
-
-  /** The whole place forest, marked cached on first read. A view for callers
-    * and exports — no matcher or reaction reads it. */
-  lazy val places: DataFrame = forest.cache()
+  /** The whole place forest, world ∪ delta: (id, ctrl, name, parent),
+    * parent -1 = region. A plain view for callers and exports, uncached —
+    * a caller that reads it repeatedly caches it and owns that cache. */
+  lazy val places: DataFrame = world.places.unionByName(agentRows)
 
   /** (agent_a, agent_b) contact links as a local relation. */
   lazy val contacts: DataFrame = {
@@ -186,7 +184,7 @@ object Reactions {
       .filter(col("id") =!= col("agent"))
     viaParentCtrl.fold(m) { pc =>
       if (ctrl == "Agent")
-        m.as("t").join(s.forest.as("p"), col("t.parent") === col("p.id") && col("p.ctrl") === lit(pc))
+        m.as("t").join(s.places.as("p"), col("t.parent") === col("p.id") && col("p.ctrl") === lit(pc))
           .select("t.*")
       else m.filter(col("parent_ctrl") === lit(pc))
     }.select(col("agent"), col("id").as("target"))
@@ -211,26 +209,26 @@ object Reactions {
     applyFirst(s, moveAcrossMatches(s))
 
   /** All occurrences of connect_to_nearby_agent (builder.ml:381-408) after
-    * the AppCond anti join: (agent_a, agent_b) pairs not yet linked. Both
-    * sides are delta rows, so the pairs are formed on the driver. */
+    * the AppCond: (agent_a, agent_b) pairs not yet linked. Both sides are
+    * delta rows, so the pairs are formed on the driver. */
   def connectMatches(s: BigraphState): DataFrame = {
-    val linked = s.contactPairs.toSet
-    val pairs = for (x <- s.agents; y <- s.agents
-                     if x.parent == y.parent && x.id < y.id && !linked((x.id, y.id)))
-      yield (x.id, y.id)
     val sp = s.spark
     import sp.implicits._
-    pairs.toDF("agent_a", "agent_b")
+    connectPairs(s).toDF("agent_a", "agent_b")
   }
 
-  /** B6 connect_to_nearby_agent (builder.ml:381-408): two Agents sharing a
-    * parent, not already linked (the AppCond as a left_anti join), get a
-    * contact link. */
-  def connectToNearbyAgent(s: BigraphState): Option[BigraphState] = {
-    val fresh = connectMatches(s)
-      .orderBy(col("agent_a"), col("agent_b")).limit(1).collect()
-    fresh.headOption.map(r => s.copy(contactPairs = s.contactPairs :+ ((r.getLong(0), r.getLong(1)))))
+  private def connectPairs(s: BigraphState): Vector[(Long, Long)] = {
+    val linked = s.contactPairs.toSet
+    for (x <- s.agents; y <- s.agents
+         if x.parent == y.parent && x.id < y.id && !linked((x.id, y.id)))
+      yield (x.id, y.id)
   }
+
+  /** B6 connect_to_nearby_agent (builder.ml:381-408): the canonical first
+    * pair of Agents sharing a parent and not yet linked gets a contact
+    * link — the minimum (agent_a, agent_b), taken on the driver: no job. */
+  def connectToNearbyAgent(s: BigraphState): Option[BigraphState] =
+    connectPairs(s).minOption.map(p => s.copy(contactPairs = s.contactPairs :+ p))
 
   /** Canonical first occurrence of a reparenting match set (§7.5: "first" =
     * minimum (agent, target), replacing the solver's unspecified order). */

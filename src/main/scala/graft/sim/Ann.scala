@@ -156,7 +156,9 @@ object Ann {
     * sample, corpus rows assign to their argmax centroid, and each query
     * probes its `nprobe` nearest centroids; the fused payload re-rank is
     * shared with ivfTopK. The query side is consumed ONCE (its probe
-    * flatMap) — only the corpus pays the slot-cached multi-evaluation.
+    * flatMap); the corpus is evaluated once per consumer (count guard,
+    * k-means sample, assignment), so a computed corpus should be cached by
+    * the caller.
     * Output (vec_id = query id, rank, neighbor_id = corpus id, cos_sim);
     * self-exclusion is OFF — the id spaces are unrelated tables. */
   def ivfSearch(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
@@ -301,16 +303,6 @@ object Ann {
       centroids: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]],
       nprobe: Int)
 
-  /** Single-slot displaced cache for the normed rows frame — it is
-    * consumed ~6× per IVF call (count guard, k-means sample, assignment,
-    * probes, both re-rank join sides), which uncached meant ~6 full
-    * re-evaluations of the upstream scan/pipeline per call. The previous
-    * call's slot is unpersist(false)-ed, so a still-lazy plan over it
-    * recomputes instead of failing — consume each IVF result before
-    * building the next. */
-  private val lastRowsCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-
   private def ivfPartsOf(spark: SparkSession, rows0: DataFrame, c: Int, nprobe: Int,
                          iters: Int, maxTrainSamples: Long,
                          payload: Boolean = false): IvfParts = {
@@ -319,9 +311,6 @@ object Ann {
       .withColumn("unit", transform(col("embedding"), x => x.cast("double") / col("norm")))
       .select(col("vec_id"), col("embedding"), col("norm"), col("unit"))
       .repartition(spark.sparkContext.defaultParallelism) // small scans land in 1 split
-      .cache()
-    val prevRows = lastRowsCache.getAndSet(rows)
-    if (prevRows != null) prevRows.unpersist(false)
 
     // spherical k-means trained DRIVER-LOCAL on a bounded hash-stratified
     // sample (the FAISS posture: training never scans the full corpus —
@@ -367,14 +356,9 @@ object Ann {
       it += 1
     }
 
-    // SINGLE-SLOT broadcast lifetime (same posture as Geocode.indexCache):
-    // a long-lived session calling ivfTopK repeatedly would otherwise
-    // accumulate one centroid broadcast per call. The previous broadcast is
-    // unpersist(false)-ed — NOT destroyed — so a still-lazy plan from an
-    // earlier call re-fetches it from the driver instead of failing.
+    // owned by the plans that capture it; Spark's ContextCleaner frees it
+    // once they are unreachable
     val bcFinal = spark.sparkContext.broadcast(centroids)
-    val prev = lastCentroids.getAndSet(bcFinal)
-    if (prev != null) prev.unpersist(false)
     val assign =
       if (payload)
         rows.select(col("vec_id"), col("unit"), col("embedding"), col("norm"))
@@ -397,10 +381,6 @@ object Ann {
         }.toDF("vec_id", "cluster")
     IvfParts(rows, assign, probes, bcFinal, nprobeEff)
   }
-
-  private val lastCentroids =
-    new java.util.concurrent.atomic.AtomicReference[
-      org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]]()
 
   /** Embedding-cosine near-dup: unordered pairs with round(cos, 4) ≥
     * thresholdPct/100 — the last member of the dedup family (exact,
@@ -429,8 +409,7 @@ object Ann {
     * INPUT CONTRACT: `rows0` is evaluated several times (count guard or
     * k-means sample, assignment, probes, both re-rank join sides) — it must
     * be DETERMINISTIC, and a computed pipeline (feature extraction, not a
-    * scan) should be cached upstream or it re-executes per evaluation
-    * (MultiModal.mediaNearDup does exactly that via its slot cache). */
+    * scan) re-executes per evaluation unless the caller caches it. */
   def cosinePairsOf(spark: SparkSession, rows0: DataFrame,
                     exact: Boolean, maxRows: Long = 65536L): DataFrame = {
     val pairs =

@@ -111,4 +111,25 @@ class GeoFunctionsSpec extends AnyFunSuite {
     assert(got.getLong(1) == CellIndex.parentAt(CellIndex.cellOf(51.5, -0.1, 12), 4))
     assert(math.abs(got.getDouble(2) - CellIndex.haversineM(0, 0, 0, 1)) < 1e-6)
   }
+
+  test("register is idempotent: a repeat call replaces no builder") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.sessionState.functionRegistry
+    val names = Seq("cell_of", "cell_parent", "haversine_m", "vec_dot",
+      "cell_centroid_lat", "cell_centroid_lon", "min_cell_extent_m")
+    // a non-capturing builder lambda is one JVM instance however often it
+    // is re-registered, so the registration's ExpressionInfo, built afresh
+    // by every replace, is what tells a replace apart
+    def registered = names.map { n =>
+      val id = FunctionIdentifier(n)
+      (reg.lookupFunctionBuilder(id).getOrElse(fail(s"$n is not registered")),
+        reg.lookupFunction(id).getOrElse(fail(s"$n has no info")))
+    }
+    val before = registered
+    GeoFunctions.register(spark)
+    for ((n, ((b0, i0), (b1, i1))) <- names.zip(before.zip(registered))) {
+      assert(b0 eq b1, s"a second register replaced the builder of $n")
+      assert(i0 eq i1, s"a second register re-registered $n")
+    }
+  }
 }

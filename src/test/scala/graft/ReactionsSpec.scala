@@ -94,6 +94,7 @@ class ReactionsSpec extends AnyFunSuite {
       .limit(1).collect()(0).getString(2)
     for (i <- 1 to 7) s = Reactions.addAgentToBuilding(s, b, s"fx$i")
     val s0 = s
+    s0.places.cache() // the caller owns this cache; places itself is uncached
     assert(s0.places.storageLevel.useMemory, "test setup: s0.places must be cached")
     val (after, steps) = Reactions.fix(s0, Reactions.connectToNearbyAgent)
     assert(steps == 21) // C(7,2) pairs, crosses the step-16 truncation

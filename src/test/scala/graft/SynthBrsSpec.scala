@@ -114,5 +114,10 @@ class SynthBrsSpec extends AnyFunSuite {
     } == 10 && states == 10, "every admitted state is expanded once")
     var applied = 0
     assert(jobsOf { applied = Reactions.rewrite(s, rules, maxSteps = 3)._2 } == 3 && applied == 3)
+    // a and b share a parent: connect_to_nearby_agent links them, then finds
+    // no pair; both picks happen on the driver
+    var linked = 0
+    assert(jobsOf { linked = Reactions.fix(s, Reactions.connectToNearbyAgent)._2 } == 0 &&
+      linked == 1, "connect_to_nearby_agent runs no Spark job")
   }
 }
