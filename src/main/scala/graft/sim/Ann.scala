@@ -130,12 +130,9 @@ object Ann {
     *
     * Spherical k-means over a deterministic sample trains `c` unit
     * centroids (tiny, broadcast); every vector is assigned to its argmax-dot
-    * centroid; a query probes its `nprobe` nearest centroids. The
-    * assignment/probe rows CARRY their (embedding, norm), so candidates are
-    * born co-located by cluster with payloads attached — the re-rank is the
-    * one O(n·nprobe·dim) exchange on cluster id plus an exchange-free
-    * per-(vector, cluster) top-k prune, never a per-candidate vector join
-    * (the id-pair near-dup path, [[cosinePairsOf]], still ships bare pairs).
+    * centroid; a query probes its `nprobe` nearest centroids. The one
+    * candidate join ([[candidates]]) scores each pair's exact cosine and
+    * [[rerank]] keeps the top k.
     *
     * c/nprobe default to 0 = AUTO: derived from the corpus size by
     * [[ivfParams]] (the FAISS posture — parameters come from the data, like
@@ -143,83 +140,90 @@ object Ann {
     * gets a sub-quadratic job, not a silent 50%-scan quadratic one). */
   def ivfTopK(spark: SparkSession, dir: String, k: Int = 3,
               c: Int = 0, nprobe: Int = 0, iters: Int = 5,
-              maxTrainSamples: Long = 100000L): DataFrame = {
-    val p = ivfPartsOf(spark, emb(spark, dir).select(col("vec_id"), col("embedding")),
-      c, nprobe, iters, maxTrainSamples, payload = true)
-    rerank(p.probes, p.assign, k, excludeSelf = true)
-  }
+              maxTrainSamples: Long = 100000L): DataFrame =
+    rerank(selfCandidates(emb(spark, dir), c, nprobe, iters, maxTrainSamples), k)
 
   /** IVF ANN SERVING shape: rank each row of `queries` (vec_id, embedding)
     * against an independent `corpus` (vec_id, embedding) — the
     * query-batch-vs-index search a retrieval pipeline runs (self-search
     * [[ivfTopK]] is the dedup/audit shape). Centroids train on the CORPUS
     * sample, corpus rows assign to their argmax centroid, and each query
-    * probes its `nprobe` nearest centroids; the fused payload re-rank is
-    * shared with ivfTopK. The query side is consumed ONCE (its probe
-    * flatMap); the corpus is evaluated once per consumer (count guard,
-    * k-means sample, assignment), so a computed corpus should be cached by
-    * the caller.
+    * probes its `nprobe` nearest centroids; the candidate join and re-rank
+    * are shared with ivfTopK. The query side is consumed ONCE (its probe);
+    * the corpus is evaluated once per consumer (count guard, k-means
+    * sample, assignment), so a computed corpus should be cached by the
+    * caller.
     * Output (vec_id = query id, rank, neighbor_id = corpus id, cos_sim);
     * self-exclusion is OFF — the id spaces are unrelated tables. */
   def ivfSearch(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
                 k: Int = 3, c: Int = 0, nprobe: Int = 0, iters: Int = 5,
                 maxTrainSamples: Long = 100000L): DataFrame = {
-    import spark.implicits._
-    val p = ivfPartsOf(spark, corpus.select(col("vec_id"), col("embedding")),
-      c, nprobe, iters, maxTrainSamples, payload = true)
-    val qRows = withNorm(queries.select(col("vec_id"), col("embedding")))
-      .withColumn("unit", transform(col("embedding"), x => x.cast("double") / col("norm")))
-    // hoisted locals: capturing `p` would serialize the whole IvfParts
-    // (DataFrame fields and all) into every task closure
-    val cents = p.centroids
-    val np = p.nprobe
-    val qProbes = qRows.select(col("vec_id"), col("unit"), col("embedding"), col("norm"))
-      .as[(Long, Seq[Double], Array[Float], Double)]
-      .flatMap { case (id, u, e, nm) =>
-        topClusters(u.toArray, cents.value, np).map(cl => (id, cl, e, nm))
-      }.toDF("vec_id", "cluster", "qv", "qn")
-    rerank(qProbes, p.assign, k, excludeSelf = false)
+    val rows = corpusRows(corpus)
+    val (assign, probe) = ivfIndex(rows, c, nprobe, iters, maxTrainSamples)
+    rerank(candidates(normed(queries).withColumn("cluster", probe),
+      rows.withColumn("cluster", assign), excludeSelf = false), k)
   }
 
-  /** FUSED re-rank shared by [[ivfTopK]]/[[ivfSearch]]: the assign/probe
-    * flatMaps EMIT the embedding + norm alongside the cluster key, so the
-    * candidate pairs are born co-located by cluster with their payloads
-    * already attached — the whole re-rank is ONE exchange of payload rows
-    * on cluster id. The round-4 shape shipped bare id pairs and joined the
-    * vectors back per pair; at harness sizes that compiled to two
-    * BROADCAST probes (50k embeddings ≈ 26 MB) and measures within noise
-    * of this shape (49 vs 51 s at 50k on the same host — the round-4
-    * verdict's 71× wall was environment inflation, see BENCH/q38_gap.md).
-    * The fused shape is kept because it has no broadcast cliff: past
-    * broadcastable corpus size the pairs shape degrades to shuffling the
-    * nprobe·n^1.5 candidate stream through two vector joins, while this
-    * path's exchanges stay O(n·nprobe·dim) at every n.
+  /** Candidate-pair count for the given corpus/params — the measurable
+    * scale contract (NearDupAnnSpec asserts it stays ≤ nprobe·n^1.5·slack
+    * and grows sub-quadratically across corpus sizes). Only the ids reach
+    * the count: Catalyst prunes the embeddings and the cosine. */
+  def ivfCandidatePairs(spark: SparkSession, dir: String, c: Int = 0, nprobe: Int = 0,
+                        iters: Int = 5, maxTrainSamples: Long = 100000L): Long =
+    selfCandidates(emb(spark, dir), c, nprobe, iters, maxTrainSamples).count()
+
+  /** (vec_id, embedding, norm, unit) over any (vec_id, embedding
+    * ARRAY<FLOAT>) frame; `unit` is the embedding over its norm. */
+  private def normed(df: DataFrame): DataFrame =
+    withNorm(df.select(col("vec_id"), col("embedding")))
+      .withColumn("unit", transform(col("embedding"), x => x.cast("double") / col("norm")))
+
+  private def corpusRows(df: DataFrame): DataFrame =
+    normed(df).repartition(df.sparkSession.sparkContext.defaultParallelism) // small scans land in 1 split
+
+  /** The one IVF candidate join: every (probe row, assigned row) pair on a
+    * shared `cluster`, with its exact cosine, as (vec_id, cand_id,
+    * cos_sim). A candidate lives in exactly one cluster and a probe's
+    * clusters are distinct, so each pair appears once per direction, and
+    * the two directions carry bit-identical cosines (vec_dot and the norm
+    * product commute). */
+  private def candidates(probes: DataFrame, assign: DataFrame,
+                         excludeSelf: Boolean): DataFrame = {
+    val joined = probes
+      .select(col("vec_id"), col("cluster"), col("embedding").as("qv"), col("norm").as("qn"))
+      .join(assign.select(col("vec_id").as("cand_id"), col("cluster"),
+        col("embedding").as("cv"), col("norm").as("cn")), "cluster")
+    (if (excludeSelf) joined.filter(col("vec_id") =!= col("cand_id")) else joined)
+      .select(col("vec_id"), col("cand_id"),
+        cosine(col("qv"), col("cv"), col("qn"), col("cn")).as("cos_sim"))
+  }
+
+  /** Every corpus row probes the index trained on the corpus itself. */
+  private def selfCandidates(rows0: DataFrame, c: Int, nprobe: Int, iters: Int,
+                             maxTrainSamples: Long): DataFrame = {
+    val rows = corpusRows(rows0)
+    val (assign, probe) = ivfIndex(rows, c, nprobe, iters, maxTrainSamples)
+    candidates(rows.withColumn("cluster", probe), rows.withColumn("cluster", assign),
+      excludeSelf = true)
+  }
+
+  /** Re-rank shared by [[ivfTopK]]/[[ivfSearch]]: top k per vec_id of the
+    * candidate join, ordered by (cos desc, cand_id asc). Spark picks a
+    * broadcast or shuffled join on `cluster` from its size estimate of the
+    * assign side; at q29 sf0.1, and at 50k uncached rows, it broadcasts it.
+    * (`BenchExtra ivfprof` measured 178 → 215 s of task time when the 50k
+    * plan flipped to broadcast; pinning the join to a shuffle is a separate
+    * change, since no perfbench workload runs IVF and none could show it.)
     *
-    * The per-(vector, cluster) top-k REUSES the join's hash(cluster)
-    * output partitioning (ClusteredDistribution on a key superset — no
-    * exchange), cutting the rows entering the global ranking from
-    * ~nprobe·n/c per vector to ≤ nprobe·k; candidates are disjoint across
-    * a vector's probed clusters, so local-then-global top-k is exact, and
-    * both stages share the (cos desc, cand_id asc) tie-break. */
-  private def rerank(probes: DataFrame, assign: DataFrame, k: Int,
-                     excludeSelf: Boolean): DataFrame = {
-    import probes.sparkSession.implicits._
-    val joined = probes.join(assign, "cluster")
-    val scored = (if (excludeSelf) joined.filter(col("vec_id") =!= col("cand_id"))
-                  else joined)
-      .withColumn("cos_sim", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-      .select(col("vec_id"), col("cand_id"), col("cos_sim"))
-    // per-PARTITION streaming top-k per vec_id, exchange-free (reuses the
-    // join's hash(cluster) partitioning; a vector's candidates span ≤
-    // nprobe partitions). The round-5 shape ran a row_number window over
-    // all ~nprobe·n^1.5 candidate rows — WindowExec buffered + sorted the
-    // full candidate stream (83 s of a 94 s wall at n = 50k, 2095 s task
-    // time). Bounded state (k entries per in-flight vector) replaces that:
-    // no sort, no spill, and it is a strictly stronger prune than the old
-    // per-(vec, cluster) one. Exact: any global top-k row is a top-k row
-    // of its partition. Comparisons use java.lang.Double.compare — the
-    // same total order (NaN greatest, -0.0 < 0.0) as the window sort it
-    // replaces, so ranking ties stay bit-identical.
+    * A per-PARTITION streaming top-k per vec_id cuts the rows entering the
+    * window to ≤ k per (vec_id, partition) with bounded state (k entries
+    * per in-flight vector; no sort, no spill). It is exact under any
+    * partitioning: a vec_id's global top-k rows are top-k rows of whichever
+    * partitions hold them. Comparisons use java.lang.Double.compare — the
+    * same total order (NaN greatest, -0.0 < 0.0) as the window sort, so
+    * ranking ties stay bit-identical. */
+  private def rerank(scored: DataFrame, k: Int): DataFrame = {
+    import scored.sparkSession.implicits._
     val kk = k
     val pruned = scored.as[(Long, Long, Double)].mapPartitions { it =>
       val state = new java.util.HashMap[java.lang.Long, TopK]()
@@ -265,53 +269,14 @@ object Ann {
     }
   }
 
-  /** Candidate-pair count for the given corpus/params — the measurable
-    * scale contract (NearDupAnnSpec asserts it stays ≤ nprobe·n^1.5·slack
-    * and grows sub-quadratically across corpus sizes). */
-  def ivfCandidatePairs(spark: SparkSession, dir: String, c: Int = 0, nprobe: Int = 0,
-                        iters: Int = 5, maxTrainSamples: Long = 100000L): Long =
-    ivfCandidates(spark, dir, c, nprobe, iters, maxTrainSamples)._2.count()
-
-  /** Shared IVF front half: train centroids, assign, probe; returns
-    * (rows-with-norms, candidate id pairs). */
-  private def ivfCandidates(spark: SparkSession, dir: String, c: Int, nprobe: Int,
-                            iters: Int, maxTrainSamples: Long): (DataFrame, DataFrame) =
-    ivfCandidatesOf(spark, emb(spark, dir).select(col("vec_id"), col("embedding")),
-      c, nprobe, iters, maxTrainSamples)
-
-  /** Frame-based IVF front half — any (vec_id, embedding ARRAY<FLOAT>)
-    * input (multimodal feature vectors route through here too). */
-  private def ivfCandidatesOf(spark: SparkSession, rows0: DataFrame, c: Int, nprobe: Int,
-                              iters: Int, maxTrainSamples: Long): (DataFrame, DataFrame) = {
-    val p = ivfPartsOf(spark, rows0, c, nprobe, iters, maxTrainSamples)
-    // one shuffle on cluster id, ids only; each candidate lives in exactly
-    // one cluster and probe clusters are distinct → pairs are unique
-    val cands = p.probes.join(p.assign, "cluster")
-      .filter(col("vec_id") =!= col("cand_id"))
-      .select(col("vec_id"), col("cand_id"))
-    (p.rows, cands)
-  }
-
-  /** The IVF building blocks: normed corpus rows, (cand_id, cluster)
-    * assignment, (vec_id, cluster) probes, plus the trained centroid
-    * broadcast and effective nprobe (so [[ivfSearch]] can probe an
-    * INDEPENDENT query set against the corpus index). With `payload =
-    * true` the assignment/probe rows also carry (embedding, norm) as
-    * (cv, cn)/(qv, qn), letting the re-rank run off the one cluster join
-    * with no per-candidate vector join at all. */
-  private case class IvfParts(rows: DataFrame, assign: DataFrame, probes: DataFrame,
-      centroids: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]],
-      nprobe: Int)
-
-  private def ivfPartsOf(spark: SparkSession, rows0: DataFrame, c: Int, nprobe: Int,
-                         iters: Int, maxTrainSamples: Long,
-                         payload: Boolean = false): IvfParts = {
+  /** The IVF index over normed corpus `rows` as two columns over `unit`:
+    * the argmax-dot centroid (`assign`) and one row per probed cluster,
+    * the `nprobe` nearest centroids (`probe`, an explode). The trained
+    * centroid broadcast and effective nprobe live in the two UDFs. */
+  private def ivfIndex(rows: DataFrame, c: Int, nprobe: Int, iters: Int,
+                       maxTrainSamples: Long): (Column, Column) = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    val rows = withNorm(rows0.select(col("vec_id"), col("embedding")))
-      .withColumn("unit", transform(col("embedding"), x => x.cast("double") / col("norm")))
-      .select(col("vec_id"), col("embedding"), col("norm"), col("unit"))
-      .repartition(spark.sparkContext.defaultParallelism) // small scans land in 1 split
-
     // spherical k-means trained DRIVER-LOCAL on a bounded hash-stratified
     // sample (the FAISS posture: training never scans the full corpus —
     // the sampling mod is DERIVED from the corpus size so at most
@@ -358,28 +323,11 @@ object Ann {
 
     // owned by the plans that capture it; Spark's ContextCleaner frees it
     // once they are unreachable
-    val bcFinal = spark.sparkContext.broadcast(centroids)
-    val assign =
-      if (payload)
-        rows.select(col("vec_id"), col("unit"), col("embedding"), col("norm"))
-          .as[(Long, Seq[Double], Array[Float], Double)]
-          .map { case (id, u, e, nm) => (id, argmaxDot(u.toArray, bcFinal.value), e, nm) }
-          .toDF("cand_id", "cluster", "cv", "cn")
-      else rows.select(col("vec_id"), col("unit")).as[(Long, Seq[Double])]
-        .map { case (id, u) => (id, argmaxDot(u.toArray, bcFinal.value)) }
-        .toDF("cand_id", "cluster")
-    val probes =
-      if (payload)
-        rows.select(col("vec_id"), col("unit"), col("embedding"), col("norm"))
-          .as[(Long, Seq[Double], Array[Float], Double)]
-          .flatMap { case (id, u, e, nm) =>
-            topClusters(u.toArray, bcFinal.value, nprobeEff).map(cl => (id, cl, e, nm))
-          }.toDF("vec_id", "cluster", "qv", "qn")
-      else rows.select(col("vec_id"), col("unit")).as[(Long, Seq[Double])]
-        .flatMap { case (id, u) =>
-          topClusters(u.toArray, bcFinal.value, nprobeEff).map(cl => (id, cl))
-        }.toDF("vec_id", "cluster")
-    IvfParts(rows, assign, probes, bcFinal, nprobeEff)
+    val bc = spark.sparkContext.broadcast(centroids)
+    val assign = udf((u: Seq[Double]) => argmaxDot(u.toArray, bc.value)).asNonNullable()
+    val probe = udf((u: Seq[Double]) => topClusters(u.toArray, bc.value, nprobeEff))
+      .asNonNullable()
+    (assign(col("unit")), explode(probe(col("unit"))))
   }
 
   /** Embedding-cosine near-dup: unordered pairs with round(cos, 4) ≥
@@ -388,10 +336,10 @@ object Ann {
     *
     *  - exact = true: all-pairs with the same loud [[exactTopK]]-style row
     *    bound — the DuckDB-oracle path (q41) for bounded corpora.
-    *  - exact = false: IVF candidate pairs (symmetrized, ids only through
-    *    the shuffle) → exact cosine verify — the scale path; recall follows
-    *    the IVF probe recall, and near-identical vectors share an argmax
-    *    centroid, so planted duplicates are found with ~certainty. */
+    *  - exact = false: the IVF candidate join, its cosine computed on the
+    *    join output, symmetrized — the scale path; recall follows the IVF
+    *    probe recall, and near-identical vectors share an argmax centroid,
+    *    so planted duplicates are found with ~certainty. */
   def cosineNearDup(spark: SparkSession, dir: String, thresholdPct: Int = 32,
                     exact: Boolean = true, maxRows: Long = 65536L): DataFrame =
     cosinePairsOf(spark, emb(spark, dir), exact, maxRows)
@@ -402,42 +350,34 @@ object Ann {
   /** Shared pair machinery over any (vec_id, embedding) frame: every
     * unordered candidate pair with its exact cosine, UNTHRESHOLDED — the
     * caller filters. exact=true is the guarded all-pairs join (the filter
-    * pipelines over it, nothing materializes); exact=false symmetrizes the
-    * IVF candidate directions. Used by exactTopK/cosineNearDup (q28/q41)
-    * and the multimodal feature near-dup.
+    * pipelines over it, nothing materializes); exact=false takes
+    * (least, greatest, cos) from the IVF candidate join and drops the
+    * second direction with `distinct` (both directions carry the same
+    * cosine bits). Used by exactTopK/cosineNearDup (q28/q41) and the
+    * multimodal feature near-dup.
     *
     * INPUT CONTRACT: `rows0` is evaluated several times (count guard or
-    * k-means sample, assignment, probes, both re-rank join sides) — it must
-    * be DETERMINISTIC, and a computed pipeline (feature extraction, not a
-    * scan) re-executes per evaluation unless the caller caches it. */
+    * k-means sample, assignment, probes) — it must be DETERMINISTIC, and a
+    * computed pipeline (feature extraction, not a scan) re-executes per
+    * evaluation unless the caller caches it. */
   def cosinePairsOf(spark: SparkSession, rows0: DataFrame,
-                    exact: Boolean, maxRows: Long = 65536L): DataFrame = {
-    val pairs =
-      if (exact) {
-        val e = withNorm(rows0.select(col("vec_id"), col("embedding")))
-        val n = e.count()
-        require(n <= maxRows,
-          s"exact cosine pairing is an all-pairs O(n²) join: $n rows > maxRows=$maxRows. " +
-            "Use exact=false / ivfTopK (sub-quadratic candidates) or raise maxRows deliberately.")
-        val q = e.repartition(spark.sparkContext.defaultParallelism)
-        q.select(col("vec_id").as("id_a"), col("embedding").as("qv"), col("norm").as("qn"))
-          .join(e.select(col("vec_id").as("id_b"), col("embedding").as("cv"),
-            col("norm").as("cn")), col("id_a") < col("id_b"))
-      } else {
-        val (rows, cands) = ivfCandidatesOf(spark, rows0, 0, 0, 5, 100000L)
-        // symmetrize: a pair may surface in either probe direction
-        cands.select(least(col("vec_id"), col("cand_id")).as("id_a"),
-            greatest(col("vec_id"), col("cand_id")).as("id_b"))
-          .distinct()
-          .join(rows.select(col("vec_id").as("id_a"), col("embedding").as("qv"),
-            col("norm").as("qn")), "id_a")
-          .join(rows.select(col("vec_id").as("id_b"), col("embedding").as("cv"),
-            col("norm").as("cn")), "id_b")
-      }
-    pairs
-      .withColumn("cos", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-      .select(col("id_a"), col("id_b"), col("cos"))
-  }
+                    exact: Boolean, maxRows: Long = 65536L): DataFrame =
+    if (exact) {
+      val e = withNorm(rows0.select(col("vec_id"), col("embedding")))
+      val n = e.count()
+      require(n <= maxRows,
+        s"exact cosine pairing is an all-pairs O(n²) join: $n rows > maxRows=$maxRows. " +
+          "Use exact=false / ivfTopK (sub-quadratic candidates) or raise maxRows deliberately.")
+      val q = e.repartition(spark.sparkContext.defaultParallelism)
+      q.select(col("vec_id").as("id_a"), col("embedding").as("qv"), col("norm").as("qn"))
+        .join(e.select(col("vec_id").as("id_b"), col("embedding").as("cv"),
+          col("norm").as("cn")), col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"), cosine(col("qv"), col("cv"), col("qn"), col("cn")).as("cos"))
+    } else
+      selfCandidates(rows0, 0, 0, 5, 100000L)
+        .select(least(col("vec_id"), col("cand_id")).as("id_a"),
+          greatest(col("vec_id"), col("cand_id")).as("id_b"), col("cos_sim").as("cos"))
+        .distinct()
 
   private def argmaxDot(u: Array[Double], cents: Array[Array[Double]]): Int = {
     var best = 0; var bestD = Double.MinValue

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Training-data text pipeline operators over the `documents` table
@@ -17,9 +17,8 @@ object TextOps {
     * [[graft.web.Curation]] pipeline, so counting semantics cannot
     * silently diverge between the operator, the filter, and the committed
     * table. */
-  def wsTokens(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    size(split(text, " "))
-  def bpeTokens(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def wsTokens(text: Column): Column = size(split(text, " "))
+  def bpeTokens(text: Column): Column =
     size(regexp_extract_all(text, lit(BpePattern), lit(0)))
 
   /** Whitespace token count per document. */
@@ -51,16 +50,26 @@ object TextOps {
       .groupBy(md5(col("text")).as("text_hash"))
       .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_copies"))
 
-  /** Quality scoring: token count, mean token length (integer math so the
-    * DuckDB oracle hashes identically), stopword-ish ratio in basis points. */
+  /** The quality signals, defined once for [[qualityScore]] (q21) and
+    * [[qualityReason]] (q49, Curation): whitespace token count, mean token
+    * length ×100 and "the" share in basis points, in integer math so the
+    * DuckDB oracle hashes identically. */
+  private def qualitySignals(text: Column, nChars: Column): (Column, Column, Column) = {
+    val toks = wsTokens(text)
+    (toks,
+      floor(nChars * lit(100L) / toks),
+      floor(size(filter(split(text, " "), _ === "the")) * lit(10000L) / toks))
+  }
+
+  /** Quality scoring: token count, mean token length, stopword-ish ratio in
+    * basis points ([[qualitySignals]]). */
   def qualityScore(spark: SparkSession, dir: String): DataFrame = {
-    val toks = size(split(col("text"), " "))
-    val theCount = size(filter(split(col("text"), " "), _ === "the"))
+    val (toks, meanX100, stopBp) = qualitySignals(col("text"), col("n_chars"))
     docs(spark, dir).select(
       col("doc_id"),
       toks.as("n_tokens"),
-      floor(col("n_chars") * lit(100L) / toks).as("mean_tok_len_x100"),
-      floor(theCount * lit(10000L) / toks).as("stopword_bp"))
+      meanX100.as("mean_tok_len_x100"),
+      stopBp.as("stopword_bp"))
   }
 
   /** Composed document-quality FILTER (the C4/Gopher-style rule chain a
@@ -87,15 +96,11 @@ object TextOps {
     * [[qualityFilter]] (oracle q49) and the end-to-end
     * [[graft.web.Curation]] pipeline. NULL = keep; otherwise the first
     * failing rule's name. */
-  def qualityReason(text: org.apache.spark.sql.Column,
-                    nChars: org.apache.spark.sql.Column,
+  def qualityReason(text: Column, nChars: Column,
                     minTokens: Int = 30,
                     minMeanLenX100: Int = 300, maxMeanLenX100: Int = 900,
-                    minStopwordBp: Int = 100): org.apache.spark.sql.Column = {
-    val toks = wsTokens(text)
-    val meanX100 = floor(nChars * lit(100L) / toks)
-    val stopBp = floor(size(filter(split(text, " "), _ === "the"))
-      * lit(10000L) / toks)
+                    minStopwordBp: Int = 100): Column = {
+    val (toks, meanX100, stopBp) = qualitySignals(text, nChars)
     when(toks < minTokens, "too_short")
       .when(meanX100 < minMeanLenX100, "short_tokens")
       .when(meanX100 > maxMeanLenX100, "long_tokens")

@@ -11,7 +11,7 @@ import graft.bigraph.{Assembly, BigraphJson}
   * experiment_results_load.csv's invariant). */
 class GoldenLoadSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val outDir = "/root/reference/output"
+  import ReferenceFixtures.{need, outDir}
 
   private val goldens = Seq(
     "10-2604777-Dover", "6-51800-City of London", "8-295349-Fenland",
@@ -19,7 +19,7 @@ class GoldenLoadSpec extends AnyFunSuite {
     "5-10264792-Hong Kong Island", "8-1544956-Mountain View")
 
   for (g <- goldens) test(s"load parity: $g") {
-    val path = s"$outDir/$g.json"
+    val path = need(s"$outDir/$g.json")
     val canon = BigraphJson.readGolden(path)
     val state = Assembly.loadJson(spark, path)
     val nB = state.countCtrl("Boundary")

@@ -11,12 +11,11 @@ import graft.hier.PlacePipeline
   * experiment_results_load.csv:21). */
 class GoldenParitySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val dataDir = "/root/reference/data"
-  private val outDir = "/root/reference/output"
+  import ReferenceFixtures.{dataDir, need, outDir}
 
   private def check(rootLevel: Int, rootId: Long, rootName: String): Unit = {
-    val golden = BigraphJson.readGolden(s"$outDir/$rootLevel-$rootId-$rootName.json")
-    val (_, tables) = PlacePipeline.fromOsmDir(spark, dataDir, rootLevel, rootId, rootName)
+    val golden = BigraphJson.readGolden(need(s"$outDir/$rootLevel-$rootId-$rootName.json"))
+    val (_, tables) = PlacePipeline.fromOsmDir(spark, need(dataDir), rootLevel, rootId, rootName)
     val got = BigraphJson.canonOf(tables)
 
     val diffs =
@@ -36,7 +35,7 @@ class GoldenParitySpec extends AnyFunSuite {
   }
 
   test("Dover golden has the documented headline counts") {
-    val g = BigraphJson.readGolden(s"$outDir/10-2604777-Dover.json")
+    val g = BigraphJson.readGolden(need(s"$outDir/10-2604777-Dover.json"))
     assert(g.nNodes == 2184 && g.nEdges == 1069 && g.nOpen == 25)
     assert(g.boundaryChains.values.sum == 1)
     assert(g.streetChains.values.sum == 391)
@@ -57,7 +56,7 @@ class GoldenParitySpec extends AnyFunSuite {
   }
 
   test("canonical numbering stays distributed: no global Window in the toState plan") {
-    val (_, tables) = PlacePipeline.fromOsmDir(spark, dataDir, 10, 2604777L, "Dover")
+    val (_, tables) = PlacePipeline.fromOsmDir(spark, need(dataDir), 10, 2604777L, "Dover")
     val state = graft.bigraph.Assembly.toState(spark, tables)
     val plan = state.places.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"single-partition Window found in plan:\n$plan")

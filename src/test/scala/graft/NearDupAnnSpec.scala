@@ -195,13 +195,25 @@ class NearDupAnnSpec extends AnyFunSuite {
     }
     (base ++ twins).toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val exactPairs = Ann.cosineNearDup(spark, dir, thresholdPct = 99, exact = true)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivfPairs = Ann.cosineNearDup(spark, dir, thresholdPct = 99, exact = false)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(ivfPairs.subsetOf(exactPairs), s"IVF emitted unverified pairs: ${ivfPairs -- exactPairs}")
+    // collects `df` itself (rows are (id_a, id_b, cos_r4)), so its
+    // executedPlan below is the final adaptive plan
+    def triples(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val exactTriples = triples(Ann.cosineNearDup(spark, dir, thresholdPct = 99, exact = true))
+    val ivf = Ann.cosineNearDup(spark, dir, thresholdPct = 99, exact = false)
+    val ivfTriples = triples(ivf)
+    assert(ivfTriples.subsetOf(exactTriples),
+      s"IVF emitted unverified pairs or cosines: ${ivfTriples -- exactTriples}")
     for (i <- 0L until 3L)
-      assert(ivfPairs.contains((i, i + 1000L)), s"planted twin ($i, ${i + 1000}) missed")
+      assert(ivfTriples.exists(t => t._1 == i && t._2 == i + 1000L),
+        s"planted twin ($i, ${i + 1000}) missed")
+    // the cosine is scored on the candidate join's own output: no vector
+    // join back onto the pairs
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val joins = Aqe.collect(ivf.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName
+    }
+    assert(joins.size == 1, s"IVF near-dup must plan one join, got $joins")
     // exact path refuses unbounded corpora like exactTopK does
     val e = intercept[IllegalArgumentException] {
       Ann.cosineNearDup(spark, dir, exact = true, maxRows = 10L).collect()

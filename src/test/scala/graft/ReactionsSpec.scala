@@ -13,8 +13,11 @@ import graft.react.Reactions
 class ReactionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  import ReferenceFixtures.{dataDir, need, outDir}
+  private val doverGolden = s"$outDir/10-2604777-Dover.json"
+
   private lazy val doverTables =
-    PlacePipeline.fromOsmDir(spark, "/root/reference/data", 10, 2604777L, "Dover")._2
+    PlacePipeline.fromOsmDir(spark, need(dataDir), 10, 2604777L, "Dover")._2
 
   test("S5/S6: written JSON round-trips to the identical canonical structure") {
     val path = java.nio.file.Files.createTempFile("graft-dover", ".json").toString
@@ -31,7 +34,7 @@ class ReactionsSpec extends AnyFunSuite {
   }
 
   test("S6 loads the reference golden into a reaction-ready state") {
-    val s = Assembly.loadJson(spark, "/root/reference/output/10-2604777-Dover.json")
+    val s = Assembly.loadJson(spark, need(doverGolden))
     assert(s.countCtrl("Boundary") == 1 && s.countCtrl("Street") == 391 &&
       s.countCtrl("Building") == 158 && s.countCtrl("Junction") == 1084)
   }
@@ -151,7 +154,7 @@ class ReactionsSpec extends AnyFunSuite {
     // nesting forest as solid arcs, and each k-port junction hyperedge as a
     // (k-1)-arc dashed chain — so expected counts derive directly from the
     // reference structure
-    val s = Assembly.loadJson(spark, "/root/reference/output/10-2604777-Dover.json")
+    val s = Assembly.loadJson(spark, need(doverGolden))
     val dot = Assembly.toDot(s, maxNodes = 10000)
     val nodeLines = dot.linesIterator.count(_.matches("""  n\d+ \[label=.*"""))
     val solid = dot.linesIterator.count(_.matches("""  n\d+ -> n\d+;"""))
