@@ -6,69 +6,19 @@ import graft.tools.Inspect.JobTimer
   * bench contract; cited in OPTIMIZATION_r06.md. Usage:
   * `runMain graft.BenchExtra <section…>` on `local[SPARK_GRAFT_CPUS]`
   * (default 32), with sections from:
-  *  - `hier2shard`: Bench's two-shard hierarchy build, 3 runs;
-  *  - `warc`: the 200k-page WARC ingest, 2 runs, jobs/stages of run 2;
-  *  - `curate`: the 200k-page curation, 2 runs, jobs/stages of run 2;
   *  - `ivf`: StressBench's IVF recall and candidate-pair law;
   *  - `dedupstress`: the q25/q26 10x legs alone, 3 rounds each;
   *  - `ivfprof`: one 50k-vector `ivfTopK` with its jobs/stages.
-  * With no arguments it runs ivf, hier2shard, warc and curate;
-  * `dedupstress` and `ivfprof` run only when named. */
+  * With no arguments it runs `ivf`. The hierarchy build, WARC ingest and
+  * curation are timed by perfbench's `hierarchy_react` and
+  * `ingest_curate` workloads. */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
-    val sections = if (args.nonEmpty) args.toSet else Set("ivf", "hier2shard", "warc", "curate")
+    val sections = if (args.nonEmpty) args.toSet else Set("ivf")
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     def time(l: String)(f: => Any): Unit = {
       val t0 = System.nanoTime(); val r = f
       println(f"[extra] $l: ${(System.nanoTime() - t0) / 1e9}%.2f s ($r)")
-    }
-
-    if (sections("hier2shard")) {
-      import graft.hier.PlacePipeline
-      val (metas2, cached2) = Bench.twoShardInput(spark)
-      for (i <- 1 to 3) {
-        spark.catalog.clearCache()
-        cached2.cache().count()
-        time(s"hierarchy_build_2shard run$i") {
-          PlacePipeline.stats(PlacePipeline.build(spark, cached2, metas2)).nNodes
-        }
-      }
-      cached2.unpersist()
-      spark.catalog.clearCache()
-    }
-
-    if (sections("warc") || sections("curate")) {
-      val timer = new JobTimer
-      spark.sparkContext.addSparkListener(timer)
-      val iCfg = Bench.benchCfg(200000L)
-      val dir = graft.web.Flagship.materializePages(spark, iCfg)
-      if (sections("curate")) {
-        // run twice (fresh outDir each) — run 2 is the steady-state number
-        for (i <- 1 to 2) {
-          val outDir = java.nio.file.Files.createTempDirectory("graft-curate-extra").toString
-          timer.reset()
-          time(s"curate_e2e_200k run$i") {
-            graft.web.Curation.curate(spark,
-              spark.read.parquet(dir).select("url", "warc_ts", "text", "lang"),
-              outDir, "extra-curate", minTokens = 10,
-              minMeanLenX100 = 100, maxMeanLenX100 = 2000, minStopwordBp = 0).pending.size
-          }
-          Thread.sleep(300)
-          if (i == 2) timer.dump("curate run2")
-        }
-      }
-      if (sections("warc")) {
-        val warcDir = Bench.warcCorpus(spark, iCfg)
-        for (i <- 1 to 2) {
-          val outDir = java.nio.file.Files.createTempDirectory("graft-ingest-extra").toString
-          timer.reset()
-          time(s"warc_ingest_e2e_200k run$i") {
-            graft.web.Flagship.ingestWarc(spark, warcDir, iCfg, outDir, "extra-snap").pending.size
-          }
-          Thread.sleep(300)
-          if (i == 2) timer.dump("warc run2")
-        }
-      }
     }
 
     if (sections("ivf")) {

@@ -3,7 +3,7 @@ package graft.bigraph
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.apache.spark.sql.functions._
-import graft.hier.PlaceTables
+import graft.hier.{PlaceStats, PlaceTables}
 
 /** Canonicalized bigraph structure — traversal-order-free identity used for
   * golden parity (SURVEY.md §5.2(1), §7.4: node numbering in the reference
@@ -111,12 +111,10 @@ object BigraphJson {
       .select(array_join(col("port_chains"), "|").as("pc"), coalesce(col("outer_name"), lit("")).as("o"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
       .groupBy(identity).map { case (k, v) => k -> v.size }
-    val nB = b.values.sum.toLong; val nS = s.values.sum.toLong
-    val nBu = bu.values.sum.toLong; val nJ = j.values.sum.toLong
-    BigraphCanon(b, s, bu, j, e,
-      nNodes = 2 * (nB + nS + nBu) + nJ,
-      nEdges = nB + nS + nBu + e.values.sum,
-      nOpen = e.collect { case ((_, o), n) if o.nonEmpty => n }.sum.toLong)
+    val st = PlaceStats.fromCounts(b.values.sum, s.values.sum, bu.values.sum, j.values.sum,
+      nHyperedges = e.values.sum, nOpen = e.collect { case ((_, o), n) if o.nonEmpty => n }.sum,
+      idParameter = false)
+    BigraphCanon(b, s, bu, j, e, st.nNodes, st.nEdges, st.nOpenNames)
   }
 
   /** Pretty diff for test failure messages. */

@@ -52,10 +52,11 @@ object DistributedKnn {
         // the returned frame is the ONLY cache this call leaves behind;
         // callers may unpersist it once consumed (DistributedKnnSpec
         // asserts the persistent-RDD count returns to baseline after that)
-        val out = materialize(spark, best
+        val out = truncated(best
           .withColumn("rank", row_number().over(wBest))
           .select(col("id"), col("rank"), col("tid").as("nearest_tid"),
             col("d").as("nearest_dist_m")))
+        out.count()
         best.unpersist(false)
         out
     }
@@ -70,23 +71,12 @@ object DistributedKnn {
           lit(null).cast("long").as("nearest_tid"),
           lit(null).cast("double").as("nearest_dist_m"))
       case Some(best) => // k = 1 pool: already exactly one row per id
-        val out = materialize(spark, best.select(col("id"),
+        val out = truncated(best.select(col("id"),
           col("tid").as("nearest_tid"), col("d").as("nearest_dist_m")))
+        out.count()
         best.unpersist(false)
         out
     }
-
-  /** Eager plan-truncated materialization (NOT localCheckpoint: its blocks
-    * cannot be freed without killing the lineage, and its LogicalRDD keeps
-    * constraints that break later unions on Spark 4.1). createDataFrame
-    * truncates the PLAN (flat analysis per round) while the RDD lineage
-    * stays recomputable — so freed intermediates are a cache decision, not
-    * a correctness one. */
-  private def materialize(spark: SparkSession, df: DataFrame): DataFrame = {
-    val out = spark.createDataFrame(df.rdd, df.schema).cache()
-    out.count()
-    out
-  }
 
   /** The ring-batch expansion loop shared by [[knn]]/[[nearest]]: returns
     * the materialized CACHED pool (id, lat, lon, tid, d) with ≤ k rows per
@@ -111,7 +101,7 @@ object DistributedKnn {
     val wBest = Window.partitionBy(col("id"))
       .orderBy(col("d").asc_nulls_last, col("tid").asc_nulls_last)
     val wId = Window.partitionBy(col("id"))
-    var unresolved = lazyMaterialize(spark, points.select("id", "lat", "lon"))
+    var unresolved = truncated(points.select("id", "lat", "lon"))
     var unresolvedCount = unresolved.count()
     // each round's cached top-k frame; finalized rows are sliced out of
     // these at the end (ONE union), so no per-round best-carry or anti
@@ -175,9 +165,8 @@ object DistributedKnn {
         .select(col("id"), col("lat"), col("lon"), col("tid"), col("d"))
       // the rn = 1 row exists for EVERY unresolved point (sentinel floor),
       // so next round's unresolved set needs no join at all
-      val newUnresolved = lazyMaterialize(spark,
-        roundBest.filter(!col("fin") && col("rn") === 1)
-          .select(col("id"), col("lat"), col("lon")))
+      val newUnresolved = truncated(roundBest.filter(!col("fin") && col("rn") === 1)
+        .select(col("id"), col("lat"), col("lon")))
       // ONE action per round: materializes roundBest (via its cache) and
       // newUnresolved, and returns the count that drives the loop
       unresolvedCount = newUnresolved.groupBy().count().collect()(0).getLong(0)
@@ -192,14 +181,10 @@ object DistributedKnn {
     else {
       // one union of the per-round finalized slices → the caller's cached
       // pool; the per-round caches die here (they kept the slices cheap)
-      val best = materialize(spark, finalizedParts.reduce(_ unionByName _))
+      val best = truncated(finalizedParts.reduce(_ unionByName _))
+      best.count()
       roundFrames.foreach(_.unpersist(false))
       Some(best)
     }
   }
-
-  /** [[materialize]] without the eager count — the caller's next action
-    * populates the cache; the plan is truncated the same way. */
-  private def lazyMaterialize(spark: SparkSession, df: DataFrame): DataFrame =
-    spark.createDataFrame(df.rdd, df.schema).cache()
 }

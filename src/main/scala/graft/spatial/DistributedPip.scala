@@ -1,10 +1,11 @@
 package graft.spatial
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory}
-import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
-import org.locationtech.jts.io.WKBReader
+import org.locationtech.jts.geom.{Coordinate, Envelope, Geometry, TopologyException}
+import org.locationtech.jts.geom.prep.PreparedGeometryFactory
+import org.locationtech.jts.geom.util.PolygonExtracter
+import org.locationtech.jts.io.{WKBReader, WKBWriter}
 import graft.cells.CellIndex
 
 /** Distributed point-in-polygon containment join — the fact×fact path for
@@ -13,29 +14,11 @@ import graft.cells.CellIndex
   * this path covers zone sets beyond executor memory: per-tenant fences,
   * building footprints, generated isochrones).
   *
-  * Shape: zones flatMap their UNIFORM level-`level` cell cover into a
-  * (cell, zone) table — `full` cells (strictly inside) skip the exact
-  * refine AND drop their geometry payload; border cells ship the zone
-  * geometry CLIPPED to the cell's (slightly expanded) envelope, so the
-  * bytes-per-cell riding the shuffle are O(local boundary complexity), not
-  * O(whole-zone vertices) — a coastline zone with 10⁵ border cells no
-  * longer replicates its full ring 10⁵×. Points key by their
+  * Shape: zones become the [[coverClips]] table; points key by their
   * level-`level` cell; ONE shuffle on cell id joins them; the refine is an
-  * exact JTS point-in-polygon with a BOUNDED per-task LRU of prepared
-  * clipped geometries (each task sees few distinct (cell, zone) pairs
-  * because the join co-locates by cell; the LRU caps executor memory when
-  * an AQE skew split still co-locates many border zones). Hot cells (a
-  * dense metro) split under AQE skew handling; pre-salting the point side
-  * composes via [[graft.ops.Skew]] if an exchange is reused.
-  *
-  * Clip-exactness: the clip envelope is the cell expanded by 10⁻⁶ of its
-  * width, so every point assigned to the cell (including points exactly on
-  * the cell edge, which floor-assignment puts in one cell) is INTERIOR to
-  * the clip window — for such points, p ∈ interior(zone) ⟺
-  * p ∈ interior(zone ∩ window). Lower-dimensional residue of the
-  * intersection (a zone edge lying exactly on the window edge) is dropped:
-  * points there are on the zone boundary, which `contains` excludes in the
-  * unclipped predicate too (same rule as the round-3 normalizeSeam fix).
+  * exact JTS point-in-polygon through a [[GeomLru]] of the prepared clips.
+  * Hot cells (a dense metro) split under AQE skew handling; pre-salting the
+  * point side composes via [[graft.ops.Skew]] if an exchange is reused.
   *
   * Same containment predicate as the broadcast path
   * (BoundaryCellIndex.foreachContaining): `full || prepared.contains(pt)`.
@@ -60,47 +43,14 @@ object DistributedPip {
     * so the policy is stated here as contract rather than left emergent. */
   def containsJoin(spark: SparkSession, points: DataFrame, zones: DataFrame,
                    level: Int): DataFrame = {
-    import spark.implicits._
     graft.functions.GeoFunctions.register(spark)
     require(points.columns.forall(c => !ReservedCols.contains(c)),
       s"point columns collide with reserved names: ${ReservedCols.mkString(",")}")
     require(Seq("id", "lat", "lon").forall(points.columns.contains),
       s"points must carry (id, lat, lon); got ${points.columns.mkString(",")}")
 
-    val cover = zones.select(col("boundary_id"), col("wkb"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val reader = new WKBReader()
-        val writer = new org.locationtech.jts.io.WKBWriter()
-        it.flatMap { case (id, wkb) =>
-          // seam-crossing zones normalize once; the refine ships CLIPPED
-          // normalized bytes so both sides of the predicate agree
-          val geom = CellIndex.normalizeSeam(reader.read(wkb))
-          val prep = PreparedGeometryFactory.prepare(geom)
-          // invalid rings (bowtie fences, self-touching footprints): the
-          // overlay clip could produce a DIFFERENT valid interpretation
-          // than the prepared-predicate refine on the raw bytes — ship the
-          // unclipped geometry for those zones so the distributed refine
-          // stays byte-identical to the broadcast path (checked once per
-          // zone, not per cell)
-          val clipOk = geom.isValid
-          // unclipped fallback bytes serialized ONCE per zone, not per
-          // border cell (an invalid 10⁵-vertex zone would otherwise pay
-          // 10⁵ full WKB serializations of the same geometry)
-          lazy val rawBytes = writer.write(geom)
-          // minLevel = maxLevel = level → uniform single-level cover
-          CellIndex.cover(geom, level, level).iterator.map { cell =>
-            val cg = CellIndex.cellGeometry(cell)
-            val full = prep.containsProperly(cg)
-            val payload =
-              if (full) null
-              else if (clipOk) writer.write(clipToCell(geom, cell))
-              else rawBytes
-            (cell, id, full, payload)
-          }
-        }
-      }.toDF("cell", "boundary_id", "pip_full", "pip_wkb")
-
+    val cover = coverClips(zones.select(col("boundary_id"), col("wkb")), level, identity)
+      .toDF("cell", "boundary_id", "pip_full", "pip_wkb")
     val ptCols = points.columns
     val pts = points
       .filter(col("lat").isNotNull && col("lon").isNotNull) // see policy above
@@ -112,59 +62,91 @@ object DistributedPip {
     val outCols: Seq[Column] =
       col("id").as("point_id") +: ptCols.filterNot(_ == "id").map(col).toSeq :+
         col("boundary_id")
+    // a deterministic UDF, so arbitrary payload columns survive the join
+    // without a typed encoder
+    val zoneLru = new GeomLru
+    val refine = udf { (cell: Long, bid: Long, full: Boolean, wkb: Array[Byte],
+                        lat: Double, lon: Double) =>
+      full || {
+        val zone = zoneLru.get((cell, bid), wkb)
+        zone.contains(zone.getGeometry.getFactory.createPoint(new Coordinate(lon, lat)))
+      }
+    }
     pts.join(cover, "cell")
-      .filter(pipRefine(col("cell"), col("boundary_id"), col("pip_full"),
+      .filter(refine(col("cell"), col("boundary_id"), col("pip_full"),
         col("pip_wkb"), col("lat"), col("lon")))
       .select(outCols: _*)
   }
 
-  /** Zone geometry ∩ the cell's expanded envelope, polygonal components
-    * only (see clip-exactness note in the object doc). Falls back to the
-    * unclipped geometry if the overlay leaves nothing 2-D (cannot happen
-    * for a border cell of a valid polygon, but robustness beats an empty
-    * refine geometry silently dropping points). */
+  /** The cover table of the fact×fact spatial joins ([[containsJoin]],
+    * [[SpatialOps.crossingsDistributed]]): (id, wkb) rows flatMap to
+    * (cell, id, full, wkb), one row per cell of the geometry's UNIFORM
+    * level-`level` cover. `shape` maps the raw geometry before the seam is
+    * normalized (a crossing ring is the RAW polygon's boundary: normalizing
+    * the polygon first would add edges along the ±180 clip line).
+    *
+    * For a polygon, `full` cells (strictly inside) skip the exact refine
+    * and drop their payload; every other cell ships the geometry CLIPPED to
+    * the cell ([[clipToCell]]), so the bytes per cell riding the shuffle
+    * are O(local boundary complexity), not O(whole-geometry vertices) — a
+    * coastline with 10⁵ border cells never replicates its full ring 10⁵×.
+    * Lines have no `full` cells. An invalid polygon (bowtie fence,
+    * self-touching footprint) ships UNCLIPPED: the overlay clip could pick
+    * a different valid reading than the prepared-predicate refine on the
+    * raw geometry, and the broadcast path refines the raw one; its bytes
+    * are written once per geometry, not once per cell. */
+  private[spatial] def coverClips(rows: DataFrame, level: Int, shape: Geometry => Geometry)
+      : Dataset[(Long, Long, Boolean, Array[Byte])] = {
+    import rows.sparkSession.implicits._
+    rows.as[(Long, Array[Byte])].mapPartitions { it =>
+      val reader = new WKBReader()
+      val writer = new WKBWriter()
+      it.flatMap { case (id, wkb) =>
+        val geom = CellIndex.normalizeSeam(shape(reader.read(wkb)))
+        val polygonal = geom.getDimension == 2
+        val prep = if (polygonal) PreparedGeometryFactory.prepare(geom) else null
+        val clip = !polygonal || geom.isValid
+        lazy val rawBytes = writer.write(geom)
+        CellIndex.cover(geom, level, level).iterator.map { cell =>
+          val full = polygonal && prep.containsProperly(CellIndex.cellGeometry(cell))
+          val payload =
+            if (full) null
+            else if (clip) writer.write(clipToCell(geom, cell))
+            else rawBytes
+          (cell, id, full, payload)
+        }
+      }
+    }
+  }
+
+  /** Geometry ∩ the cell's envelope expanded by 10⁻⁶ of its width: the
+    * polygonal components of a polygon, every component of a line (a clip
+    * that degenerates to a point still witnesses `intersects`).
+    *
+    * Exactness: every point assigned to the cell (floor assignment puts a
+    * point on the cell edge in one cell) is INTERIOR to the window, so
+    * p ∈ interior(zone) ⟺ p ∈ interior(zone ∩ window), and a crossing
+    * point of two lines in the cell survives both clips. Lower-dimensional
+    * residue of a polygon clip (a zone edge lying exactly on the window
+    * edge) is dropped: points there are on the zone boundary, which
+    * `contains` excludes in the unclipped predicate too. Clips are subsets
+    * of the raw geometries, so they add no false positives.
+    *
+    * Falls back to the unclipped geometry when the overlay throws a
+    * TopologyException (prepared-geometry PREDICATES tolerate the invalid
+    * rings that overlays reject) or leaves nothing of the geometry's kind
+    * (robustness beats an empty refine geometry silently dropping rows). */
   private[graft] def clipToCell(geom: Geometry, cell: Long): Geometry = {
     val (lonMin, latMin, lonMax, latMax) = CellIndex.bounds(cell)
     val eps = (lonMax - lonMin) * 1e-6
-    val gf = geom.getFactory
-    val window = gf.toGeometry(new org.locationtech.jts.geom.Envelope(
+    val window = geom.getFactory.toGeometry(new Envelope(
       lonMin - eps, lonMax + eps, latMin - eps, latMax + eps))
-    // overlay ops throw TopologyException on invalid rings (bowtie fences,
-    // self-touching footprints — routine in real zone data); prepared-
-    // geometry PREDICATES tolerate them, so fall back to the unclipped
-    // bytes rather than failing the job (round-3 behavior for that zone)
     val clipped =
       try geom.intersection(window)
-      catch { case _: org.locationtech.jts.geom.TopologyException => return geom }
-    val polys = org.locationtech.jts.geom.util.PolygonExtracter.getPolygons(clipped)
-    if (polys.isEmpty) geom
-    else if (polys.size == 1) polys.get(0).asInstanceOf[Geometry]
-    else gf.buildGeometry(polys)
-  }
-
-  /** The exact-refine predicate as a deterministic UDF so arbitrary payload
-    * columns survive the join without a typed encoder. The prepared-
-    * geometry cache is the shared bounded [[GeomLru]] keyed by
-    * (cell, zone) — the clipped bytes differ per cell. */
-  private[spatial] val CacheCap = 512
-
-  private[spatial] def preparedLoader: Array[Byte] => PreparedGeometry =
-    wkb => PreparedGeometryFactory.prepare(new WKBReader().read(wkb))
-
-  private class RefineHelper extends Serializable {
-    @transient private lazy val gf = new GeometryFactory()
-    private val cache = new GeomLru[PreparedGeometry](CacheCap, preparedLoader)
-    def contains(cell: Long, bid: Long, wkb: Array[Byte], lat: Double, lon: Double): Boolean =
-      cache.get((cell, bid), wkb).contains(gf.createPoint(new Coordinate(lon, lat)))
-  }
-
-  private def pipRefine(cell: Column, bid: Column, full: Column,
-                        wkb: Column, lat: Column, lon: Column): Column = {
-    val helper = new RefineHelper
-    val f = udf { (cell: Long, bid: Long, full: Boolean, wkb: Array[Byte],
-                   lat: Double, lon: Double) =>
-      full || helper.contains(cell, bid, wkb, lat, lon)
-    }
-    f(cell, bid, full, wkb, lat, lon)
+      catch { case _: TopologyException => return geom }
+    val kept =
+      if (geom.getDimension < 2) clipped
+      else geom.getFactory.buildGeometry(PolygonExtracter.getPolygons(clipped))
+    if (kept.isEmpty) geom else kept
   }
 }

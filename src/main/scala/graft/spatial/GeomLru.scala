@@ -1,25 +1,28 @@
 package graft.spatial
 
-/** Bounded per-task LRU of geometries deserialized from WKB, keyed by
-  * (cell, id) — the shared refine-kernel cache for the fact×fact spatial
-  * joins ([[DistributedPip]]'s PIP refine, [[SpatialOps]]'s crossing
-  * refine). Each task sees few distinct (cell, id) pairs because the join
-  * co-locates by cell; the cap bounds executor memory when an AQE skew
-  * split still co-locates many entries (entries are cheap to rebuild on a
-  * miss). The map is a @transient lazy access-ordered LinkedHashMap,
-  * rebuilt per task deserialization — tasks are single-threaded, so no
-  * synchronization. `load` must be serializable (a closure over object
-  * methods). */
-private[spatial] final class GeomLru[V](cap: Int, load: Array[Byte] => V)
-    extends Serializable {
+import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
+import org.locationtech.jts.io.WKBReader
+
+/** Bounded per-task LRU of prepared geometries read from WKB, keyed by
+  * (cell, id) — the refine cache of the fact×fact spatial joins over
+  * [[DistributedPip.coverClips]] (the clipped bytes differ per cell). Each
+  * task sees few distinct (cell, id) pairs because the join co-locates by
+  * cell; the cap of 512 bounds executor memory when an AQE skew split still
+  * co-locates many entries (entries are cheap to rebuild on a miss). The
+  * map is a @transient lazy access-ordered LinkedHashMap, rebuilt per task
+  * deserialization — tasks are single-threaded, so no synchronization. */
+private[spatial] final class GeomLru extends Serializable {
   @transient private lazy val m =
-    new java.util.LinkedHashMap[(Long, Long), V](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[(Long, Long), V]): Boolean =
-        size() > cap
+    new java.util.LinkedHashMap[(Long, Long), PreparedGeometry](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(Long, Long), PreparedGeometry]): Boolean = size() > 512
     }
-  def get(key: (Long, Long), wkb: Array[Byte]): V = {
+  def get(key: (Long, Long), wkb: Array[Byte]): PreparedGeometry = {
     var v = m.get(key)
-    if (v == null) { v = load(wkb); m.put(key, v) }
+    if (v == null) {
+      v = PreparedGeometryFactory.prepare(new WKBReader().read(wkb))
+      m.put(key, v)
+    }
     v
   }
 }

@@ -164,10 +164,7 @@ object Raster {
         .join(merged.select(col("key").as("ck"), col("comp").as("ccomp")).as("b"),
           col("a.comp") === col("b.ck"))
         .select(col("a.key").as("key"), least(col("a.comp"), col("b.ccomp")).as("comp"))
-      // NOT localCheckpoint: its LogicalRDD retains constraints that break
-      // the next round's unionByName on Spark 4.1 (key-not-found in
-      // rewriteConstraints); createDataFrame truncates lineage cleanly
-      val next = spark.createDataFrame(halved.rdd, halved.schema).cache()
+      val next = truncated(halved)
       // min-label sums are monotone non-increasing; a fixed sum ⇒ fixpoint
       val s = next.agg(sum(col("comp").cast("decimal(38,0)"))).collect()(0).getDecimal(0)
       if (prevSum != null && s.compareTo(prevSum) == 0) converged = true
@@ -187,7 +184,7 @@ object Raster {
       .join(labels.withColumnRenamed("key", "lbl").withColumnRenamed("comp", "gcomp"),
         Seq("lbl"), "left")
       .select(col("i"), col("j"), coalesce(col("gcomp"), col("lbl")).as("comp"))
-    val out = spark.createDataFrame(joined.rdd, joined.schema).cache()
+    val out = truncated(joined)
     out.count()
     labeled.unpersist(false)
     edges.unpersist(false)

@@ -79,92 +79,36 @@ object SpatialOps {
 
   /** Fact×fact crossings — [[crossings]] with the boundary set as a TABLE
     * (boundary_id, wkb), the path when the ring index exceeds executor
-    * memory (per-tenant fences, planetary admin sets). Mirrors
-    * [[DistributedPip]]: each boundary RING flatMaps its uniform
-    * level-`level` cover into (cell, boundary_id, ring CLIPPED to the
-    * cell's expanded envelope); each line flatMaps its own cover into
-    * (cell, line_id, line clipped the same way); ONE shuffle on cell id
-    * joins them and the refine is an exact JTS `intersects` of the two
-    * local clips. Shuffle bytes are O(local boundary/line complexity) per
-    * cell — a coastline ring never replicates its full vertex set.
+    * memory (per-tenant fences, planetary admin sets). Boundary RINGS and
+    * lines each become a [[DistributedPip.coverClips]] table (the ring is
+    * the raw polygon's boundary, the [[buildRingIndex]] seam rule); ONE
+    * shuffle on cell id joins them and the refine is an exact JTS
+    * `intersects` of the two local clips.
     *
     * Exactness: a crossing point p lies in some cell c; both covers
     * contain c (both geometries pass through p), and both clips retain p
-    * (the window is the cell expanded by 10⁻⁶ of its width, so even a p
-    * exactly on the cell edge is interior to it) ⇒ the join at c finds
-    * the crossing. Conversely clips are subsets of the raw geometries, so
-    * a clipped intersection implies a raw one — no false positives.
-    * Output deduplicates (line_id, boundary_id): a long shared border
-    * crossing many cells reports once. */
+    * ([[DistributedPip.clipToCell]]) ⇒ the join at c finds the crossing.
+    * Conversely clips are subsets of the raw geometries, so a clipped
+    * intersection implies a raw one — no false positives. Output
+    * deduplicates (line_id, boundary_id): a long shared border crossing
+    * many cells reports once. */
   def crossingsDistributed(spark: SparkSession, lines: DataFrame,
                            boundaries: DataFrame, level: Int = 12): DataFrame = {
-    import spark.implicits._
-    val ringCover = boundaries.select(col("boundary_id"), col("wkb"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val reader = new WKBReader()
-        val writer = new org.locationtech.jts.io.WKBWriter()
-        it.flatMap { case (id, wkb) =>
-          // boundary of the RAW polygon first, then normalize — the
-          // buildRingIndex seam rule (normalizing first would add clip-line
-          // edges and fabricate crossings at ±180)
-          val ring = CellIndex.normalizeSeam(reader.read(wkb).getBoundary)
-          CellIndex.cover(ring, level).iterator.map { cell =>
-            (cell, id, writer.write(clipLineal(ring, cell)))
-          }
-        }
-      }.toDF("cell", "boundary_id", "b_wkb")
-    val lineCover = lines.select(col("line_id"), col("wkb"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val reader = new WKBReader()
-        val writer = new org.locationtech.jts.io.WKBWriter()
-        it.flatMap { case (id, wkb) =>
-          val geom = CellIndex.normalizeSeam(reader.read(wkb))
-          CellIndex.cover(geom, level).iterator.map { cell =>
-            (cell, id, writer.write(clipLineal(geom, cell)))
-          }
-        }
-      }.toDF("cell", "line_id", "l_wkb")
-    val helper = new CrossRefine
+    val rings = DistributedPip.coverClips(boundaries.select(col("boundary_id"), col("wkb")),
+        level, _.getBoundary)
+      .toDF("cell", "boundary_id", "b_full", "b_wkb")
+    val segs = DistributedPip.coverClips(lines.select(col("line_id"), col("wkb")),
+        level, identity)
+      .toDF("cell", "line_id", "l_full", "l_wkb")
+    val (ringLru, lineLru) = (new GeomLru, new GeomLru)
     val refine = udf { (cell: Long, bid: Long, bWkb: Array[Byte],
                         lid: Long, lWkb: Array[Byte]) =>
-      helper.crosses(cell, bid, bWkb, lid, lWkb)
+      ringLru.get((cell, bid), bWkb).intersects(lineLru.get((cell, lid), lWkb).getGeometry)
     }
-    lineCover.join(ringCover, "cell")
+    segs.join(rings, "cell")
       .filter(refine(col("cell"), col("boundary_id"), col("b_wkb"),
         col("line_id"), col("l_wkb")))
       .select(col("line_id"), col("boundary_id"))
       .distinct()
-  }
-
-  /** Geometry ∩ the cell's expanded envelope for LINEAL inputs — all
-    * components kept (a clip that degenerates to a point still witnesses
-    * `intersects`). Falls back to the unclipped geometry on an empty
-    * overlay or a TopologyException (the DistributedPip.clipToCell
-    * robustness rule). */
-  private def clipLineal(geom: Geometry, cell: Long): Geometry = {
-    val (lonMin, latMin, lonMax, latMax) = CellIndex.bounds(cell)
-    val eps = (lonMax - lonMin) * 1e-6
-    val window = geom.getFactory.toGeometry(new org.locationtech.jts.geom.Envelope(
-      lonMin - eps, lonMax + eps, latMin - eps, latMax + eps))
-    val clipped =
-      try geom.intersection(window)
-      catch { case _: org.locationtech.jts.geom.TopologyException => return geom }
-    if (clipped.isEmpty) geom else clipped
-  }
-
-  /** Per-task refine kernel — two shared bounded [[GeomLru]]s of the
-    * deserialized clips (the join co-locates by cell, so each task sees
-    * few distinct (cell, id) pairs per side). */
-  private class CrossRefine extends Serializable {
-    private val rings =
-      new GeomLru[org.locationtech.jts.geom.prep.PreparedGeometry](
-        DistributedPip.CacheCap, DistributedPip.preparedLoader)
-    private val lns =
-      new GeomLru[Geometry](DistributedPip.CacheCap, wkb => new WKBReader().read(wkb))
-    def crosses(cell: Long, bid: Long, bWkb: Array[Byte],
-                lid: Long, lWkb: Array[Byte]): Boolean =
-      rings.get((cell, bid), bWkb).intersects(lns.get((cell, lid), lWkb))
   }
 }

@@ -155,10 +155,16 @@ class SpatialEdgeCaseSpec extends AnyFunSuite {
       (2L, lineWkb(178.5, 0.0, 179.5, 0.0)),
       // far away
       (3L, lineWkb(170.0, 0.0, 171.0, 0.0)))
-    val got = graft.spatial.SpatialOps.crossings(spark,
-        lines.toDF("line_id", "wkb"), Seq(seam), level = 10)
-      .collect().map(_.getLong(0)).toSet
-    assert(got == Set(0L, 2L), s"got $got")
+    // the broadcast ring index and the fact×fact cover join both take the
+    // raw polygon's boundary before normalizing the seam
+    val lineDf = lines.toDF("line_id", "wkb")
+    for (crossed <- Seq(
+        graft.spatial.SpatialOps.crossings(spark, lineDf, Seq(seam), level = 10),
+        graft.spatial.SpatialOps.crossingsDistributed(spark, lineDf,
+          Seq((seam.id, seam.wkb)).toDF("boundary_id", "wkb"), level = 10))) {
+      val got = crossed.collect().map(_.getLong(0)).toSet
+      assert(got == Set(0L, 2L), s"got $got")
+    }
   }
 
   test("border-cell clip shrinks shuffle payload and preserves exact containment") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.bigraph.{Assembly, BigraphJson}
 import graft.hier.{Hierarchy, PlacePipeline}
 import graft.synth.SynthWorld
 
@@ -88,5 +89,52 @@ class SynthHierarchySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val multi = t.buildings.groupBy("bname").count().filter(col("count") > 1).count()
     assert(multi == 0)
+  }
+
+  test("S5/S6/S7 round trips on a synthetic build: JSON write/read, param-mode load, dot") {
+    val cfg = SynthWorld.Config(seed = 5L, gridP = 2, gridC = 1,
+      streetsPerCity = 3, buildingsPerStreet = 2)
+    val (bounds, elems) = SynthWorld.boundaryExtracts(spark, cfg)
+    val t = PlacePipeline.build(spark, elems, Hierarchy.metadata(bounds))
+    def tmpJson(): String = {
+      val f = java.nio.file.Files.createTempFile("graft-synth", ".json")
+      f.toFile.deleteOnExit()
+      f.toString
+    }
+
+    // S5 → S6: the written JSON reads back to the tables' canonical form
+    val path = tmpJson()
+    Assembly.writeJson(spark, t, path)
+    val reread = BigraphJson.readGolden(path)
+    val direct = BigraphJson.canonOf(t)
+    assert(reread.boundaryChains == direct.boundaryChains)
+    assert(reread.streetChains == direct.streetChains)
+    assert(reread.buildingChains == direct.buildingChains)
+    assert(reread.junctionsByStreet == direct.junctionsByStreet)
+    assert(reread.edges == direct.edges)
+    assert((reread.nNodes, reread.nEdges, reread.nOpen) ==
+      (direct.nNodes, direct.nEdges, direct.nOpen))
+    // S8: canonOf's counts are the pipeline's; one open name per city
+    val st = PlacePipeline.stats(t)
+    assert((direct.nNodes, direct.nEdges, direct.nOpen) == (st.nNodes, st.nEdges, st.nOpenNames))
+    assert(st.nOpenNames == cfg.gridP * cfg.gridP * cfg.gridC * cfg.gridC)
+
+    // -id-parameter JSON loads back with names intact and no ID atoms
+    val stParam = PlacePipeline.stats(t, idParameter = true)
+    val paramPath = tmpJson()
+    Assembly.writeJson(spark, t, paramPath, idParameter = true)
+    val loaded = Assembly.loadJson(spark, paramPath)
+    assert(loaded.places.count() == stParam.nNodes)
+    assert(loaded.countCtrl("Building") == stParam.nBuildings)
+    assert(!java.nio.file.Files.readString(java.nio.file.Paths.get(paramPath)).contains("\"ID\""),
+      "param mode must not emit ID atoms")
+
+    // S7: each k-port junction hyperedge of the loaded state renders as a
+    // (k-1)-arc dashed chain
+    val dashed = Assembly.toDot(loaded).linesIterator.count(_.endsWith("[style=dashed dir=none];"))
+    import org.apache.spark.sql.functions.{col, sum}
+    val nHyper = loaded.junctionEdges.groupBy("edge_key").count()
+      .filter(col("count") > 1).agg(sum(col("count") - 1)).collect()(0).getLong(0)
+    assert(dashed > 0 && dashed == nHyper, s"dot dashed arcs $dashed != hyperedge chain arcs $nHyper")
   }
 }
