@@ -253,8 +253,8 @@ object SparkEntry {
                                // raster↔vector: rasterize the points at
                                // level 8, then per-zone (all 21 rects,
                                // overlapping) count+sum of cells whose
-                               // centroid the zone contains — cover prejoin
-                               // + PIP refine via BoundaryCellIndex
+                               // centroid the zone contains — the cover join
+                               // on cell, broadcast, + PIP refine
                                val raster = graft.spatial.Raster.rasterize(
                                  s, synthPoints(s, d), level = 8)
                                graft.spatial.Raster.zonalStats(s, raster,

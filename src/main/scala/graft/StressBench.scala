@@ -249,7 +249,7 @@ object StressBench {
     }
 
     // fact×fact crossings: the ZONE side grows 10× over a fixed 3k-line
-    // table — the regime where the broadcast ring index dies. Each ~0.1°
+    // table — the regime where a broadcast ring cover would not fit. Each ~0.1°
     // rect ring covers O(perimeter) level-11 cells, so cover rows, the one
     // cell shuffle, and the refine all grow linearly in zones
     out += "q46_crossings_manyzones" -> measure(spark, "q46_crossings_manyzones", 1000L) { z =>

@@ -12,9 +12,11 @@ import scala.collection.mutable
   * REPRESENTATION INVARIANT: records handed TO the engine carry the raw
   * source encoding (seam-crossing polygons may run past lon ±180); records
   * read back FROM a built [[BoundaryCellIndex]] carry seam-NORMALIZED wkb.
-  * [[graft.spatial.SpatialOps.crossings]] requires the RAW form (it must
-  * take the border ring before normalizing, or the ±180 clip line would
-  * read as a border) — do not feed an index's boundaries back into it. */
+  * [[graft.spatial.SpatialOps.crossings]] requires the RAW form: its
+  * cover table's `shape` takes the border ring before
+  * [[DistributedPip.coverClips]] normalizes the seam, and the ring of an
+  * already-normalized polygon would read the ±180 clip line as a border —
+  * do not feed an index's boundaries back into it. */
 case class SpatialBoundary(id: Long, level: Int, chain: String, wkb: Array[Byte])
 
 /** Broadcast side of the spatial containment join (J7 in SURVEY.md §2.3):

@@ -8,6 +8,22 @@ import org.locationtech.jts.geom.util.PolygonExtracter
 import org.locationtech.jts.io.{WKBReader, WKBWriter}
 import graft.cells.CellIndex
 
+/** How a cover join on `cell` runs: a join hint on the cover side. Spark's
+  * size estimate cannot choose for us — it sizes the [[DistributedPip.coverClips]]
+  * flatMap as its input scaled by row width and never counts the cells per
+  * geometry, so unhinted it broadcasts a cover far larger than it thinks
+  * (and at test scale never runs the shuffle join at all). */
+private[spatial] sealed abstract class CoverJoin(val hint: String)
+
+private[spatial] object CoverJoin {
+  /** The geometries arrived as a driver-resident Seq, so their cover is
+    * small by contract: broadcast it and stream the fact side past it. */
+  case object Broadcast extends CoverJoin("broadcast")
+  /** The geometries are a table of any size: sort-merge both sides on
+    * cell, so no executor ever holds the whole cover. */
+  case object Merge extends CoverJoin("merge")
+}
+
 /** Distributed point-in-polygon containment join — the fact×fact path for
   * J7 when the zone side is NOT broadcastable (the broadcast
   * [[BoundaryCellIndex]] covers the planet-admin case at ~10⁷ cover cells;
@@ -15,10 +31,11 @@ import graft.cells.CellIndex
   * building footprints, generated isochrones).
   *
   * Shape: zones become the [[coverClips]] table; points key by their
-  * level-`level` cell; ONE shuffle on cell id joins them; the refine is an
-  * exact JTS point-in-polygon through a [[GeomLru]] of the prepared clips.
-  * Hot cells (a dense metro) split under AQE skew handling; pre-salting the
-  * point side composes via [[graft.ops.Skew]] if an exchange is reused.
+  * level-`level` cell; ONE join on cell id, run as a [[CoverJoin]]
+  * strategy, pairs them; the refine is an exact JTS point-in-polygon
+  * through a [[GeomLru]] of the prepared clips. Hot cells (a dense metro)
+  * split under AQE skew handling; pre-salting the point side composes via
+  * [[graft.ops.Skew]] if an exchange is reused.
   *
   * Same containment predicate as the broadcast path
   * (BoundaryCellIndex.foreachContaining): `full || prepared.contains(pt)`.
@@ -35,6 +52,9 @@ object DistributedPip {
     * Returns (point_id, lat, lon, payload..., boundary_id) — one row per
     * containing zone (zones may overlap/nest).
     *
+    * Strategy: [[CoverJoin.Merge]] — `zones` is a table, and its cover's
+    * fan-out (cells per zone) is invisible to the size estimate.
+    *
     * NULL-COORDINATE POLICY: rows with a null lat or lon are DROPPED, by
     * the explicit filter below (they can be contained by no zone). Without
     * it the drop would still happen — but silently, at two different
@@ -42,14 +62,18 @@ object DistributedPip {
     * primitive params make Spark skip the call and null the predicate) —
     * so the policy is stated here as contract rather than left emergent. */
   def containsJoin(spark: SparkSession, points: DataFrame, zones: DataFrame,
-                   level: Int): DataFrame = {
+                   level: Int): DataFrame =
+    containsJoin(spark, points, zones, level, CoverJoin.Merge)
+
+  private[spatial] def containsJoin(spark: SparkSession, points: DataFrame, zones: DataFrame,
+                                    level: Int, strategy: CoverJoin): DataFrame = {
     graft.functions.GeoFunctions.register(spark)
     require(points.columns.forall(c => !ReservedCols.contains(c)),
       s"point columns collide with reserved names: ${ReservedCols.mkString(",")}")
     require(Seq("id", "lat", "lon").forall(points.columns.contains),
       s"points must carry (id, lat, lon); got ${points.columns.mkString(",")}")
 
-    val cover = coverClips(zones.select(col("boundary_id"), col("wkb")), level, identity)
+    val cover = coverClips(zones.select(col("boundary_id"), col("wkb")), level, (_, g) => g)
       .toDF("cell", "boundary_id", "pip_full", "pip_wkb")
     val ptCols = points.columns
     val pts = points
@@ -72,18 +96,26 @@ object DistributedPip {
         zone.contains(zone.getGeometry.getFactory.createPoint(new Coordinate(lon, lat)))
       }
     }
-    pts.join(cover, "cell")
+    pts.join(cover.hint(strategy.hint), "cell")
       .filter(refine(col("cell"), col("boundary_id"), col("pip_full"),
         col("pip_wkb"), col("lat"), col("lon")))
       .select(outCols: _*)
   }
 
-  /** The cover table of the fact×fact spatial joins ([[containsJoin]],
-    * [[SpatialOps.crossingsDistributed]]): (id, wkb) rows flatMap to
-    * (cell, id, full, wkb), one row per cell of the geometry's UNIFORM
-    * level-`level` cover. `shape` maps the raw geometry before the seam is
-    * normalized (a crossing ring is the RAW polygon's boundary: normalizing
-    * the polygon first would add edges along the ±180 clip line).
+  /** Driver-resident boundaries as the (boundary_id, wkb) table the cover
+    * joins read — raw wkb, as the boundaries were handed in. */
+  private[spatial] def boundaryTable(spark: SparkSession, bs: Seq[SpatialBoundary]): DataFrame = {
+    import spark.implicits._
+    bs.map(b => (b.id, b.wkb)).toDF("boundary_id", "wkb")
+  }
+
+  /** The cover table of every spatial cover join ([[containsJoin]],
+    * [[SpatialOps.crossings]], [[Raster.zonalStats]] and their forms):
+    * (id, wkb) rows flatMap to (cell, id, full, wkb), one row per cell of
+    * the geometry's UNIFORM level-`level` cover. `shape` maps (id, raw
+    * geometry) before the seam is normalized (a crossing ring is the RAW
+    * polygon's boundary: normalizing the polygon first would add edges
+    * along the ±180 clip line) and may reject a geometry loudly.
     *
     * For a polygon, `full` cells (strictly inside) skip the exact refine
     * and drop their payload; every other cell ships the geometry CLIPPED to
@@ -93,16 +125,17 @@ object DistributedPip {
     * Lines have no `full` cells. An invalid polygon (bowtie fence,
     * self-touching footprint) ships UNCLIPPED: the overlay clip could pick
     * a different valid reading than the prepared-predicate refine on the
-    * raw geometry, and the broadcast path refines the raw one; its bytes
+    * raw geometry, and [[BoundaryCellIndex]] refines the raw one; its bytes
     * are written once per geometry, not once per cell. */
-  private[spatial] def coverClips(rows: DataFrame, level: Int, shape: Geometry => Geometry)
+  private[spatial] def coverClips(rows: DataFrame, level: Int,
+                                  shape: (Long, Geometry) => Geometry)
       : Dataset[(Long, Long, Boolean, Array[Byte])] = {
     import rows.sparkSession.implicits._
     rows.as[(Long, Array[Byte])].mapPartitions { it =>
       val reader = new WKBReader()
       val writer = new WKBWriter()
       it.flatMap { case (id, wkb) =>
-        val geom = CellIndex.normalizeSeam(shape(reader.read(wkb)))
+        val geom = CellIndex.normalizeSeam(shape(id, reader.read(wkb)))
         val polygonal = geom.getDimension == 2
         val prep = if (polygonal) PreparedGeometryFactory.prepare(geom) else null
         val clip = !polygonal || geom.isValid

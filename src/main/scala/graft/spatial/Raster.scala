@@ -2,7 +2,6 @@ package graft.spatial
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cells.CellIndex
 
 /** Raster↔vector operators over the cell grid (north rule: "H3/S2 index,
   * point-in-polygon, kNN, raster↔vector").
@@ -28,35 +27,31 @@ object Raster {
   /** Raster→vector zonal statistics: per zone polygon, the count and sum of
     * raster cells whose CENTROID falls inside it (the standard raster
     * convention; zones may overlap — a cell contributes to every zone
-    * containing it). Zones are a broadcast BoundaryCellIndex: cover-cell
-    * prejoin + exact PIP refine per centroid, so the raster fact side
-    * streams through one narrow pass + one groupBy. */
+    * containing it). The centroids run through
+    * [[DistributedPip.containsJoin]]'s cover join with the raster value as
+    * a payload column, so the whole operator is the one cover join plus the
+    * final groupBy — no second shuffle to re-attach `v`.
+    *
+    * Strategy: [[CoverJoin.Broadcast]] — the zones are a driver-resident
+    * Seq, so their cover is small by contract and the raster streams past
+    * it. */
   def zonalStats(spark: SparkSession, raster: DataFrame,
-                 zones: Seq[SpatialBoundary], coverLevel: Int): DataFrame = {
-    import spark.implicits._
-    val idx = spark.sparkContext.broadcast(BoundaryCellIndex.build(zones, coverLevel))
-    raster.select(col("cell"), col("v")).as[(Long, Long)]
-      .mapPartitions { it =>
-        val ix = idx.value
-        it.flatMap { case (cell, v) =>
-          val (clat, clon) = CellIndex.centroid(cell)
-          ix.containing(clat, clon).iterator.map(z => (z.id, v))
-        }
-      }
-      .toDF("boundary_id", "v")
-      .groupBy("boundary_id")
-      .agg(count(lit(1)).as("n_cells"), sum(col("v")).as("sum_v"))
-  }
+                 zones: Seq[SpatialBoundary], coverLevel: Int): DataFrame =
+    zonal(spark, raster, DistributedPip.boundaryTable(spark, zones), coverLevel,
+      CoverJoin.Broadcast)
 
   /** Fact×fact zonal statistics: same semantics as [[zonalStats]] but with
-    * zones as a TABLE (boundary_id, wkb) routed through
-    * [[DistributedPip.containsJoin]]'s cover machinery — the path for zone
-    * sets beyond executor memory (per-tenant fences at 10⁸ zones), where
-    * the broadcast index cannot be built. The raster value rides the PIP
-    * join as a payload column, so the whole operator is the one cover-join
-    * shuffle plus the final groupBy — no second shuffle to re-attach `v`. */
+    * zones as a TABLE (boundary_id, wkb) — the path for zone sets beyond
+    * executor memory (per-tenant fences at 10⁸ zones).
+    *
+    * Strategy: [[CoverJoin.Merge]] — the zone cover's fan-out (cells per
+    * zone) is invisible to the size estimate. */
   def zonalStatsDistributed(spark: SparkSession, raster: DataFrame, zones: DataFrame,
-                            coverLevel: Int): DataFrame = {
+                            coverLevel: Int): DataFrame =
+    zonal(spark, raster, zones, coverLevel, CoverJoin.Merge)
+
+  private def zonal(spark: SparkSession, raster: DataFrame, zones: DataFrame,
+                    coverLevel: Int, strategy: CoverJoin): DataFrame = {
     // centroid via the registered codegen expressions — no per-row UDF serde
     // on the fact side of the PIP join
     graft.functions.GeoFunctions.register(spark)
@@ -64,7 +59,7 @@ object Raster {
       .withColumn("lat", graft.functions.GeoFunctions.cell_centroid_lat(col("id")))
       .withColumn("lon", graft.functions.GeoFunctions.cell_centroid_lon(col("id")))
       .select(col("id"), col("lat"), col("lon"), col("v"))
-    DistributedPip.containsJoin(spark, pts, zones, coverLevel)
+    DistributedPip.containsJoin(spark, pts, zones, coverLevel, strategy)
       .groupBy("boundary_id")
       .agg(count(lit(1)).as("n_cells"), sum(col("v")).as("sum_v"))
   }

@@ -1,17 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.synth.SynthWorld
 import graft.text.NearDup
 import graft.web.{Flagship, Geocode}
 
 /** Structured Streaming layer (SURVEY.md §2.10 — extension, not in the
   * batch-only reference): the geocode pipeline as a streaming ingest,
-  * watermarked page-ingest metrics, and agent motion as keyed state
-  * transitions (the B2-B5 reaction semantics replayed over an event
-  * stream via flatMapGroupsWithState).
+  * watermarked page-ingest metrics, streaming dedup and curation, and
+  * near-dup against a static corpus index.
   */
 object Streams {
 
@@ -127,44 +125,4 @@ object Streams {
       .cache()
     (banded, toks)
   }
-
-  // ── agent motion as keyed streaming state ──
-
-  case class MotionEvent(agent: String, seq: Long, action: String, target: Long)
-  case class AgentLoc(agent: String, seq: Long, location: Long, action: String)
-
-  /** Replays B2-B5 as a per-agent state machine: `enter t` pushes the agent
-    * into t, `leave` pops to the parent (the caller supplies parentOf as a
-    * broadcastable map), `move t` swaps streets laterally. Emits one
-    * location record per applied event; idempotent on no-ops. */
-  def agentMotion(events: Dataset[MotionEvent], parentOf: Map[Long, Long])
-                 (implicit spark: SparkSession): Dataset[AgentLoc] = {
-    import spark.implicits._
-    val parentB = spark.sparkContext.broadcast(parentOf)
-    events
-      .groupByKey(_.agent)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        stateFn(parentB))
-  }
-
-  private def stateFn(parentB: org.apache.spark.broadcast.Broadcast[Map[Long, Long]])
-  : (String, Iterator[MotionEvent], GroupState[Long]) => Iterator[AgentLoc] =
-    (agent, events, state) => {
-      val parents = parentB.value
-      var loc = state.getOption.getOrElse(-1L)
-      val out = events.toSeq.sortBy(_.seq).flatMap { e =>
-        val next = e.action match {
-          case "enter" if parents.get(e.target).contains(loc) || loc == -1L => Some(e.target)
-          case "leave" => parents.get(loc)
-          case "move" if parents.get(e.target) == parents.get(loc) => Some(e.target)
-          case _ => None
-        }
-        next match {
-          case Some(n) if n != loc => loc = n; Some(AgentLoc(agent, e.seq, n, e.action))
-          case _ => None
-        }
-      }
-      state.update(loc)
-      out.iterator
-    }
 }

@@ -21,7 +21,8 @@ import graft.web.Flagship
   *     operator source and OPTIMIZATION notes.
   *   runMain graft.tools.Inspect profile <sfDir> [q…]
   *     runs each query twice (JIT warm) and prints the second run's
-  *     build/plan/exec seconds and its jobs/stages with wall, task time, GC.
+  *     build/plan/exec seconds and its jobs/stages with wall, task time, GC
+  *     and shuffle-write bytes.
   *
   * [[plans]] and [[profile]] leave the session running, so a spec can call
   * them on a shared session.
@@ -41,13 +42,13 @@ object Inspect {
       val j = inflight.remove(je.jobId)
       if (j != null) done.add((j.id, j.desc, (je.time - j.start) / 1e3))
     }
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Double, Double, Double, Long)]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Double, Double, Double, Long, Long)]()
     override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
       val i = sc.stageInfo
       val wall = (for (a <- i.completionTime; b <- i.submissionTime) yield (a - b) / 1e3).getOrElse(-1.0)
       val m = i.taskMetrics
       stages.add((i.stageId, i.name.take(80), wall, m.executorRunTime / 1e3,
-        m.jvmGCTime / 1e3, i.numTasks.toLong))
+        m.jvmGCTime / 1e3, i.numTasks.toLong, m.shuffleWriteMetrics.bytesWritten))
     }
     def reset(): Unit = { done.clear(); stages.clear() }
     def dump(label: String): Unit = {
@@ -57,8 +58,9 @@ object Inspect {
       js.foreach { case (id, d, s) => if (s > 0.2) println(f"[hier]   job $id%4d $s%6.2f s  $d") }
       val ss = stages.asScala.toSeq.sortBy(_._1)
       println(f"[hier] --- stages for $label: n=${ss.size}, wallSum=${ss.map(_._3).sum}%.2f s, " +
-        f"taskTimeSum=${ss.map(_._4).sum}%.2f s, gcSum=${ss.map(_._5).sum}%.2f s")
-      ss.foreach { case (id, n, w, tt, gc, nt) =>
+        f"taskTimeSum=${ss.map(_._4).sum}%.2f s, gcSum=${ss.map(_._5).sum}%.2f s, " +
+        s"shuffleWrite=${ss.map(_._7).sum} B")
+      ss.foreach { case (id, n, w, tt, gc, nt, _) =>
         if (w > 0.2) println(f"[hier]   stage $id%4d wall=$w%6.2f tt=$tt%7.2f gc=$gc%5.2f tasks=$nt%3d  $n") }
     }
   }

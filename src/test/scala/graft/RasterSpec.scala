@@ -48,12 +48,22 @@ class RasterSpec extends AnyFunSuite {
         math.floorMod(SynthWorld.mix(i * 7), 79990L) / 10000.0)
     }.toDF("lat", "lon")
     val raster = Raster.rasterize(spark, pts, level = 8)
-    val want = Raster.zonalStats(spark, raster, zones, coverLevel = 8).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // the oracle: each cell's centroid probed against the broadcast cover
+    // index, one point at a time on the driver
+    val idx = graft.spatial.BoundaryCellIndex.build(zones, 8)
+    val want = raster.collect().toSeq
+      .flatMap { r =>
+        val (lat, lon) = CellIndex.centroid(r.getLong(0))
+        idx.containing(lat, lon).map(z => (z.id, r.getLong(1)))
+      }
+      .groupBy(_._1).map { case (id, vs) => id -> (vs.size.toLong, vs.map(_._2).sum) }
     val zonesDf = zones.map(b => (b.id, b.wkb)).toDF("boundary_id", "wkb")
-    val got = Raster.zonalStatsDistributed(spark, raster, zonesDf, coverLevel = 8).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(got == want)
+    for (stats <- Seq(
+        Raster.zonalStats(spark, raster, zones, coverLevel = 8),
+        Raster.zonalStatsDistributed(spark, raster, zonesDf, coverLevel = 8))) {
+      val got = stats.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(got == want)
+    }
     // country sums nearly all points (edge cells whose centroid falls
     // outside the rect drop their points — the documented centroid rule)
     assert(want.nonEmpty && want(1L)._2 >= 450L)

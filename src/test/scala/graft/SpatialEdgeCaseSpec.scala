@@ -155,8 +155,8 @@ class SpatialEdgeCaseSpec extends AnyFunSuite {
       (2L, lineWkb(178.5, 0.0, 179.5, 0.0)),
       // far away
       (3L, lineWkb(170.0, 0.0, 171.0, 0.0)))
-    // the broadcast ring index and the fact×fact cover join both take the
-    // raw polygon's boundary before normalizing the seam
+    // both crossing forms take the raw polygon's boundary before
+    // normalizing the seam
     val lineDf = lines.toDF("line_id", "wkb")
     for (crossed <- Seq(
         graft.spatial.SpatialOps.crossings(spark, lineDf, Seq(seam), level = 10),
@@ -164,6 +164,23 @@ class SpatialEdgeCaseSpec extends AnyFunSuite {
           Seq((seam.id, seam.wkb)).toDF("boundary_id", "wkb"), level = 10))) {
       val got = crossed.collect().map(_.getLong(0)).toSet
       assert(got == Set(0L, 2L), s"got $got")
+    }
+  }
+
+  test("crossings reject a polygon on the line side, naming its line_id") {
+    import spark.implicits._
+    val box = SpatialBoundary(1L, 2, "Box", rectWkb(0.0, 40.0, 8.0, 48.0))
+    // a polygon "line" would get payload-free full cells the refine cannot
+    // read; both forms must fail loudly before the join instead
+    val lineDf = Seq((7L, rectWkb(0.5, 40.5, 1.5, 41.5))).toDF("line_id", "wkb")
+    for (run <- Seq(
+        () => graft.spatial.SpatialOps.crossings(spark, lineDf, Seq(box), level = 8).collect(),
+        () => graft.spatial.SpatialOps.crossingsDistributed(spark, lineDf,
+          Seq((box.id, box.wkb)).toDF("boundary_id", "wkb"), level = 8).collect())) {
+      val e = intercept[Exception](run())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msgs.contains("line_id 7 is a Polygon"), msgs)
     }
   }
 

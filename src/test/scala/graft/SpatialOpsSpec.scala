@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
-import org.locationtech.jts.io.WKBWriter
+import org.locationtech.jts.io.{WKBReader, WKBWriter}
+import graft.cells.CellIndex
 import graft.hier.Hierarchy
 import graft.spatial.SpatialOps
 import graft.synth.SynthWorld
@@ -68,20 +69,33 @@ class SpatialOpsSpec extends AnyFunSuite {
     val w = new WKBWriter()
     // deterministic random segments over/around the rect world — interior,
     // border-crossing, fully-outside, and multi-boundary spans all occur
-    val lines = (0L until 200L).map { i =>
+    val segs = (0L until 200L).map { i =>
       val lat0 = 39.5 + math.floorMod(SynthWorld.mix(i), 9000L) / 1000.0
       val lon0 = -0.5 + math.floorMod(SynthWorld.mix(i * 3), 9000L) / 1000.0
       val dlat = math.floorMod(SynthWorld.mix(i * 7), 3000L) / 1000.0 - 1.5
       val dlon = math.floorMod(SynthWorld.mix(i * 11), 3000L) / 1000.0 - 1.5
-      (i, w.write(gf.createLineString(Array(
-        new Coordinate(lon0, lat0), new Coordinate(lon0 + dlon, lat0 + dlat)))))
-    }.toDF("line_id", "wkb")
+      (i, gf.createLineString(Array(
+        new Coordinate(lon0, lat0), new Coordinate(lon0 + dlon, lat0 + dlat))))
+    }
+    val lines = segs.map { case (i, g) => (i, w.write(g)) }.toDF("line_id", "wkb")
+    // the oracle: every (line, boundary) pair against the raw polygon's
+    // border ring, no cells and no clipping
+    val reader = new WKBReader()
+    val want = (for {
+      (i, g) <- segs
+      b <- bs
+      if CellIndex.normalizeSeam(g).intersects(
+        CellIndex.normalizeSeam(reader.read(b.wkb).getBoundary))
+    } yield (i, b.id)).toSet
     val zones = bs.map(b => (b.id, b.wkb)).toDF("boundary_id", "wkb")
-    val got = SpatialOps.crossingsDistributed(spark, lines, zones, level = 11)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = SpatialOps.crossings(spark, lines, bs, level = 11)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == want, s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+    def pairs(crossed: org.apache.spark.sql.DataFrame) =
+      crossed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val broadcast = pairs(SpatialOps.crossings(spark, lines, bs, level = 11))
+    val factFact = pairs(SpatialOps.crossingsDistributed(spark, lines, zones, level = 11))
+    assert(factFact == broadcast,
+      s"missing=${(broadcast -- factFact).take(5)} extra=${(factFact -- broadcast).take(5)}")
+    for (got <- Seq(broadcast, factFact))
+      assert(got == want, s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     assert(want.size > 100, s"stress mix should cross often, got ${want.size}")
   }
 

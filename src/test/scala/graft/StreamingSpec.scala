@@ -113,31 +113,4 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == Set((10L, 1L, 4), (12L, 2L, 4)), s"got $got")
   }
-
-  test("flatMapGroupsWithState replays agent motion deterministically") {
-    import spark.implicits._
-    implicit val s = spark
-    implicit val sqlCtx = spark.sqlContext
-    // tiny world: boundary 1 ⊃ streets 10, 11 ⊃ buildings 100 (in 10)
-    val parents = Map(10L -> 1L, 11L -> 1L, 100L -> 10L)
-    val input = MemoryStream[Streams.MotionEvent]
-    val q = Streams.agentMotion(input.toDS(), parents)
-      .writeStream.format("memory").queryName("motion_out")
-      .outputMode("append").start()
-    input.addData(
-      Streams.MotionEvent("a1", 1, "enter", 1L),   // into boundary
-      Streams.MotionEvent("a1", 2, "enter", 10L),  // into street 10
-      Streams.MotionEvent("a1", 3, "enter", 100L)) // into building
-    q.processAllAvailable()
-    input.addData(
-      Streams.MotionEvent("a1", 4, "leave", 0L),   // back to street 10
-      Streams.MotionEvent("a1", 5, "move", 11L),   // lateral street move
-      Streams.MotionEvent("a1", 6, "move", 11L))   // no-op (already there)
-    q.processAllAvailable()
-    q.stop()
-    val locs = spark.table("motion_out").orderBy("seq")
-      .collect().map(r => (r.getAs[Long]("seq"), r.getAs[Long]("location")))
-    assert(locs.toSeq == Seq((1L, 1L), (2L, 10L), (3L, 100L), (4L, 10L), (5L, 11L)),
-      s"got ${locs.toSeq}")
-  }
 }
