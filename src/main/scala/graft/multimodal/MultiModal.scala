@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions._
   * a typed Dataset: one decoder instance per partition, rows streamed
   * through in batch.
   *
-  * Operators: decode→feature-extract (with per-kind frame sampling),
-  * resize (block-average downsample — real array math over the byte grid),
-  * and embedding-cosine near-dup over the extracted features.
+  * Operators: synthetic media, and decode→feature-extract (with per-kind
+  * frame sampling) summarised per kind by [[featureStats]] (q30).
   */
 object MultiModal {
 
@@ -34,37 +33,6 @@ object MultiModal {
       h = h * 31 + bytes(i)
       out(math.floorMod(h, dim).toInt) += ((h >>> 32).toInt % 1000) / 1000.0f
       i += 1
-    }
-    out
-  }
-
-  /** Resize kernel: block-average downsample of a (w × h) byte grid to
-    * (tw × th). The array math is real (what a production resize does after
-    * decode); only the pixel source is the stub byte grid. */
-  def resizeStub(bytes: Array[Byte], w: Int, h: Int, tw: Int, th: Int): Array[Byte] = {
-    require(tw > 0 && th > 0 && tw <= w && th <= h, s"bad resize $w x $h -> $tw x $th")
-    val out = new Array[Byte](tw * th)
-    var ty = 0
-    while (ty < th) {
-      var tx = 0
-      while (tx < tw) {
-        val x0 = tx * w / tw; val x1 = math.max(x0 + 1, (tx + 1) * w / tw)
-        val y0 = ty * h / th; val y1 = math.max(y0 + 1, (ty + 1) * h / th)
-        var sum = 0L; var n = 0
-        var y = y0
-        while (y < y1) {
-          var x = x0
-          while (x < x1) {
-            val idx = y * w + x
-            if (idx < bytes.length) { sum += bytes(idx) & 0xff; n += 1 }
-            x += 1
-          }
-          y += 1
-        }
-        out(ty * tw + tx) = (if (n == 0) 0 else sum / n).toByte
-        tx += 1
-      }
-      ty += 1
     }
     out
   }
@@ -112,23 +80,6 @@ object MultiModal {
       }
     }
   }
-
-  /** Embedding-cosine near-dup over the extracted features: pairs with
-    * cosine ≥ minCosine (planted byte-identical media have cosine 1).
-    * Routes through the shared [[graft.sim.Ann.cosinePairsOf]] machinery:
-    * exact = true is the guarded all-pairs path (loud row bound);
-    * exact = false is the IVF candidate path — the corpus-scale shape
-    * (candidates sub-quadratic; byte-identical media share an argmax
-    * centroid, so recall of true duplicates is ~certain). The pair
-    * machinery evaluates `feats` several times: a caller that reuses
-    * computed features (decode + extract) caches them first. */
-  def mediaNearDup(feats: DataFrame, minCosine: Double = 0.999,
-                   exact: Boolean = true, maxRows: Long = 65536L): DataFrame =
-    graft.sim.Ann.cosinePairsOf(feats.sparkSession,
-        feats.select(col("media_id").as("vec_id"), col("feature").as("embedding")),
-        exact, maxRows)
-      .filter(col("cos") >= minCosine)
-      .select(col("id_a"), col("id_b"), col("cos"))
 
   /** Query-shaped entry: features + per-kind stats over synthetic media. */
   def featureStats(spark: SparkSession, n: Long): DataFrame = {

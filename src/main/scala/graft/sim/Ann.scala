@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *    no driver materialization; inherently O(n²) work (that is what "exact
   *    against the whole corpus" means), but every stage is distributed and
   *    codegen'd, so it survives as long as the n² pair count does.
-  *  - [[ivfTopK]] / [[ivfSearch]]: spherical k-means IVF as the scale path —
+  *  - [[ivfTopK]]: spherical k-means IVF as the scale path —
   *    centroid count and nprobe derive from the corpus size
   *    ([[ivfParams]]), so candidate pairs stay sub-quadratic.
   *  - [[cosineNearDup]]: unordered pairs above a cosine threshold, over the
@@ -131,7 +131,7 @@ object Ann {
     * Spherical k-means over a deterministic sample trains `c` unit
     * centroids (tiny, broadcast); every vector is assigned to its argmax-dot
     * centroid; a query probes its `nprobe` nearest centroids. The one
-    * candidate join ([[candidates]]) scores each pair's exact cosine and
+    * candidate join ([[selfCandidates]]) scores each pair's exact cosine and
     * [[rerank]] keeps the top k.
     *
     * c/nprobe default to 0 = AUTO: derived from the corpus size by
@@ -143,27 +143,6 @@ object Ann {
               maxTrainSamples: Long = 100000L): DataFrame =
     rerank(selfCandidates(emb(spark, dir), c, nprobe, iters, maxTrainSamples), k)
 
-  /** IVF ANN SERVING shape: rank each row of `queries` (vec_id, embedding)
-    * against an independent `corpus` (vec_id, embedding) — the
-    * query-batch-vs-index search a retrieval pipeline runs (self-search
-    * [[ivfTopK]] is the dedup/audit shape). Centroids train on the CORPUS
-    * sample, corpus rows assign to their argmax centroid, and each query
-    * probes its `nprobe` nearest centroids; the candidate join and re-rank
-    * are shared with ivfTopK. The query side is consumed ONCE (its probe);
-    * the corpus is evaluated once per consumer (count guard, k-means
-    * sample, assignment), so a computed corpus should be cached by the
-    * caller.
-    * Output (vec_id = query id, rank, neighbor_id = corpus id, cos_sim);
-    * self-exclusion is OFF — the id spaces are unrelated tables. */
-  def ivfSearch(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
-                k: Int = 3, c: Int = 0, nprobe: Int = 0, iters: Int = 5,
-                maxTrainSamples: Long = 100000L): DataFrame = {
-    val rows = corpusRows(corpus)
-    val (assign, probe) = ivfIndex(rows, c, nprobe, iters, maxTrainSamples)
-    rerank(candidates(normed(queries).withColumn("cluster", probe),
-      rows.withColumn("cluster", assign), excludeSelf = false), k)
-  }
-
   /** Candidate-pair count for the given corpus/params — the measurable
     * scale contract (NearDupAnnSpec asserts it stays ≤ nprobe·n^1.5·slack
     * and grows sub-quadratically across corpus sizes). Only the ids reach
@@ -172,45 +151,34 @@ object Ann {
                         iters: Int = 5, maxTrainSamples: Long = 100000L): Long =
     selfCandidates(emb(spark, dir), c, nprobe, iters, maxTrainSamples).count()
 
-  /** (vec_id, embedding, norm, unit) over any (vec_id, embedding
-    * ARRAY<FLOAT>) frame; `unit` is the embedding over its norm. */
-  private def normed(df: DataFrame): DataFrame =
-    withNorm(df.select(col("vec_id"), col("embedding")))
+  /** The one IVF candidate join: every corpus row probes the index trained
+    * on the corpus itself, and every (probe row, assigned row) pair of two
+    * different rows on a shared `cluster` comes out with its exact cosine,
+    * as (vec_id, cand_id, cos_sim). A candidate lives in exactly one
+    * cluster and a probe's clusters are distinct, so each pair appears once
+    * per direction, and the two directions carry bit-identical cosines
+    * (vec_dot and the norm product commute). */
+  private def selfCandidates(corpus: DataFrame, c: Int, nprobe: Int, iters: Int,
+                             maxTrainSamples: Long): DataFrame = {
+    // (vec_id, embedding, norm, unit), `unit` the embedding over its norm;
+    // spread to the cores, since small scans land in 1 split
+    val rows = withNorm(corpus.select(col("vec_id"), col("embedding")))
       .withColumn("unit", transform(col("embedding"), x => x.cast("double") / col("norm")))
-
-  private def corpusRows(df: DataFrame): DataFrame =
-    normed(df).repartition(df.sparkSession.sparkContext.defaultParallelism) // small scans land in 1 split
-
-  /** The one IVF candidate join: every (probe row, assigned row) pair on a
-    * shared `cluster`, with its exact cosine, as (vec_id, cand_id,
-    * cos_sim). A candidate lives in exactly one cluster and a probe's
-    * clusters are distinct, so each pair appears once per direction, and
-    * the two directions carry bit-identical cosines (vec_dot and the norm
-    * product commute). */
-  private def candidates(probes: DataFrame, assign: DataFrame,
-                         excludeSelf: Boolean): DataFrame = {
-    val joined = probes
+      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
+    val (assign, probe) = ivfIndex(rows, c, nprobe, iters, maxTrainSamples)
+    rows.withColumn("cluster", probe)
       .select(col("vec_id"), col("cluster"), col("embedding").as("qv"), col("norm").as("qn"))
-      .join(assign.select(col("vec_id").as("cand_id"), col("cluster"),
-        col("embedding").as("cv"), col("norm").as("cn")), "cluster")
-    (if (excludeSelf) joined.filter(col("vec_id") =!= col("cand_id")) else joined)
+      .join(rows.withColumn("cluster", assign).select(col("vec_id").as("cand_id"),
+        col("cluster"), col("embedding").as("cv"), col("norm").as("cn")), "cluster")
+      .filter(col("vec_id") =!= col("cand_id"))
       .select(col("vec_id"), col("cand_id"),
         cosine(col("qv"), col("cv"), col("qn"), col("cn")).as("cos_sim"))
   }
 
-  /** Every corpus row probes the index trained on the corpus itself. */
-  private def selfCandidates(rows0: DataFrame, c: Int, nprobe: Int, iters: Int,
-                             maxTrainSamples: Long): DataFrame = {
-    val rows = corpusRows(rows0)
-    val (assign, probe) = ivfIndex(rows, c, nprobe, iters, maxTrainSamples)
-    candidates(rows.withColumn("cluster", probe), rows.withColumn("cluster", assign),
-      excludeSelf = true)
-  }
-
-  /** Re-rank shared by [[ivfTopK]]/[[ivfSearch]]: top k per vec_id of the
-    * candidate join, ordered by (cos desc, cand_id asc). Spark picks a
-    * broadcast or shuffled join on `cluster` from its size estimate of the
-    * assign side; at q29 sf0.1, and at 50k uncached rows, it broadcasts it.
+  /** Re-rank of [[ivfTopK]]: top k per vec_id of the candidate join,
+    * ordered by (cos desc, cand_id asc). Spark picks a broadcast or
+    * shuffled join on `cluster` from its size estimate of the assign side;
+    * at q29 sf0.1, and at 50k uncached rows, it broadcasts it.
     * (`BenchExtra ivfprof` measured 178 → 215 s of task time when the 50k
     * plan flipped to broadcast; pinning the join to a shuffle is a separate
     * change, since no perfbench workload runs IVF and none could show it.)
@@ -353,15 +321,14 @@ object Ann {
     * pipelines over it, nothing materializes); exact=false takes
     * (least, greatest, cos) from the IVF candidate join and drops the
     * second direction with `distinct` (both directions carry the same
-    * cosine bits). Used by exactTopK/cosineNearDup (q28/q41) and the
-    * multimodal feature near-dup.
+    * cosine bits). Used by exactTopK/cosineNearDup (q28/q41).
     *
     * INPUT CONTRACT: `rows0` is evaluated several times (count guard or
     * k-means sample, assignment, probes) — it must be DETERMINISTIC, and a
-    * computed pipeline (feature extraction, not a scan) re-executes per
-    * evaluation unless the caller caches it. */
-  def cosinePairsOf(spark: SparkSession, rows0: DataFrame,
-                    exact: Boolean, maxRows: Long = 65536L): DataFrame =
+    * computed pipeline (not a scan) re-executes per evaluation unless the
+    * caller caches it. */
+  private[sim] def cosinePairsOf(spark: SparkSession, rows0: DataFrame,
+                                 exact: Boolean, maxRows: Long = 65536L): DataFrame =
     if (exact) {
       val e = withNorm(rows0.select(col("vec_id"), col("embedding")))
       val n = e.count()

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 /** Near-duplicate detection over the `documents` table — the dedup family
   * a training-data pipeline needs at 100 TB. One column-level kernel
   * ([[words]], [[tokens]], [[minhash]], [[lshBuckets]], [[jaccardAtLeast]])
-  * serves these methods and the streaming near-dup of
-  * [[graft.streaming.Streams]]:
+  * serves these methods:
   *
   *  - exact set Jaccard over words or character n-grams via one
   *    inverted-index pair join (the oracle-able exact method; candidate
@@ -28,8 +27,7 @@ object NearDup {
     spark.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") < maxDocId)
 
   /** Non-empty space-separated words of `text` (null for null text): the
-    * one tokenizer of every word-level method here and in
-    * [[graft.streaming.Streams]]. */
+    * one tokenizer of every word-level method here. */
   def words(text: Column): Column = filter(split(text, " "), t => t =!= "")
 
   /** The distinct words of `text`: the token set that word Jaccard and
@@ -37,8 +35,8 @@ object NearDup {
   def tokens(text: Column): Column = array_distinct(words(text))
 
   /** MinHash signature of a token array: sig_i = min over tokens of
-    * xxhash64(i, token), as a per-row array expression, so batch and
-    * streaming compute the same values with no aggregation. */
+    * xxhash64(i, token), as a per-row array expression: no aggregation,
+    * so the signature never needs a shuffle. */
   def minhash(toks: Column, numHashes: Int): Column =
     array((0 until numHashes).map(i =>
       array_min(transform(toks, t => xxhash64(lit(i), t)))): _*)
@@ -50,9 +48,7 @@ object NearDup {
       xxhash64(slice(sig, b * rows + 1, rows).cast("string"))): _*)
 
   /** The band buckets of a token array's MinHash signature, to posexplode
-    * into (band, bucket) rows. ONE definition — [[minhashLsh]] and the
-    * streaming corpus/stream sides must produce bit-identical buckets or
-    * the band join silently finds nothing. Null, so no rows, for a null or
+    * into (band, bucket) rows. Null, so no rows, for a null or
     * token-less doc: its all-null signature would otherwise share every
     * bucket with every other token-less doc and fabricate (0,0,0) pairs. */
   def lshBuckets(toks: Column, numHashes: Int, bands: Int): Column = {
@@ -135,11 +131,9 @@ object NearDup {
   /** MinHash+LSH near-dup candidates, exact-Jaccard verified.
     * bands × rowsPerBand = numHashes; candidate ⇔ some band identical.
     *
-    * Signatures are per-row array expressions ([[lshBuckets]], the same
-    * formula [[graft.streaming.Streams.nearDupAgainstCorpus]] computes
-    * statelessly), and the exact verify is an array_intersect over the same
-    * per-doc token arrays, so only the band self-join and the candidate
-    * joins shuffle. */
+    * Signatures are per-row array expressions ([[lshBuckets]]), and the
+    * exact verify is an array_intersect over the same per-doc token
+    * arrays, so only the band self-join and the candidate joins shuffle. */
   def minhashLsh(spark: SparkSession, dir: String, numHashes: Int = 16,
                  bands: Int = 4, thresholdPct: Int = 50,
                  maxDocId: Long = 1000L): DataFrame = {

@@ -56,15 +56,6 @@ object Flagship {
     dir
   }
 
-  /** Full run with lineage manifests + resume into `outDir`. */
-  def runResumable(spark: SparkSession, cfg: SynthWorld.Config, outDir: String,
-                   snapshotId: String): Lineage.RunResult =
-    // splitsPerBucket = 0 (auto): cell_parent buckets are SPATIALLY skewed
-    // (one coarse cell can hold a whole region), so the write salt derives
-    // from the pending-bucket count instead of serializing per bucket
-    Lineage.run(spark, geocode(spark, cfg), outDir, snapshotId,
-      splitsPerBucket = 0)
-
   /** End-to-end ingest, the reference's fetch→build→write lifecycle
     * (SURVEY.md §3.1) over the Common-Crawl container format: WARC files →
     * (url, warc_ts, html) → deterministic text extraction (the byte-identical
@@ -78,7 +69,9 @@ object Flagship {
       .withColumn("text", extract(col("html")))
       .withColumn("lang", lit("und")) // WARC carries no language field
       .drop("html") // geocode reads text only; don't haul payload bytes along
-    // auto write salt — same spatial-skew rationale as runResumable
+    // splitsPerBucket = 0 (auto): cell_parent buckets are SPATIALLY skewed
+    // (one coarse cell can hold a whole region), so the write salt derives
+    // from the pending-bucket count instead of serializing per bucket
     Lineage.run(spark, geocodePages(spark, pages, cfg), outDir, snapshotId,
       splitsPerBucket = 0)
   }

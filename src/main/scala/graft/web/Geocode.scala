@@ -35,8 +35,7 @@ object Geocode {
     * ONE regexp evaluation per row (the full match), then cheap string
     * splits — the naive per-group extraction would re-run the regex for
     * every group reference in the plan. Pages without a marker keep null
-    * coordinates — a gazetteer join is the fallback
-    * (see [[geoparseWithGazetteer]]). */
+    * coordinates — [[gazetteerMatch]] is the place-name fallback. */
   def geoparse(pages: DataFrame): DataFrame =
     pages
       .withColumn("geo_m", regexp_extract(col("text"), GeoPattern, 0))
@@ -230,38 +229,6 @@ object Geocode {
         .select(keys.map(pageSide(_)) ++
           Seq(matched("place_name"), matched("g_lat"), matched("g_lon")): _*)
     }
-  }
-
-  /** Gazetteer fallback: pages with no coordinate marker are matched by
-    * place-name mention (token-boundary semantics, [[gazetteerMatch]])
-    * against a broadcast gazetteer (name → centroid). `keyCols` names the
-    * crawl-record identity — default (url, warc_ts), so a re-crawled url
-    * with different text matches against ITS OWN text, not its sibling's.
-    * The match runs entirely on text-pruned token streams; full rows
-    * re-attach by ONE null-safe key join where text rides as a value —
-    * never as a shuffle key (the all-columns grouping would hash megabyte
-    * text strings as part of the key). Unmatched pages null-extend via
-    * the left join itself (keepUnmatched=false: no redundant distinct +
-    * second join inside the match). Row multiplicity is preserved:
-    * duplicate pages by key each keep their row, as in the marker
-    * branch. */
-  def geoparseWithGazetteer(pages: DataFrame, gazetteer: DataFrame,
-                            keyCols: Seq[String] = Seq("url", "warc_ts")): DataFrame = {
-    val parsed = geoparse(pages)
-    val withCoords = parsed.filter(col("lat").isNotNull)
-    val without = parsed.filter(col("lat").isNull).drop("lat", "lon")
-    // match-side keys renamed before the re-attach join: `matched` derives
-    // from `without`, and same-name refs across that lineage trip Spark's
-    // ambiguous-self-join detection
-    val matched = keyCols.foldLeft(
-        gazetteerMatch(without, gazetteer, keepUnmatched = false, keyCols = keyCols)
-          .select(keyCols.map(col) ++ Seq(col("g_lat"), col("g_lon")): _*))(
-        (df, k) => df.withColumnRenamed(k, s"__m_$k"))
-    val cond = keyCols.map(k => col(k) <=> col(s"__m_$k")).reduce(_ && _)
-    withCoords.unionByName(
-      without.join(matched, cond, "left")
-        .select(without.columns.map(col) ++
-          Seq(col("g_lat").as("lat"), col("g_lon").as("lon")): _*))
   }
 
   /** One geocode result bundle — single struct so the whole spatial join

@@ -17,6 +17,9 @@ import scala.jdk.CollectionConverters._
   * A bucket (coarse cell prefix of the row's tile) is the unit of resume: a
   * killed job leaves some buckets without manifests; the rerun recomputes
   * only those (dynamic partition overwrite), never touching completed ones.
+  * The operators are [[run]] (commit + resume), [[completed]] (the manifests
+  * on disk) and [[audit]] (data against manifests). The snapshot record is
+  * written for external readers; nothing here reads it back.
   */
 object Lineage {
 
@@ -27,18 +30,14 @@ object Lineage {
 
   private def manifestDir(outDir: String): Path = Paths.get(outDir, "_manifests")
 
-  /** Directory listing with the stream CLOSED (Files.list holds an open
-    * directory descriptor until closed — a per-bucket leak at thousands of
-    * buckets would exhaust the driver's fd limit mid-maintenance). */
-  private def listDir[T](dir: Path)(f: Iterator[Path] => T): T = {
-    val st = Files.list(dir)
-    try f(st.iterator().asScala) finally st.close()
-  }
-
   def completed(outDir: String): Map[Long, Manifest] = {
     val dir = manifestDir(outDir)
     if (!Files.isDirectory(dir)) return Map.empty
-    listDir(dir)(_.filter(_.getFileName.toString.endsWith(".json"))
+    // the listing stream is CLOSED: Files.list holds an open directory
+    // descriptor until closed, and a leak per call would exhaust the
+    // driver's fd limit over a long run of resumes
+    val st = Files.list(dir)
+    try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".json"))
       .map { p =>
         val m = Files.readString(p)
         def field(k: String): String =
@@ -47,7 +46,8 @@ object Lineage {
         Manifest(field("bucket").toLong, field("rows").toLong,
           field("checksum").toLong, field("snapshotId"), field("completedAtMs").toLong)
       }
-      .map(m => m.bucket -> m).toMap)
+      .map(m => m.bucket -> m).toMap
+    finally st.close()
   }
 
   /** Audit committed data against its manifests: recompute per-bucket row
@@ -68,92 +68,6 @@ object Lineage {
         case None => true
       }
     }
-  }
-
-  /** Snapshot ids committed so far (Iceberg-style time travel). */
-  def snapshots(outDir: String): Seq[String] = {
-    val dir = Paths.get(outDir, "_snapshots")
-    if (!Files.isDirectory(dir)) Nil
-    else listDir(dir)(_.map(_.getFileName.toString).filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json")).toSeq.sorted)
-  }
-
-  private def snapshotBuckets(outDir: String, snapshotId: String): Array[Long] = {
-    val p = Paths.get(outDir, "_snapshots", s"$snapshotId.json")
-    require(Files.exists(p), s"unknown snapshot $snapshotId")
-    val txt = Files.readString(p)
-    """"buckets"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse("")
-      .split(",").filter(_.trim.nonEmpty).map(_.trim.toLong)
-  }
-
-  /** Read the table as of a snapshot: only the buckets that snapshot
-    * committed (partition pruning does the rest). */
-  def readSnapshot(spark: SparkSession, outDir: String, snapshotId: String): DataFrame =
-    spark.read.parquet(s"$outDir/data")
-      .filter(col("bucket").isin(snapshotBuckets(outDir, snapshotId): _*))
-
-  /** Incremental read (Iceberg-style changelog consumption): the rows of
-    * buckets committed in `toSnapshot` but NOT in `fromSnapshot` — what a
-    * downstream consumer processes to catch up between snapshots. Bucket
-    * partitioning makes this pure partition pruning. */
-  def readIncrement(spark: SparkSession, outDir: String,
-                    fromSnapshot: String, toSnapshot: String): DataFrame = {
-    val before = snapshotBuckets(outDir, fromSnapshot).toSet
-    val added = snapshotBuckets(outDir, toSnapshot).filterNot(before)
-    spark.read.parquet(s"$outDir/data").filter(col("bucket").isin(added: _*))
-  }
-
-  /** Iceberg-style table maintenance: rewrite buckets fragmented into more
-    * than `maxFilesPerBucket` parquet files down to ONE file per bucket.
-    * Small files are the chronic failure mode of a long-lived partitioned
-    * ingest at 100 TB (every micro-batch task appends a file per bucket it
-    * touches; scans then pay per-file open + footer costs).
-    *
-    * Content is untouched, so existing manifests stay valid (rows + the
-    * order-independent bit_xor checksum are content-derived) — asserted by
-    * a post-compaction [[audit]] in the spec. The rewrite goes through a
-    * temp directory and per-bucket directory swaps, NEVER a self-overwrite
-    * of paths being read (a cache-backed overwrite could recompute from
-    * half-deleted files under memory pressure). A crash mid-swap leaves
-    * that bucket's manifest present but data absent — exactly what audit()
-    * reports for re-ingest. Returns the compacted bucket ids. */
-  def compact(spark: SparkSession, outDir: String,
-              maxFilesPerBucket: Int = 8): Seq[Long] = {
-    val dataDir = Paths.get(outDir, "data")
-    if (!Files.isDirectory(dataDir)) return Nil
-    def parquetFiles(p: Path): Long =
-      listDir(p)(_.count(_.getFileName.toString.endsWith(".parquet")))
-    val victims = listDir(dataDir)(_
-      .filter(_.getFileName.toString.startsWith("bucket="))
-      .filter(parquetFiles(_) > maxFilesPerBucket)
-      .map(_.getFileName.toString.stripPrefix("bucket=").toLong)
-      .toSeq.sorted)
-    if (victims.isEmpty) return Nil
-
-    // one job: victim rows, hash-partitioned by bucket (each bucket lives in
-    // exactly one task → exactly one output file per bucket), written to a
-    // temp dir beside the table
-    val tmp = Paths.get(outDir, "_compact_tmp")
-    spark.read.parquet(s"$outDir/data")
-      .withColumn("bucket", col("bucket").cast("long"))
-      .filter(col("bucket").isin(victims: _*))
-      .repartition(victims.length, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
-
-    // per-bucket directory swap: remove fragmented dir, move compacted in
-    def deleteTree(p: Path): Unit = {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
-      finally st.close()
-    }
-    for (b <- victims) {
-      val dst = dataDir.resolve(s"bucket=$b")
-      deleteTree(dst)
-      Files.move(tmp.resolve(s"bucket=$b"), dst)
-    }
-    deleteTree(tmp)
-    victims
   }
 
   /** Write `df` (which must carry `bucket` and `url` columns) partitioned by

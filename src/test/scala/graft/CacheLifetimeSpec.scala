@@ -2,11 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
-import graft.multimodal.MultiModal
 import graft.react.BigraphState
 import graft.sim.Ann
 import graft.synth.SynthWorld
@@ -32,18 +30,10 @@ class CacheLifetimeSpec extends AnyFunSuite {
     Seq.empty[(String, Long)].toDF("edge_key", "place_id"),
     Seq.empty[(Long, Long)].toDF("agent_a", "agent_b"))
 
-  private def embeddings: DataFrame = spark.read.parquet(s"$sf/embeddings.parquet")
-  private def feats: DataFrame = MultiModal.extractFeatures(MultiModal.synthMedia(spark, 200L)).toDF()
-
   private val consumers: Seq[(String, () => Any)] = Seq(
     "Ann.ivfTopK" -> (() => Ann.ivfTopK(spark, sf).collect()),
-    "Ann.ivfSearch" -> (() =>
-      Ann.ivfSearch(spark, embeddings.filter(col("vec_id") % 7 === 0), embeddings).collect()),
     "Ann.ivfCandidatePairs" -> (() => Ann.ivfCandidatePairs(spark, sf)),
     "Ann.cosineNearDup(exact = false)" -> (() => Ann.cosineNearDup(spark, sf, exact = false).collect()),
-    "MultiModal.mediaNearDup(exact = true)" -> (() => MultiModal.mediaNearDup(feats).collect()),
-    "MultiModal.mediaNearDup(exact = false)" -> (() =>
-      MultiModal.mediaNearDup(feats, exact = false).collect()),
     "BigraphState.places" -> (() => tinyState().places.count()))
 
   for ((name, consume) <- consumers)

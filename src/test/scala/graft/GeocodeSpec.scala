@@ -226,9 +226,9 @@ class GeocodeSpec extends AnyFunSuite {
       ("u2", "t1", "about spark", "en"),
       ("u2", "t2", "about york", "en")) // re-crawl: each text matches its own name
       .toDF("url", "warc_ts", "text", "lang")
-    val got = Geocode.geoparseWithGazetteer(pages, gaz)
+    val got = Geocode.gazetteerMatch(pages, gaz, keyCols = Seq("url", "warc_ts"))
       .collect().map(r => (Option(r.getAs[String]("url")), r.getAs[String]("warc_ts")) ->
-        Option(r.getAs[java.lang.Double]("lat")).map(_.doubleValue)).toMap
+        Option(r.getAs[java.lang.Double]("g_lat")).map(_.doubleValue)).toMap
     assert(got((None, "t1")) == Some(51.5))
     assert(got((Some("u2"), "t1")) == Some(51.5))
     assert(got((Some("u2"), "t2")) == Some(2.0))
@@ -244,22 +244,6 @@ class GeocodeSpec extends AnyFunSuite {
     val gaz = Seq(("x", 1.0, 1.0)).toDF("place_name", "g_lat", "g_lon")
     val emptyPages = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(Geocode.gazetteerMatch(emptyPages, gaz, keyCols = Seq("doc_id")).count() == 0)
-  }
-
-  test("gazetteer fallback geocodes marker-less pages by place-name mention") {
-    val gaz = Seq(("City-100-0-0", 41.0, 1.0), ("City-100-0-1", 43.0, 1.0))
-      .toDF("place_name", "g_lat", "g_lon")
-    val pages = Seq(
-      ("u1", "warc", "we visited City-100-0-0 yesterday", "en"),
-      ("u2", "warc", "geo:45.500000,2.500000 explicit", "en"),
-      ("u3", "warc", "no place here", "en"))
-      .toDF("url", "warc_ts", "text", "lang")
-    val parsed = Geocode.geoparseWithGazetteer(pages, gaz).collect()
-      .map(r => r.getAs[String]("url") ->
-        (Option(r.getAs[java.lang.Double]("lat")), Option(r.getAs[java.lang.Double]("lon")))).toMap
-    assert(parsed("u2")._1.map(_.doubleValue) == Some(45.5))
-    assert(parsed("u1")._1.map(_.doubleValue) == Some(41.0))
-    assert(parsed("u3")._1.isEmpty)
   }
 
   test("curation pipeline: quality-filter, dedup with copy counts, resumable commit") {
@@ -288,38 +272,6 @@ class GeocodeSpec extends AnyFunSuite {
     val r2 = graft.web.Curation.curate(spark, pages, out, "snap-2")
     assert(r2.pending.isEmpty && r2.skipped.toSet == r1.pending.toSet)
     assert(graft.web.Lineage.audit(spark, out).isEmpty, "audit must be clean")
-  }
-
-  test("compaction rewrites fragmented buckets to one file, manifests stay valid") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    // fragment deliberately: salt each bucket over 3 write tasks, with AQE
-    // coalescing off so the salt partitions stay apart (the splits spec's
-    // setup) — the multi-file layout compact() repairs
-    val df = Flagship.geocode(spark, cfg).repartition(16).cache()
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try Lineage.run(spark, df, outDir, "snap-1", splitsPerBucket = 3)
-    finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    def filesOf(b: Long): Long = {
-      val d = java.nio.file.Paths.get(outDir, "data", s"bucket=$b")
-      java.nio.file.Files.list(d).toArray.count(_.toString.endsWith(".parquet"))
-    }
-    val buckets = Lineage.completed(outDir).keys.toSeq.sorted
-    val fragmented = buckets.filter(filesOf(_) > 1)
-    assert(fragmented.nonEmpty, "test setup must produce fragmented buckets")
-
-    val before = spark.read.parquet(s"$outDir/data")
-      .orderBy("url").collect().toSeq
-    val compacted = Lineage.compact(spark, outDir, maxFilesPerBucket = 1)
-    assert(compacted.nonEmpty && compacted.toSet.subsetOf(buckets.toSet))
-    for (b <- compacted) assert(filesOf(b) == 1L, s"bucket $b not compacted")
-
-    // content untouched: rows identical, manifests still audit clean
-    val after = spark.read.parquet(s"$outDir/data").orderBy("url").collect().toSeq
-    assert(after == before)
-    assert(Lineage.audit(spark, outDir).isEmpty)
-    // idempotent: nothing left to compact
-    assert(Lineage.compact(spark, outDir, maxFilesPerBucket = 1).isEmpty)
-    df.unpersist()
   }
 
   test("splitsPerBucket bounds files per bucket while spreading hot buckets") {
@@ -384,6 +336,15 @@ class GeocodeSpec extends AnyFunSuite {
     // third run: everything is a no-op
     val r3 = Lineage.run(spark, df, outDir, "snap-3")
     assert(r3.pending.isEmpty && r3.skipped.sorted == buckets.toSeq)
+
+    // each run's snapshot record lists every bucket committed so far
+    def snapshotBuckets(id: String): Seq[Long] = """"buckets": \[([^\]]*)\]""".r
+      .findFirstMatchIn(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(outDir, "_snapshots", s"$id.json")))
+      .get.group(1).split(",").filter(_.nonEmpty).map(_.toLong).toSeq
+    assert(snapshotBuckets("snap-1") == firstHalf.toSeq)
+    assert(snapshotBuckets("snap-2") == buckets.toSeq)
+    assert(snapshotBuckets("snap-3") == buckets.toSeq)
 
     // final output is complete and correct
     val out = spark.read.parquet(s"$outDir/data")

@@ -2,11 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.Streams
 import graft.text.NearDup
 
 /** Differential spec for the near-dup kernel: the Spark pair joins equal a
@@ -192,31 +190,11 @@ class NearDupOracleSpec extends AnyFunSuite {
     assert(kernelBands == wantBands, "token-less docs must band to no rows")
   }
 
-  test("a token-less stream doc never pairs with a token-less corpus doc") {
-    val corpus = Seq[(Long, String)]((1L, ""), (2L, null), (3L, "   "), (4L, "alpha beta"))
-      .toDF("doc_id", "text")
-    val (bandsIdx, toksIdx) = Streams.corpusBandIndex(corpus)
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String)](spark)
-    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    mem.addData((10L, ts, ""), (11L, ts, "  "), (12L, ts, null), (13L, ts, "beta  alpha"))
-    val q = Streams.nearDupAgainstCorpus(mem.toDF().toDF("doc_id", "warc_ts", "text"),
-        bandsIdx, toksIdx, watermark = "1 hour")
-      .writeStream.format("memory").queryName("neardup_tokenless")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table("neardup_tokenless").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(got == Set((13L, 4L, 2)), s"got $got")
-    bandsIdx.unpersist(); toksIdx.unpersist()
-  }
-
   test("MinHash banding rejects bands that do not divide numHashes") {
     val dir = write(Corpus(Seq(1L -> "a b", 2L -> "a b"), 10, 50, 3))
     for ((h, b) <- Seq((16, 5), (16, 32), (16, 0))) {
       val e = intercept[IllegalArgumentException](NearDup.minhashLsh(spark, dir, h, b))
       assert(e.getMessage.contains(s"bands ($b) must be positive and divide numHashes ($h)"))
-      intercept[IllegalArgumentException](
-        Streams.corpusBandIndex(spark.read.parquet(s"$dir/documents.parquet"), h, b))
     }
   }
 }

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.functions.GeoFunctions
 import graft.ops.Skew
 import graft.plans.CollapseCellParentOfCellOf
-import graft.synth.SynthWorld
-import graft.web.{Flagship, Lineage}
 
 class SkewExtensionsSpec extends AnyFunSuite {
   private lazy val spark = { val s = SparkTestSession.spark; GeoFunctions.register(s); s }
@@ -48,27 +46,5 @@ class SkewExtensionsSpec extends AnyFunSuite {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == CollapseCellParentOfCellOf)
     }
-  }
-
-  test("snapshot time travel reads exactly the buckets a snapshot committed") {
-    val cfg = SynthWorld.Config(seed = 42L, gridP = 2, gridC = 2,
-      streetsPerCity = 3, buildingsPerStreet = 4, pages = 1500L)
-    val outDir = java.nio.file.Files.createTempDirectory("graft-snap").toString
-    val df = Flagship.geocode(spark, cfg).cache()
-    val buckets = df.select("bucket").distinct().collect().map(_.getLong(0)).sorted
-    val half = buckets.take(buckets.length / 2)
-    Lineage.run(spark, df.filter(col("bucket").isin(half: _*)), outDir, "snap-a")
-    Lineage.run(spark, df, outDir, "snap-b")
-    assert(Lineage.snapshots(outDir) == Seq("snap-a", "snap-b"))
-    val asOfA = Lineage.readSnapshot(spark, outDir, "snap-a")
-    assert(asOfA.select("bucket").distinct().collect().map(_.getLong(0)).sorted.toSeq
-      == half.toSeq)
-    val asOfB = Lineage.readSnapshot(spark, outDir, "snap-b")
-    assert(asOfB.count() == df.count())
-    // incremental read = exactly the buckets snap-b added over snap-a
-    val inc = Lineage.readIncrement(spark, outDir, "snap-a", "snap-b")
-    val incBuckets = inc.select("bucket").distinct().collect().map(_.getLong(0)).sorted
-    assert(incBuckets.toSeq == buckets.drop(buckets.length / 2).toSeq)
-    assert(inc.count() + asOfA.count() == df.count())
   }
 }
