@@ -308,9 +308,9 @@ object SparkEntry {
                                val targets = graft.synth.SynthWorld.buildings(cfg)
                                  .map(b => (b.id, b.lat, b.lon))
                                  .toDF("tid", "tlat", "tlon")
-                               graft.spatial.DistributedKnn.nearest(s,
+                               graft.spatial.DistributedKnn.knn(s,
                                    synthPoints(s, d).withColumnRenamed("point_id", "id"),
-                                   targets, level = 12)
+                                   targets, level = 12, k = 1)
                                  .select(col("id").as("point_id"), col("nearest_tid"),
                                    floor(col("nearest_dist_m")).cast("long").as("dist_m"))
                              }),

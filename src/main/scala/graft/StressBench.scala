@@ -211,7 +211,7 @@ object StressBench {
         .toDF("tid", "tlat", "tlon")
     }
     out += "q36_knn" -> measure(spark, "q36_knn", 15000L)(n =>
-      graft.spatial.DistributedKnn.nearest(spark, points(spark, n), targets, level = 12))
+      graft.spatial.DistributedKnn.knn(spark, points(spark, n), targets, level = 12, k = 1))
 
     out += "q44_knn_topk" -> measure(spark, "q44_knn_topk", 15000L)(n =>
       graft.spatial.DistributedKnn.knn(spark, points(spark, n), targets, level = 12, k = 3))

@@ -256,7 +256,11 @@ object Reactions {
       val sp = s.spark
       import sp.implicits._
       tagged.reduce(_ union _).as[(Int, Int, Long, Long)].mapPartitions { rows =>
-        // per rule, a max-heap holding the k smallest (agent, target) so far
+        // per rule, a max-heap holding the k smallest (agent, target) so far.
+        // It keeps the probe at one job with no shuffle: the plain
+        // row_number() ≤ k window over (cls, rule) adds an exchange, and
+        // SynthBrsSpec's budget counted 8 jobs for its 4 sim steps, 20 for
+        // its 10 bfs states and 6 for its 3 rewrite steps (budget: 4/10/3)
         val firsts = scala.collection.mutable.HashMap
           .empty[(Int, Int), scala.collection.mutable.PriorityQueue[(Long, Long)]]
         for ((c, r, a, t) <- rows) {

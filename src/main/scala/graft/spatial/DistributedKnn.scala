@@ -38,52 +38,17 @@ object DistributedKnn {
     * unscanned rings (firstUnscannedRing × minCellExtentM at the point's
     * latitude — anisotropy-safe, same rule as the broadcast
     * PointCellIndex); after the last batch every point with any candidate
-    * finalizes. k=1 reduces to the round-3 `nearest` contract exactly. */
+    * finalizes.
+    *
+    * A point finalizes in exactly one round, and that round's window ranked
+    * its pool by (d, tid) over unique (id, tid) rows with the sentinel last,
+    * so the finalized slice's row number IS the rank: the result is the one
+    * union of those slices, with no second ranking pass. It is the ONLY
+    * cache this call leaves behind; callers may unpersist it once consumed
+    * (DistributedKnnSpec asserts the persistent-RDD count returns to
+    * baseline after that). */
   def knn(spark: SparkSession, points: DataFrame, targets: DataFrame,
-          level: Int, k: Int = 1, maxRing: Int = 64): DataFrame =
-    poolLoop(spark, points, targets, level, k, maxRing) match {
-      case None =>
-        points.limit(0).select(col("id"),
-          lit(0).as("rank"),
-          lit(null).cast("long").as("nearest_tid"),
-          lit(null).cast("double").as("nearest_dist_m"))
-      case Some(best) =>
-        val wBest = Window.partitionBy(col("id")).orderBy(col("d").asc, col("tid").asc)
-        // the returned frame is the ONLY cache this call leaves behind;
-        // callers may unpersist it once consumed (DistributedKnnSpec
-        // asserts the persistent-RDD count returns to baseline after that)
-        val out = truncated(best
-          .withColumn("rank", row_number().over(wBest))
-          .select(col("id"), col("rank"), col("tid").as("nearest_tid"),
-            col("d").as("nearest_dist_m")))
-        out.count()
-        best.unpersist(false)
-        out
-    }
-
-  /** k = 1 snap: (id, nearest_tid, nearest_dist_m) — the q36/flagship
-    * contract, unchanged from round 3. */
-  def nearest(spark: SparkSession, points: DataFrame, targets: DataFrame,
-              level: Int, maxRing: Int = 64): DataFrame =
-    poolLoop(spark, points, targets, level, k = 1, maxRing = maxRing) match {
-      case None =>
-        points.limit(0).select(col("id"),
-          lit(null).cast("long").as("nearest_tid"),
-          lit(null).cast("double").as("nearest_dist_m"))
-      case Some(best) => // k = 1 pool: already exactly one row per id
-        val out = truncated(best.select(col("id"),
-          col("tid").as("nearest_tid"), col("d").as("nearest_dist_m")))
-        out.count()
-        best.unpersist(false)
-        out
-    }
-
-  /** The ring-batch expansion loop shared by [[knn]]/[[nearest]]: returns
-    * the materialized CACHED pool (id, lat, lon, tid, d) with ≤ k rows per
-    * point — the caller owns (and must unpersist) it — or None when no
-    * point found any target within maxRing. */
-  private def poolLoop(spark: SparkSession, points: DataFrame, targets: DataFrame,
-                       level: Int, k: Int, maxRing: Int): Option[DataFrame] = {
+          level: Int, k: Int = 1, maxRing: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // the refine/key computations are the registered CODEGEN expressions
     // (GeoFunctions) — no per-row UDF serde on the biggest join of q36/q44;
@@ -102,7 +67,7 @@ object DistributedKnn {
       .orderBy(col("d").asc_nulls_last, col("tid").asc_nulls_last)
     val wId = Window.partitionBy(col("id"))
     var unresolved = truncated(points.select("id", "lat", "lon"))
-    var unresolvedCount = unresolved.count()
+    var unresolvedCount = 0L
     // each round's cached top-k frame; finalized rows are sliced out of
     // these at the end (ONE union), so no per-round best-carry or anti
     // joins exist — every round is exactly one window exchange + one job
@@ -110,7 +75,9 @@ object DistributedKnn {
     val finalizedParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var prevKept: DataFrame = null // unfinalized points' pools (≤ k rows per id)
     var lo = 0
-    while (lo <= maxRing && unresolvedCount > 0) {
+    // the first round always runs (its action fills the points cache), so
+    // the union below has at least one slice even when `points` is empty
+    do {
       // batch [lo, hi): rings 0 and 1 share the FIRST batch — the hi = 1
       // finalize bound below is 0 m (vacuous), so a lone ring-0 round was
       // one full shuffle barrier that could finalize nothing; merging it
@@ -159,7 +126,8 @@ object DistributedKnn {
         .cache()
       finalizedParts += roundBest
         .filter(col("fin") && col("tid").isNotNull)
-        .select(col("id"), col("lat"), col("lon"), col("tid"), col("d"))
+        .select(col("id"), col("rn").as("rank"), col("tid").as("nearest_tid"),
+          col("d").as("nearest_dist_m"))
       prevKept = roundBest
         .filter(!col("fin") && col("tid").isNotNull)
         .select(col("id"), col("lat"), col("lon"), col("tid"), col("d"))
@@ -174,17 +142,13 @@ object DistributedKnn {
       roundFrames += roundBest
       unresolved = newUnresolved
       lo = hi
-    }
+    } while (lo <= maxRing && unresolvedCount > 0)
     targetsByCell.unpersist(false)
     unresolved.unpersist(false)
-    if (finalizedParts.isEmpty) None
-    else {
-      // one union of the per-round finalized slices → the caller's cached
-      // pool; the per-round caches die here (they kept the slices cheap)
-      val best = truncated(finalizedParts.reduce(_ unionByName _))
-      best.count()
-      roundFrames.foreach(_.unpersist(false))
-      Some(best)
-    }
+    // the per-round caches die once the union's cache holds the slices
+    val out = truncated(finalizedParts.reduce(_ unionByName _))
+    out.count()
+    roundFrames.foreach(_.unpersist(false))
+    out
   }
 }

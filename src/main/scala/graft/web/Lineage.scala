@@ -97,8 +97,11 @@ object Lineage {
           snapshotId: String, splitsPerBucket: Int = 1): RunResult = {
     require(splitsPerBucket >= 0, "splitsPerBucket must be >= 1, or 0 = auto")
     val done = completed(outDir)
-    val work = df.cache()
-    val allBuckets = work.select("bucket").distinct().collect().map(_.getLong(0)).sorted
+    // a caller's own cache of `df` is theirs: cache and free it here only
+    // when the caller has none
+    val ownCache = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (ownCache) df.cache()
+    val allBuckets = df.select("bucket").distinct().collect().map(_.getLong(0)).sorted
     val pending = allBuckets.filterNot(done.contains)
     val skipped = allBuckets.filter(done.contains)
     val ms = scala.collection.mutable.ArrayBuffer.empty[Manifest]
@@ -112,7 +115,7 @@ object Lineage {
       // one file-set per bucket and a proportionally cheaper read-back
       // audit and downstream scan.
       locally {
-        val filtered = work.filter(col("bucket").isin(pending: _*))
+        val filtered = df.filter(col("bucket").isin(pending: _*))
         val splits =
           if (splitsPerBucket > 0) splitsPerBucket
           else math.max(1, (spark.sparkContext.defaultParallelism +
@@ -142,7 +145,7 @@ object Lineage {
         ms += m
       }
     }
-    work.unpersist()
+    if (ownCache) df.unpersist()
     val snapDir = Paths.get(outDir, "_snapshots")
     Files.createDirectories(snapDir)
     Files.writeString(snapDir.resolve(s"$snapshotId.json"),

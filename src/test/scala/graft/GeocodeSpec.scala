@@ -317,6 +317,19 @@ class GeocodeSpec extends AnyFunSuite {
     df.unpersist()
   }
 
+  test("Lineage.run keeps a caller's cache of its input") {
+    val outDir = java.nio.file.Files.createTempDirectory("graft-precached").toString
+    val df = Flagship.geocode(spark, cfg).cache()
+    df.count()
+    val level = df.storageLevel
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    assert(level.useMemory || level.useDisk, s"the input must be cached, got $level")
+    Lineage.run(spark, df, outDir, "snap-1")
+    assert(df.storageLevel == level, "the caller's cache entry must survive the commit")
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted)
+    df.unpersist()
+  }
+
   test("lineage manifests make the job resumable without recompute") {
     val outDir = java.nio.file.Files.createTempDirectory("graft-lineage").toString
     val df = Flagship.geocode(spark, cfg).cache()

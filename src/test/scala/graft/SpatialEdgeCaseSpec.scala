@@ -40,9 +40,10 @@ class SpatialEdgeCaseSpec extends AnyFunSuite {
     import spark.implicits._
     val pts = Seq((0L, 0.0, -179.97), (1L, 0.0, 179.2), (2L, 0.3, -179.99))
     val tgts = Seq((10L, 0.0, 179.98), (11L, 0.0, -170.0))
-    val got = DistributedKnn.nearest(spark,
-        pts.toDF("id", "lat", "lon"), tgts.toDF("tid", "tlat", "tlon"), level = 8)
-    val rows = got.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val got = DistributedKnn.knn(spark,
+        pts.toDF("id", "lat", "lon"), tgts.toDF("tid", "tlat", "tlon"), level = 8, k = 1)
+    val rows = got.collect().map(r => r.getAs[Long]("id") ->
+      (r.getAs[Long]("nearest_tid"), r.getAs[Double]("nearest_dist_m"))).toMap
     got.unpersist(false) // by contract the result is the call's only pinned frame
     val idx = PointCellIndex.build(tgts, level = 8)
     pts.foreach { case (id, lat, lon) =>
