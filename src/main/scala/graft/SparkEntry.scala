@@ -104,8 +104,7 @@ object SparkEntry {
                                graft.web.Geocode.gazetteerMatch(
                                    Relational.t(s, d, "documents")
                                      .select(col("doc_id"), col("text")),
-                                   gaz, keepUnmatched = false,
-                                   keyCols = Seq("doc_id"))
+                                   gaz, keyCols = Seq("doc_id"))
                                  .select(col("doc_id"), col("place_name"),
                                    col("g_lat"), col("g_lon"))
                              }),
@@ -125,8 +124,7 @@ object SparkEntry {
                                graft.web.Geocode.gazetteerMatch(
                                    Relational.t(s, d, "documents")
                                      .select(col("doc_id"), col("text")),
-                                   gaz, keepUnmatched = false,
-                                   keyCols = Seq("doc_id"), broadcastDim = false)
+                                   gaz, keyCols = Seq("doc_id"), broadcastDim = false)
                                  .select(col("doc_id"), col("place_name"),
                                    col("g_lat"), col("g_lon"))
                              }),

@@ -200,7 +200,7 @@ object StressBench {
       graft.web.Geocode.gazetteerMatch(
         spark.read.parquet(s"${docsDir(n)}/documents.parquet")
           .select(col("doc_id"), col("text")),
-        gaz, keepUnmatched = false, keyCols = Seq("doc_id"))
+        gaz, keyCols = Seq("doc_id"))
     }
 
     val cfg = graft.synth.SynthWorld.Config(seed = 42L, gridP = 2, gridC = 2,

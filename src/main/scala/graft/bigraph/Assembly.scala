@@ -201,43 +201,7 @@ object Assembly {
   /** S6: load a bigraph JSON (golden or our own) into a reaction-ready
     * state (bin/botw.ml:18-27 load path). */
   def loadJson(spark: SparkSession, path: String): BigraphState = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val json = JsonMethods.parse(new java.io.File(path))
-    val ctrl = (json \ "nodes" \ "ctrl").asInstanceOf[JArray].arr.map {
-      case JArray(JInt(id) :: obj :: Nil) =>
-        val name = (obj \ "ctrl_name").asInstanceOf[JString].s
-        val param = (obj \ "ctrl_params") match {
-          case JArray(JObject(fields) :: _) =>
-            fields.collectFirst { case ("ctrl_string", JString(s)) => s }
-          case _ => None
-        }
-        id.toInt -> (name, param)
-      case o => throw new IllegalStateException(o.toString)
-    }.toMap
-    val parentOf = (json \ "place_graph" \ "nn" \ "r_major").asInstanceOf[JArray].arr.flatMap {
-      case JArray(JInt(p) :: JArray(cs) :: Nil) =>
-        cs.map { case JInt(c) => c.toInt -> p.toInt; case o => throw new IllegalStateException(o.toString) }
-      case o => throw new IllegalStateException(o.toString)
-    }.toMap
-    case class E(outer: Option[String], ports: List[Int])
-    val edges = (json \ "link_graph").asInstanceOf[JArray].arr.map { e =>
-      val outer = (e \ "outer") match {
-        case JArray(JArray(_ :: JString(nm) :: Nil) :: _) => Some(nm)
-        case _ => None
-      }
-      E(outer, (e \ "ports").asInstanceOf[JArray].arr.map {
-        case JArray(JInt(p) :: _) => p.toInt
-        case o => throw new IllegalStateException(o.toString)
-      })
-    }
-    val idLinkName = edges.flatMap { e =>
-      val (idp, ent) = e.ports.partition(p => ctrl(p)._1 == "ID")
-      (idp, ent) match {
-        case (List(i), List(x)) => ctrl(i)._2.map(x -> _)
-        case _ => None
-      }
-    }.toMap
+    val (ctrl, parentOf, edges, idLinkName) = BigraphJson.decode(path)
     import spark.implicits._
     val placeRows = ctrl.toSeq.collect {
       case (id, (c, param)) if c != "ID" =>

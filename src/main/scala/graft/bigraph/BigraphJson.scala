@@ -26,7 +26,16 @@ object BigraphJson {
   private def multiset(xs: Seq[String]): Map[String, Int] =
     xs.groupBy(identity).map { case (k, v) => k -> v.size }
 
-  def readGolden(path: String): BigraphCanon = {
+  /** One link of the serialized link graph: its outer name, if any, and the
+    * node ids of its ports. */
+  private[bigraph] case class Link(outer: Option[String], ports: List[Int])
+
+  /** Decodes the reference's serialized bigraph at `path` into node id →
+    * (ctrl name, `ctrl_string` param), child → parent, the links, and each
+    * entity's display name from the ID atom sharing its link. The one
+    * decoder behind [[readGolden]] and [[Assembly.loadJson]]. */
+  private[bigraph] def decode(path: String)
+      : (Map[Int, (String, Option[String])], Map[Int, Int], List[Link], Map[Int, String]) = {
     val json = JsonMethods.parse(new java.io.File(path))
 
     // nodes.ctrl: [[id, {ctrl_name, ctrl_params:[{ctrl_string}], ctrl_arity}]]
@@ -52,7 +61,6 @@ object BigraphJson {
       }.toMap
 
     // link_graph: [{inner, outer:[["Name", s]], ports:[[node, arity]]}]
-    case class Edge(outer: Option[String], ports: List[Int])
     val edges = (json \ "link_graph").asInstanceOf[JArray].arr.map { e =>
       val outer = (e \ "outer") match {
         case JArray(JArray(_ :: JString(n) :: Nil) :: _) => Some(n)
@@ -62,18 +70,21 @@ object BigraphJson {
         case JArray(JInt(n) :: _) => n.toInt
         case o => throw new IllegalStateException(o.toString)
       }
-      Edge(outer, ports)
+      Link(outer, ports)
     }
 
     // entity display name = param of the ID atom sharing its link
     val idLinkName: Map[Int, String] = edges.flatMap { e =>
-      val idPorts = e.ports.filter(p => ctrl(p)._1 == "ID")
-      val entPorts = e.ports.filter(p => ctrl(p)._1 != "ID")
-      (idPorts, entPorts) match {
+      e.ports.partition(p => ctrl(p)._1 == "ID") match {
         case (List(idp), List(ent)) => ctrl(idp)._2.map(ent -> _)
         case _ => None
       }
     }.toMap
+    (ctrl, parentOf, edges, idLinkName)
+  }
+
+  def readGolden(path: String): BigraphCanon = {
+    val (ctrl, parentOf, edges, idLinkName) = decode(path)
 
     def nameOf(n: Int): String = {
       val (c, param) = ctrl(n)

@@ -2,6 +2,7 @@ package graft.hier
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.osm.OsmXml
+import graft.truncated
 
 /** One resolved admin boundary in the containment forest.
   * Key codec stays typed — the display key `level-relId-name` is built at
@@ -145,29 +146,34 @@ object Hierarchy {
     * expand relations to ALL transitive members. Input rows
     * (rel_id, member_kind, member_ref); output (root_rel, kind, ref)
     * including indirect members through relation→relation edges. Iterative
-    * join to fixpoint, localCheckpoint per pass (depth ≤ 2-3 for OSM
-    * boundaries; bounded at maxIters). */
-  def memberClosure(members: org.apache.spark.sql.DataFrame,
-                    maxIters: Int = 8): org.apache.spark.sql.DataFrame = {
+    * join to fixpoint, each pass behind a [[graft.truncated]] plan (depth
+    * ≤ 2-3 for OSM boundaries; bounded at 8 passes). Every pass's cache is
+    * freed before the call returns; the result recomputes from their
+    * lineage. */
+  def memberClosure(members: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     var acc = members.select(col("rel_id").as("root_rel"),
       col("member_kind").as("kind"), col("member_ref").as("ref"))
     var frontier = acc.filter(col("kind") === "relation")
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val maxPasses = 8
     var i = 0
-    while (i < maxIters && !frontier.isEmpty) {
-      val next = frontier.as("f")
+    while (i < maxPasses && !frontier.isEmpty) {
+      val next = truncated(frontier.as("f")
         .join(members.as("m"), col("f.ref") === col("m.rel_id"))
         .select(col("f.root_rel").as("root_rel"),
           col("m.member_kind").as("kind"), col("m.member_ref").as("ref"))
-        .exceptAll(acc)
-        .localCheckpoint(true)
-      if (next.isEmpty) i = maxIters
+        .exceptAll(acc))
+      cached += next
+      if (next.isEmpty) i = maxPasses
       else {
-        acc = acc.unionByName(next).localCheckpoint(true)
+        acc = truncated(acc.unionByName(next))
+        cached += acc
         frontier = next.filter(col("kind") === "relation")
         i += 1
       }
     }
+    cached.foreach(_.unpersist(false))
     acc.distinct()
   }
 

@@ -251,11 +251,10 @@ object PlacePipeline {
 
   /** A6/S8 stats (hierarchy.ml:236-286): node count = entities + their ID
     * atoms + junction atoms; edge count = one closed ID link per named
-    * entity + one hyperedge per (node, closure). Under `idParameter`
-    * (reference flag -id-parameter, botw.ml:186-188 / builder.ml:86-101)
-    * names live in the entity's own ctrl param: no ID atoms, no ID links —
-    * nodes = B+S+Bu+J, edges = junction hyperedges only. */
-  def stats(t: PlaceTables, idParameter: Boolean = false): PlaceStats = {
+    * entity + one hyperedge per (node, closure). The -id-parameter counts
+    * (botw.ml:186-188 / builder.ml:86-101) come from
+    * [[PlaceStats.fromCounts]], as the CLI derives them. */
+  def stats(t: PlaceTables): PlaceStats = {
     // one aggregate over the edges yields edge count, open count AND the
     // atom count (nJ = Σ n_ports — every atom belongs to exactly one edge),
     // so junctionAtoms is never re-scanned here. The four jobs share the
@@ -277,7 +276,7 @@ object PlacePipeline {
     val nJ = eAgg.getLong(2)
     PlaceStats.fromCounts(Await.result(fB, Duration.Inf),
       Await.result(fS, Duration.Inf), Await.result(fBu, Duration.Inf),
-      nJ, nE, nOpen, idParameter)
+      nJ, nE, nOpen, idParameter = false)
   }
 
   /** End-to-end build from a reference-format data directory. */

@@ -37,12 +37,16 @@ object MultiModal {
     out
   }
 
+  private val Seed = 42L
+  private val FeatureDim = 16
+  private val FrameStride = 4
+
   /** Deterministic synthetic media table — binary payloads with metadata
     * over three kinds (image / audio / video). */
-  def synthMedia(spark: SparkSession, n: Long, seed: Long = 42L): Dataset[MediaRow] = {
+  def synthMedia(spark: SparkSession, n: Long): Dataset[MediaRow] = {
     import spark.implicits._
     spark.range(n).map { i =>
-      val h = graft.synth.SynthWorld.mix(seed ^ i)
+      val h = graft.synth.SynthWorld.mix(Seed ^ i)
       val kind = math.floorMod(h, 3L) match {
         case 0 => "image"; case 1 => "audio"; case _ => "video"
       }
@@ -57,10 +61,9 @@ object MultiModal {
 
   /** Batch feature extraction: one pass per partition, decoder state built
     * once per task (the mapInPandas shape). Video is FRAME-SAMPLED before
-    * decode: every `frameStride`-th 16-byte frame block feeds the feature;
+    * decode: every [[FrameStride]]-th 16-byte frame block feeds the feature;
     * image/audio decode the full payload with per-block subsampling. */
-  def extractFeatures(media: Dataset[MediaRow], dim: Int = 16,
-                      frameStride: Int = 4): Dataset[MediaFeatures] = {
+  def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
       // per-partition decoder init happens HERE (stubbed)
@@ -69,14 +72,14 @@ object MultiModal {
           case "video" =>
             val blocks = row.media.grouped(16).toArray
             val sampled = blocks.indices.collect {
-              case bi if bi % frameStride == 0 => blocks(bi)
+              case bi if bi % FrameStride == 0 => blocks(bi)
             }
             (sampled.flatten.toArray, sampled.length)
           case _ =>
-            (row.media, row.media.grouped(frameStride).size)
+            (row.media, row.media.grouped(FrameStride).size)
         }
         MediaFeatures(row.media_id, row.kind, row.media.length.toLong,
-          stubDecode(decoded, dim), frames)
+          stubDecode(decoded, FeatureDim), frames)
       }
     }
   }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.truncated
 
 /** Relational operator library — each public method is one operator from
   * SURVEY.md §2, expressed over the harness TPC-H-ish tables so the driver
@@ -13,7 +14,8 @@ import org.apache.spark.sql.expressions.Window
   *    Catalyst); collected sets are bounded per group before collecting;
   *  - dimension-sized sides of joins are broadcast explicitly;
   *  - dedup uses window-rank, never dropDuplicates on unbounded state;
-  *  - iterative closure loops localCheckpoint each pass to cut lineage.
+  *  - iterative closure loops truncate each pass's plan and free its cache
+  *    before returning.
   */
 object Relational {
 
@@ -120,24 +122,26 @@ object Relational {
       .agg(count(lit(1)).as("n_customers"))
 
   /** Generic iterative transitive closure over an edge table
-    * (child, parent) → all (child, ancestor) pairs. Bounded-depth loop with
-    * localCheckpoint per pass (SURVEY.md §2.5 R1/R3): Spark has no recursive
-    * CTE, so the fixpoint is a driver loop over Datasets. */
-  def transitiveClosure(edges: DataFrame, maxIters: Int = 32): DataFrame = {
+    * (child, parent) → all (child, ancestor) pairs. Loop of at most 32
+    * passes, each behind a [[graft.truncated]] plan (SURVEY.md §2.5 R1/R3):
+    * Spark has no recursive CTE, so the fixpoint is a driver loop over
+    * Datasets. Every pass's cache is freed before the call returns; the
+    * result recomputes from their lineage. */
+  def transitiveClosure(edges: DataFrame): DataFrame = {
     // edges: (child STRING, parent STRING)
     var acc = edges.select(col("child"), col("parent").as("ancestor"))
     var frontier = acc
-    var i = 0
+    val passes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var done = false
-    while (i < maxIters && !done) {
-      val next = frontier.as("f")
+    while (passes.length < 32 && !done) {
+      val stepped = truncated(frontier.as("f")
         .join(edges.as("e"), col("f.ancestor") === col("e.child"))
-        .select(col("f.child").as("child"), col("e.parent").as("ancestor"))
-      val stepped = next.localCheckpoint(true)
+        .select(col("f.child").as("child"), col("e.parent").as("ancestor")))
+      passes += stepped
       if (stepped.isEmpty) done = true
       else { acc = acc.unionByName(stepped); frontier = stepped }
-      i += 1
     }
+    passes.foreach(_.unpersist(false))
     acc.distinct()
   }
 

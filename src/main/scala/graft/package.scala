@@ -1,8 +1,6 @@
-package graft
-
 import org.apache.spark.sql.DataFrame
 
-package object spatial {
+package object graft {
 
   /** `df` behind a truncated PLAN, cached: createDataFrame over its RDD
     * gives the next iteration round a flat plan to analyze, while the RDD
@@ -12,6 +10,6 @@ package object spatial {
     * keeps constraints that break a later unionByName on Spark 4.1
     * (key-not-found in rewriteConstraints). Lazy: the caller's next action
     * fills the cache. */
-  private[spatial] def truncated(df: DataFrame): DataFrame =
+  private[graft] def truncated(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema).cache()
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    centroid count and nprobe derive from the corpus size
   *    ([[ivfParams]]), so candidate pairs stay sub-quadratic.
   *  - [[cosineNearDup]]: unordered pairs above a cosine threshold, over the
-  *    exact all-pairs join or the IVF candidates.
+  *    exact all-pairs join.
   */
 object Ann {
 
@@ -93,7 +93,7 @@ object Ann {
                 maxRows: Long = 65536L): DataFrame = {
     // one shared guarded pair machinery ([[cosinePairsOf]]); each unordered
     // pair mirrors into both directions, ranked by the one top-k tail
-    val scored = cosinePairsOf(spark, emb(spark, dir), exact = true, maxRows)
+    val scored = cosinePairsOf(spark, emb(spark, dir), maxRows)
     val directed = scored.select(col("id_a").as("vec_id"),
         col("id_b").as("cand_id"), col("cos").as("cos_sim"))
       .unionByName(scored.select(col("id_b").as("vec_id"),
@@ -110,14 +110,21 @@ object Ann {
     *
     * At the small harness corpora (n ≤ 4096) this reproduces c=64/nprobe=32
     * exactly — the configuration whose recall@3 was measured at 0.94 — so
-    * q29 is unchanged. `c` is capped by the training-sample bound (k-means
-    * cannot place more centroids than samples) and by 65536 (centroid
-    * broadcast ≤ ~34 MB at 64 dims). */
-  def ivfParams(n: Long, maxTrainSamples: Long = 100000L): (Int, Int) = {
-    val c = math.max(64L, math.ceil(math.sqrt(n.toDouble)).toLong)
-      .min(maxTrainSamples).min(65536L).toInt
+    * q29 is unchanged. `c` is capped at 65536 (centroid broadcast ≤ ~34 MB
+    * at 64 dims), which is below the [[MaxTrainSamples]] bound; k-means
+    * places min(c, samples) centroids. */
+  def ivfParams(n: Long): (Int, Int) = {
+    val c = math.max(64L, math.ceil(math.sqrt(n.toDouble)).toLong).min(65536L).toInt
     (c, math.min(32, c))
   }
+
+  /** Bound on the k-means training sample: the sampling modulus is derived
+    * from the corpus size so that at most ~this many vectors reach the
+    * driver. */
+  private val MaxTrainSamples = 100000L
+
+  /** Spherical k-means iterations over the training sample. */
+  private val TrainIters = 5
 
   /** IVF (inverted-file) ANN — the scale path for top-k on diffuse corpora
     * (measured here: top-1 cosine ≈ 0.36, barely 3σ above random — at that
@@ -130,22 +137,18 @@ object Ann {
     * candidate join ([[selfCandidates]]) scores each pair's exact cosine and
     * [[rerank]] keeps the top k.
     *
-    * c/nprobe default to 0 = AUTO: derived from the corpus size by
-    * [[ivfParams]] (the FAISS posture — parameters come from the data, like
-    * maxTrainSamples already did; a user calling the default at 10⁸ vectors
-    * gets a sub-quadratic job, not a silent 50%-scan quadratic one). */
-  def ivfTopK(spark: SparkSession, dir: String, k: Int = 3,
-              c: Int = 0, nprobe: Int = 0, iters: Int = 5,
-              maxTrainSamples: Long = 100000L): DataFrame =
-    rerank(selfCandidates(emb(spark, dir), c, nprobe, iters, maxTrainSamples), k)
+    * c and nprobe derive from the corpus size by [[ivfParams]] (the FAISS
+    * posture — parameters come from the data, so a call at 10⁸ vectors gets
+    * a sub-quadratic job, not a silent 50%-scan quadratic one). */
+  def ivfTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
+    rerank(selfCandidates(emb(spark, dir)), k)
 
-  /** Candidate-pair count for the given corpus/params — the measurable
+  /** Candidate-pair count for the given corpus — the measurable
     * scale contract (NearDupAnnSpec asserts it stays ≤ nprobe·n^1.5·slack
     * and grows sub-quadratically across corpus sizes). Only the ids reach
     * the count: Catalyst prunes the embeddings and the cosine. */
-  def ivfCandidatePairs(spark: SparkSession, dir: String, c: Int = 0, nprobe: Int = 0,
-                        iters: Int = 5, maxTrainSamples: Long = 100000L): Long =
-    selfCandidates(emb(spark, dir), c, nprobe, iters, maxTrainSamples).count()
+  def ivfCandidatePairs(spark: SparkSession, dir: String): Long =
+    selfCandidates(emb(spark, dir)).count()
 
   /** The one IVF candidate join: every corpus row probes the index trained
     * on the corpus itself, and every (probe row, assigned row) pair of two
@@ -154,14 +157,13 @@ object Ann {
     * cluster and a probe's clusters are distinct, so each pair appears once
     * per direction, and the two directions carry bit-identical cosines
     * (vec_dot and the norm product commute). */
-  private def selfCandidates(corpus: DataFrame, c: Int, nprobe: Int, iters: Int,
-                             maxTrainSamples: Long): DataFrame = {
+  private def selfCandidates(corpus: DataFrame): DataFrame = {
     // (vec_id, embedding, norm, unit), `unit` the embedding over its norm;
     // spread to the cores, since small scans land in 1 split
     val rows = withNorm(corpus.select(col("vec_id"), col("embedding")))
       .withColumn("unit", transform(col("embedding"), x => x.cast("double") / col("norm")))
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    val (assign, probe) = ivfIndex(rows, c, nprobe, iters, maxTrainSamples)
+    val (assign, probe) = ivfIndex(rows)
     rows.withColumn("cluster", probe)
       .select(col("vec_id"), col("cluster"), col("embedding").as("qv"), col("norm").as("qn"))
       .join(rows.withColumn("cluster", assign).select(col("vec_id").as("cand_id"),
@@ -250,31 +252,28 @@ object Ann {
   /** The IVF index over normed corpus `rows` as two columns over `unit`:
     * the argmax-dot centroid (`assign`) and one row per probed cluster,
     * the `nprobe` nearest centroids (`probe`, an explode). The trained
-    * centroid broadcast and effective nprobe live in the two UDFs. */
-  private def ivfIndex(rows: DataFrame, c: Int, nprobe: Int, iters: Int,
-                       maxTrainSamples: Long): (Column, Column) = {
+    * centroid broadcast and nprobe live in the two UDFs. */
+  private def ivfIndex(rows: DataFrame): (Column, Column) = {
     val spark = rows.sparkSession
     import spark.implicits._
     // spherical k-means trained DRIVER-LOCAL on a bounded hash-stratified
     // sample (the FAISS posture: training never scans the full corpus —
     // the sampling mod is DERIVED from the corpus size so at most
-    // ~maxTrainSamples vectors ever reach the driver). Sorted collect +
+    // ~MaxTrainSamples vectors ever reach the driver). Sorted collect +
     // fixed iteration order make the centroids fully deterministic (§7.5),
     // with zero Spark jobs per k-means iteration.
     val total = rows.count()
-    val (cAuto, nprobeAuto) = ivfParams(total, maxTrainSamples)
-    val cEff = if (c > 0) c else cAuto
-    val nprobeEff = math.min(if (nprobe > 0) nprobe else nprobeAuto, cEff)
-    val trainSampleMod = math.max(1L, total / maxTrainSamples)
+    val (c, nprobe) = ivfParams(total)
+    val trainSampleMod = math.max(1L, total / MaxTrainSamples)
     val sample = rows.select(col("vec_id"), col("unit")).as[(Long, Seq[Double])]
       .filter(r => trainSampleMod <= 1L ||
         math.floorMod(graft.synth.SynthWorld.mix(r._1), trainSampleMod) == 0L)
       .collect().sortBy(_._1).map(_._2.toArray)
     require(sample.nonEmpty, "empty training sample")
-    var centroids = Array.tabulate(math.min(cEff, sample.length))(i =>
-      sample((i.toLong * sample.length / math.min(cEff, sample.length)).toInt).clone())
+    var centroids = Array.tabulate(math.min(c, sample.length))(i =>
+      sample((i.toLong * sample.length / math.min(c, sample.length)).toInt).clone())
     var it = 0
-    while (it < iters) {
+    while (it < TrainIters) {
       val dim = centroids(0).length
       val sums = Array.fill(centroids.length)(new Array[Double](dim))
       val counts = new Array[Long](centroids.length)
@@ -303,58 +302,44 @@ object Ann {
     // once they are unreachable
     val bc = spark.sparkContext.broadcast(centroids)
     val assign = udf((u: Seq[Double]) => argmaxDot(u.toArray, bc.value)).asNonNullable()
-    val probe = udf((u: Seq[Double]) => topClusters(u.toArray, bc.value, nprobeEff))
+    val probe = udf((u: Seq[Double]) => topClusters(u.toArray, bc.value, nprobe))
       .asNonNullable()
     (assign(col("unit")), explode(probe(col("unit"))))
   }
 
   /** Embedding-cosine near-dup: unordered pairs with round(cos, 4) ≥
     * thresholdPct/100 — the last member of the dedup family (exact,
-    * word/shingle jaccard, MinHash, SimHash, embedding cosine).
-    *
-    *  - exact = true: all-pairs with the same loud [[exactTopK]]-style row
-    *    bound — the DuckDB-oracle path (q41) for bounded corpora.
-    *  - exact = false: the IVF candidate join, its cosine computed on the
-    *    join output, symmetrized — the scale path; recall follows the IVF
-    *    probe recall, and near-identical vectors share an argmax centroid,
-    *    so planted duplicates are found with ~certainty. */
+    * word/shingle jaccard, MinHash, SimHash, embedding cosine). All-pairs
+    * with the same loud [[exactTopK]]-style row bound — the DuckDB-oracle
+    * path (q41) for bounded corpora. */
   def cosineNearDup(spark: SparkSession, dir: String, thresholdPct: Int = 32,
-                    exact: Boolean = true, maxRows: Long = 65536L): DataFrame =
-    cosinePairsOf(spark, emb(spark, dir), exact, maxRows)
+                    maxRows: Long = 65536L): DataFrame =
+    cosinePairsOf(spark, emb(spark, dir), maxRows)
       .withColumn("cos_r4", round(col("cos"), 4))
       .filter(col("cos_r4") >= thresholdPct / 100.0)
       .select(col("id_a"), col("id_b"), col("cos_r4"))
 
-  /** Shared pair machinery over any (vec_id, embedding) frame: every
-    * unordered candidate pair with its exact cosine, UNTHRESHOLDED — the
-    * caller filters. exact=true is the guarded all-pairs join (the filter
-    * pipelines over it, nothing materializes); exact=false takes
-    * (least, greatest, cos) from the IVF candidate join and drops the
-    * second direction with `distinct` (both directions carry the same
-    * cosine bits). Used by exactTopK/cosineNearDup (q28/q41).
+  /** The guarded all-pairs join over any (vec_id, embedding) frame: every
+    * unordered pair (id_a < id_b) with its exact cosine, UNTHRESHOLDED — the
+    * caller filters or ranks, and nothing materializes between. Shared by
+    * exactTopK/cosineNearDup (q28/q41).
     *
-    * INPUT CONTRACT: `rows0` is evaluated several times (count guard or
-    * k-means sample, assignment, probes) — it must be DETERMINISTIC, and a
-    * computed pipeline (not a scan) re-executes per evaluation unless the
-    * caller caches it. */
-  private[sim] def cosinePairsOf(spark: SparkSession, rows0: DataFrame,
-                                 exact: Boolean, maxRows: Long = 65536L): DataFrame =
-    if (exact) {
-      val e = withNorm(rows0.select(col("vec_id"), col("embedding")))
-      val n = e.count()
-      require(n <= maxRows,
-        s"exact cosine pairing is an all-pairs O(n²) join: $n rows > maxRows=$maxRows. " +
-          "Use exact=false / ivfTopK (sub-quadratic candidates) or raise maxRows deliberately.")
-      val q = e.repartition(spark.sparkContext.defaultParallelism)
-      q.select(col("vec_id").as("id_a"), col("embedding").as("qv"), col("norm").as("qn"))
-        .join(e.select(col("vec_id").as("id_b"), col("embedding").as("cv"),
-          col("norm").as("cn")), col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), cosine(col("qv"), col("cv"), col("qn"), col("cn")).as("cos"))
-    } else
-      selfCandidates(rows0, 0, 0, 5, 100000L)
-        .select(least(col("vec_id"), col("cand_id")).as("id_a"),
-          greatest(col("vec_id"), col("cand_id")).as("id_b"), col("cos_sim").as("cos"))
-        .distinct()
+    * INPUT CONTRACT: `rows0` is evaluated several times (count guard, both
+    * join sides) — it must be DETERMINISTIC, and a computed pipeline (not a
+    * scan) re-executes per evaluation unless the caller caches it. */
+  private def cosinePairsOf(spark: SparkSession, rows0: DataFrame,
+                            maxRows: Long): DataFrame = {
+    val e = withNorm(rows0.select(col("vec_id"), col("embedding")))
+    val n = e.count()
+    require(n <= maxRows,
+      s"exact cosine pairing is an all-pairs O(n²) join: $n rows > maxRows=$maxRows. " +
+        "Use ivfTopK (sub-quadratic candidates) or raise maxRows deliberately.")
+    val q = e.repartition(spark.sparkContext.defaultParallelism)
+    q.select(col("vec_id").as("id_a"), col("embedding").as("qv"), col("norm").as("qn"))
+      .join(e.select(col("vec_id").as("id_b"), col("embedding").as("cv"),
+        col("norm").as("cn")), col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), cosine(col("qv"), col("cv"), col("qn"), col("cn")).as("cos"))
+  }
 
   private def argmaxDot(u: Array[Double], cents: Array[Array[Double]]): Int = {
     var best = 0; var bestD = Double.MinValue

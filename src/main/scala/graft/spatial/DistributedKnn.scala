@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.cells.CellIndex
+import graft.truncated
 
 /** Distributed nearest-neighbor snap — the 100 TB path for J9 when the
   * target side is NOT broadcastable (fact×fact, e.g. pages × planet

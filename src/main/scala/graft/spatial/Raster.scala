@@ -2,6 +2,7 @@ package graft.spatial
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.truncated
 
 /** Raster↔vector operators over the cell grid (north rule: "H3/S2 index,
   * point-in-polygon, kNN, raster↔vector").
@@ -85,8 +86,7 @@ object Raster {
     * Output: (i, j, comp) where comp = min linear key (i*gridN + j)
     * reachable in the component — identical to the one-phase labeling. */
   def connectedComponents(spark: SparkSession, cells: DataFrame,
-                          gridN: Long, maxIters: Int = 64,
-                          blockBits: Int = 10): DataFrame = {
+                          gridN: Long, blockBits: Int = 10): DataFrame = {
     import spark.implicits._
     val B = blockBits
     val ids = cells.select(col("i"), col("j"), (col("i") * gridN + col("j")).as("key"))
@@ -140,13 +140,14 @@ object Raster {
     var labels = eqNodes.select(col("key"), col("key").as("comp"))
     var converged = edges.isEmpty // single-block / no-border worlds skip the loop
     var iter = 0
+    val maxRounds = 64
     // convergence via DECIMAL(38,0) sum: keys are i*gridN+j, so at fine
     // grids (gridN ≈ 2³¹) a Long sum of ~10⁹ labels overflows — under ANSI
     // mode that is a job-killing exception, and without ANSI a wrapped sum
     // could silently alias two different label states. 38 digits cannot
     // overflow (n·maxKey ≤ 10¹⁰·2⁶³ < 10³⁰).
     var prevSum: java.math.BigDecimal = null
-    while (!converged && iter < maxIters) {
+    while (!converged && iter < maxRounds) {
       // (1) push the label across edges, (2) pointer-halve: follow the
       // label one hop (comp := min(comp, comp(comp)) — comp is itself a
       // cell key, so the self-join always hits). Halving turns the round

@@ -88,24 +88,17 @@ object Geocode {
     * `text.contains(place_name)` join — evaluated O(pages × names)
     * substring scans and is gone.
     *
-    * Returns one row per page + the canonically-first matching entry's
+    * Returns `keyCols` + the canonically-first matching entry's
     * (place_name, g_lat, g_lon) — min by place name, the deterministic
-    * tie-break — with nulls when `keepUnmatched` and no name matches;
-    * unmatched pages drop when !keepUnmatched.
-    *
-    * `keyCols`: when the caller names the page identity (e.g. `url` or
-    * `doc_id`), nothing text-sized ever rides a shuffle: single-token
-    * names match on an exploded (keys, token) stream with the text column
-    * PRUNED; multi-token candidates (the rare class) semi-filter the pages
-    * scan by a broadcast of their keys and verify the full sequence on
-    * that tiny subset. The output is keys + (place_name, g_lat, g_lon) —
-    * the 100 TB shape; re-attach columns by key downstream if needed.
-    * Empty `keyCols` (the default) uses every page column as the identity
-    * and returns them all — correct for key-less frames, text-wide through
-    * the shuffles. Output has SET semantics per page identity: one row per
-    * distinct key, matched or (under `keepUnmatched`) null-extended.
-    * Duplicate keys are safe: (keys, text) rows dedup before
-    * tokenization and the n-gram window partitions per distinct text (a
+    * tie-break — for every page identity with at least one match; pages
+    * that match no name are absent. `keyCols` (non-empty, e.g. `url` or
+    * `doc_id`) names the page identity, so nothing text-sized ever rides a
+    * shuffle: names match on an exploded (keys, token) stream with the text
+    * column PRUNED, and the output is keys + match fields — the 100 TB
+    * shape; re-attach columns by key downstream if needed. Output has SET
+    * semantics per page identity: one row per distinct matched key (a null
+    * key is one identity). Duplicate keys are safe: (keys, text) rows dedup
+    * before tokenization and the n-gram window partitions per distinct text (a
     * 64-bit text discriminator joins the partition key), so streams never
     * interleave; a key carrying several distinct texts matches the UNION
     * of its texts' names, min-name tie-break across the union.
@@ -121,8 +114,7 @@ object Geocode {
     * is reused. The multi-token LENGTH set still collects driver-side —
     * it is ≤ the distinct name lengths (tens), never the names. */
   def gazetteerMatch(pages: DataFrame, gazetteer: DataFrame,
-                     keepUnmatched: Boolean = true,
-                     keyCols: Seq[String] = Nil,
+                     keyCols: Seq[String],
                      maxNames: Long = 10000000L,
                      broadcastDim: Boolean = true): DataFrame = {
     val reserved = Set("place_name", "g_lat", "g_lon", "tok0", "multi", "g0", "g",
@@ -130,9 +122,8 @@ object Geocode {
     require(pages.columns.forall(c =>
         !reserved.contains(c) && !c.matches("lead_\\d+")),
       s"page columns collide with reserved names: ${reserved.mkString(",")}, lead_N")
-    require(keyCols.forall(pages.columns.contains),
-      s"keyCols ${keyCols.mkString(",")} must be page columns")
-    val keys = if (keyCols.nonEmpty) keyCols else pages.columns.toSeq
+    require(keyCols.nonEmpty && keyCols.forall(pages.columns.contains),
+      s"keyCols [${keyCols.mkString(",")}] must be a non-empty list of page columns")
     // BROADCAST CONTRACT (one agg job computes the guard count AND the
     // multi-token length set): the gazetteer is a broadcast dimension —
     // ~10⁷ names (≈ hundreds of MB broadcast) is the practical ceiling.
@@ -165,17 +156,17 @@ object Geocode {
     // positions from identical copies would manufacture n-grams the text
     // does not contain ("a b" twice → stream [a,a,b,b] → bigram "a a")
     val distinctPages = pages
-      .select((keys :+ "text").distinct.map(col): _*).distinct()
+      .select((keyCols :+ "text").distinct.map(col): _*).distinct()
     // tokens stream: keys + one token per row — text PRUNED before the
     // explode, so a 10k-token page costs 10k narrow rows, not 10k copies
-    // of its text (keyCols empty degrades gracefully: keys ⊇ text)
+    // of its text
     val toks = distinctPages
-      .select(keys.map(col) :+
+      .select(keyCols.map(col) :+
         explode(array_distinct(split(col("text"), "\\s+"))).as("tok0"): _*)
       .filter(col("tok0") =!= "") // leading whitespace splits to one "" token
     // single-token names are fully proven by the token equi-join
     val singleHits = toks.join(dim(gz.filter(!col("multi"))), "tok0")
-      .select(keys.map(col) :+ g0: _*)
+      .select(keyCols.map(col) :+ g0: _*)
     // multi-token names verify ON THE TOKEN STREAM: position-ordered
     // tokens + window leads build every m-gram present in the gazetteer
     // (m collected driver-side from the dimension table), then ONE
@@ -193,12 +184,12 @@ object Geocode {
         // streams — t_disc discriminates them (64-bit hash; a collision
         // merges two streams, ~2⁻⁶⁴ per duplicate-key pair)
         val wPos = org.apache.spark.sql.expressions.Window
-          .partitionBy((keys.map(col) :+ col("t_disc")): _*).orderBy(col("pos"))
+          .partitionBy((keyCols.map(col) :+ col("t_disc")): _*).orderBy(col("pos"))
         // empty tokens (leading whitespace) are filtered BEFORE the lead
         // windows so n-grams span real tokens only; pos gaps don't matter —
         // the window orders by pos, it doesn't difference it
         val toksPos = distinctPages
-          .select(keys.map(col) ++ Seq(xxhash64(col("text")).as("t_disc"),
+          .select(keyCols.map(col) ++ Seq(xxhash64(col("text")).as("t_disc"),
             posexplode(split(col("text"), "\\s+")).as(Seq("pos", "tok"))): _*)
           .filter(col("tok") =!= "")
         val maxM = multiLens.max
@@ -207,28 +198,17 @@ object Geocode {
         def ngram(m: Int) =
           concat((1 until m).foldLeft(Seq(col("tok")))((acc, i) =>
             acc ++ Seq(lit(" "), col(s"lead_$i"))): _*)
-        val ngrams = withLeads.select(keys.map(col) :+
+        val ngrams = withLeads.select(keyCols.map(col) :+
           explode(array(multiLens.map(m => ngram(m)): _*)).as("ngram"): _*)
         ngrams.join(dim(gz.filter(col("multi"))),
             col("ngram") === col("place_name"))
-          .select(keys.map(col) :+ g0: _*)
+          .select(keyCols.map(col) :+ g0: _*)
       }
-    val matched = singleHits.unionByName(multiHits)
-      .groupBy(keys.map(col): _*)
+    singleHits.unionByName(multiHits)
+      .groupBy(keyCols.map(col): _*)
       .agg(min(col("g0")).as("g"))
-      .select(keys.map(col) ++ Seq(col("g.place_name").as("place_name"),
+      .select(keyCols.map(col) ++ Seq(col("g.place_name").as("place_name"),
         col("g.g_lat").as("g_lat"), col("g.g_lon").as("g_lon")): _*)
-    if (!keepUnmatched) matched
-    else {
-      // single evaluation of `matched` (a left join, not union + anti) and
-      // null-safe key equality so null-bearing key-less frames neither
-      // drop nor duplicate rows
-      val pageSide = pages.select(keys.map(col): _*).distinct()
-      val cond = keys.map(k => pageSide(k) <=> matched(k)).reduce(_ && _)
-      pageSide.join(matched, cond, "left")
-        .select(keys.map(pageSide(_)) ++
-          Seq(matched("place_name"), matched("g_lat"), matched("g_lon")): _*)
-    }
   }
 
   /** One geocode result bundle — single struct so the whole spatial join

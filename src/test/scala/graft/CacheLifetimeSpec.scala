@@ -5,6 +5,8 @@ import org.apache.spark.sql.DataFrame
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
+import graft.hier.Hierarchy
+import graft.ops.Relational
 import graft.react.BigraphState
 import graft.sim.Ann
 import graft.synth.SynthWorld
@@ -30,11 +32,20 @@ class CacheLifetimeSpec extends AnyFunSuite {
     Seq.empty[(String, Long)].toDF("edge_key", "place_id"),
     Seq.empty[(Long, Long)].toDF("agent_a", "agent_b"))
 
+  /** Relations 10 ∋ 20 ∋ 30, plus an unrelated relation 99. */
+  private def members(): DataFrame = Seq(
+    (10L, "relation", 20L), (10L, "way", 100L),
+    (20L, "relation", 30L), (20L, "node", 200L),
+    (30L, "way", 300L),
+    (99L, "node", 999L)).toDF("rel_id", "member_kind", "member_ref")
+
   private val consumers: Seq[(String, () => Any)] = Seq(
     "Ann.ivfTopK" -> (() => Ann.ivfTopK(spark, sf).collect()),
     "Ann.ivfCandidatePairs" -> (() => Ann.ivfCandidatePairs(spark, sf)),
-    "Ann.cosineNearDup(exact = false)" -> (() => Ann.cosineNearDup(spark, sf, exact = false).collect()),
-    "BigraphState.places" -> (() => tinyState().places.count()))
+    "Ann.cosineNearDup" -> (() => Ann.cosineNearDup(spark, sf).collect()),
+    "BigraphState.places" -> (() => tinyState().places.count()),
+    "Relational.closure" -> (() => Relational.closure(spark, sf).collect()),
+    "Hierarchy.memberClosure" -> (() => Hierarchy.memberClosure(members()).collect()))
 
   for ((name, consume) <- consumers)
     test(s"$name leaves the session's persistent RDDs as it found them") {
@@ -52,8 +63,11 @@ class CacheLifetimeSpec extends AnyFunSuite {
   }
 
   test("two concurrent ivfTopK calls on one session return their sequential results") {
+    // a second corpus, so the two calls train different indexes
+    val other = java.nio.file.Files.createTempDirectory("graft-ivf-other").toString
+    StressBench.writeEmbeddings(spark, 500L, other)
     def first = sortedRows(Ann.ivfTopK(spark, sf, k = 3))
-    def second = sortedRows(Ann.ivfTopK(spark, sf, k = 2, c = 16, nprobe = 4))
+    def second = sortedRows(Ann.ivfTopK(spark, other, k = 2))
     val sequential = (first, second)
     assert(sequential._1 != sequential._2, "the two calls must differ to tell them apart")
     assert(concurrently(first, second) == sequential)

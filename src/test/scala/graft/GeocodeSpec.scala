@@ -83,10 +83,9 @@ class GeocodeSpec extends AnyFunSuite {
       ("u2", "tab stop"),           // 'tab' hits as a token
       ("u3", "tables scanned"))     // substring-only: must NOT match anything
       .toDF("url", "text")
-    val out = Geocode.gazetteerMatch(pages, gaz)
-    val got = out.collect().map(r => r.getAs[String]("url") ->
-      Option(r.getAs[String]("place_name"))).toMap
-    assert(got == Map("u1" -> Some("scan"), "u2" -> Some("tab"), "u3" -> None))
+    val out = Geocode.gazetteerMatch(pages, gaz, keyCols = Seq("url"))
+    val got = out.collect().map(r => r.getAs[String]("url") -> r.getAs[String]("place_name")).toMap
+    assert(got == Map("u1" -> "scan", "u2" -> "tab"))
     // the round-3 contains-NLJ shape is gone: the candidate join must be a
     // broadcast HASH join on the first token, never a nested loop
     val plan = out.queryExecution.executedPlan.toString
@@ -106,9 +105,8 @@ class GeocodeSpec extends AnyFunSuite {
       (5L, "dovercourt table-scan")) // substrings only: no match
       .toDF("doc_id", "text")
     val got = Geocode.gazetteerMatch(pages, gaz, keyCols = Seq("doc_id"))
-      .collect().map(r => r.getLong(0) -> Option(r.getAs[String]("place_name"))).toMap
-    assert(got == Map(1L -> Some("dover"), 2L -> Some("table scan"),
-      3L -> Some("table scan"), 4L -> Some("dover"), 5L -> None))
+      .collect().map(r => r.getLong(0) -> r.getAs[String]("place_name")).toMap
+    assert(got == Map(1L -> "dover", 2L -> "table scan", 3L -> "table scan", 4L -> "dover"))
   }
 
   test("gazetteer broadcast bound fails loudly past maxNames") {
@@ -137,13 +135,11 @@ class GeocodeSpec extends AnyFunSuite {
     }.toDF("doc_id", "text")
     def run(bd: Boolean) = Geocode.gazetteerMatch(pages, gaz,
         keyCols = Seq("doc_id"), broadcastDim = bd)
-      .collect().map(r => (r.getLong(0), Option(r.getAs[String]("place_name")))).toSet
+      .collect().map(r => (r.getLong(0), r.getAs[String]("place_name"))).toSet
     assert(run(false) == run(true))
-    // the fact×fact MATCH CORE (keepUnmatched=false isolates it from the
-    // page-side null-extension join, which may legitimately broadcast the
-    // aggregated match table) must not broadcast the gazetteer side; and
+    // the fact×fact path must not broadcast the gazetteer side, and
     // maxNames must not bind (a 1-name bound still runs)
-    val distPlan = Geocode.gazetteerMatch(pages, gaz, keepUnmatched = false,
+    val distPlan = Geocode.gazetteerMatch(pages, gaz,
       keyCols = Seq("doc_id"), broadcastDim = false, maxNames = 1L)
     assert(distPlan.count() > 0L) // guard skipped on the distributed path
     val planStr = distPlan.queryExecution.executedPlan.toString
@@ -154,18 +150,14 @@ class GeocodeSpec extends AnyFunSuite {
       s"expected the pinned shuffle_hash strategy on the gazetteer joins:\n$planStr")
   }
 
-  test("gazetteer match with keyCols returns the same matches as the all-column path") {
+  test("gazetteer match returns the keys and match fields of matched pages only") {
     val gaz = Seq(("scan", 3.0, 3.0), ("table scan", 2.0, 2.0))
       .toDF("place_name", "g_lat", "g_lon")
     val pages = Seq((1L, "a table scan here"), (2L, "no hits at all"), (3L, "scan me"))
       .toDF("doc_id", "text")
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "place_name", "g_lat", "g_lon").collect()
-        .map(r => (r.getLong(0), Option(r.getAs[String]("place_name")))).toSet
-    val wide = Geocode.gazetteerMatch(pages, gaz)
     val narrow = Geocode.gazetteerMatch(pages, gaz, keyCols = Seq("doc_id"))
-    assert(norm(wide) == norm(narrow))
-    assert(norm(narrow) == Set((1L, Some("scan")), (2L, None), (3L, Some("scan"))))
+    assert(narrow.collect().map(r => (r.getLong(0), r.getAs[String]("place_name"))).toSet ==
+      Set((1L, "scan"), (3L, "scan")))
     // narrow contract: keys + match fields only (text never in the output)
     assert(narrow.columns.toSeq == Seq("doc_id", "place_name", "g_lat", "g_lon"))
   }
@@ -187,19 +179,20 @@ class GeocodeSpec extends AnyFunSuite {
     }.distinctBy(_._1)
     val got = Geocode.gazetteerMatch(pages.toDF("doc_id", "text"),
         names.toDF("place_name", "g_lat", "g_lon"), keyCols = Seq("doc_id"))
-      .collect().map(r => r.getLong(0) -> Option(r.getAs[String]("place_name"))).toMap
-    // reference: token-sequence containment + min-name tie-break
+      .collect().map(r => r.getLong(0) -> r.getAs[String]("place_name")).toMap
+    // reference: token-sequence containment + min-name tie-break, over the
+    // pages that match at least one name
     def matches(text: String, name: String): Boolean =
       s" $text ".contains(s" $name ")
-    val want = pages.map { case (id, text) =>
-      id -> names.map(_._1).filter(matches(text, _)).sorted.headOption
+    val want = pages.flatMap { case (id, text) =>
+      names.map(_._1).filter(matches(text, _)).sorted.headOption.map(id -> _)
     }.toMap
     assert(got == want, {
-      val bad = want.keys.filter(k => got.get(k) != want.get(k)).take(5)
+      val bad = (want.keySet ++ got.keySet).filter(k => got.get(k) != want.get(k)).take(5)
       s"mismatches at ${bad.map(k => (k, got.get(k), want.get(k))).mkString(", ")}"
     })
-    assert(want.values.flatten.nonEmpty, "degenerate fixture: nothing matched")
-    assert(want.values.exists(_.isEmpty), "degenerate fixture: everything matched")
+    assert(want.nonEmpty, "degenerate fixture: nothing matched")
+    assert(want.size < pages.size, "degenerate fixture: everything matched")
   }
 
   test("duplicate keys never interleave token streams or forge n-grams") {
@@ -237,13 +230,12 @@ class GeocodeSpec extends AnyFunSuite {
   test("gazetteer match handles empty gazetteer and empty pages without error") {
     val emptyGaz = Seq.empty[(String, Double, Double)].toDF("place_name", "g_lat", "g_lon")
     val pages = Seq((1L, "some text here")).toDF("doc_id", "text")
-    val g1 = Geocode.gazetteerMatch(pages, emptyGaz, keyCols = Seq("doc_id"))
-    assert(g1.collect().map(r => (r.getLong(0), r.isNullAt(1))).toSeq == Seq((1L, true)))
-    assert(Geocode.gazetteerMatch(pages, emptyGaz,
-      keepUnmatched = false, keyCols = Seq("doc_id")).count() == 0)
+    assert(Geocode.gazetteerMatch(pages, emptyGaz, keyCols = Seq("doc_id")).count() == 0)
     val gaz = Seq(("x", 1.0, 1.0)).toDF("place_name", "g_lat", "g_lon")
     val emptyPages = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(Geocode.gazetteerMatch(emptyPages, gaz, keyCols = Seq("doc_id")).count() == 0)
+    // the page identity is required
+    intercept[IllegalArgumentException](Geocode.gazetteerMatch(pages, gaz, keyCols = Nil))
   }
 
   test("curation pipeline: quality-filter, dedup with copy counts, resumable commit") {

@@ -160,4 +160,42 @@ class RasterSpec extends AnyFunSuite {
       .select("comp").distinct().collect()
     assert(got.length == 1 && got(0).getLong(0) == 0L)
   }
+
+  /** 4-neighbour components of `cells` by a driver union-find: each cell →
+    * the min linear key (i * gridN + j) of its component. */
+  private def unionFindLabels(cells: Set[(Long, Long)], gridN: Long): Map[(Long, Long), Long] = {
+    val parent = scala.collection.mutable.HashMap(cells.toSeq.map(c => c -> c): _*)
+    def find(c: (Long, Long)): (Long, Long) = if (parent(c) == c) c else find(parent(c))
+    for ((i, j) <- cells; n <- Seq((i + 1, j), (i, j + 1)) if cells(n)) {
+      val (a, b) = (find((i, j)), find(n))
+      if (a != b) parent(a) = b
+    }
+    cells.groupBy(find).values.flatMap { comp =>
+      val min = comp.map { case (i, j) => i * gridN + j }.min
+      comp.map(_ -> min)
+    }.toMap
+  }
+
+  // seeded random rasters near the site-percolation threshold (long,
+  // branching components that cross many block borders), each holding
+  // cells on row 0 and column 0
+  for ((seed, blockBits) <- Seq((1L, 1), (2L, 2), (3L, 3), (4L, 10)))
+    test(s"two-phase CC equals a driver union-find on a random 64x64 raster " +
+      s"(blockBits=$blockBits, seed=$seed)") {
+      val gridN = 64L
+      val rng = new scala.util.Random(seed)
+      val cells = (for (i <- 0L until gridN; j <- 0L until gridN
+        if rng.nextDouble() < 0.55) yield (i, j)).toSet
+      assert(cells.exists(_._1 == 0L) && cells.exists(_._2 == 0L),
+        "degenerate fixture: no cell on row 0 or column 0")
+      val comps = Raster.connectedComponents(spark, cells.toSeq.toDF("i", "j"), gridN,
+        blockBits = blockBits)
+      val got = comps.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      comps.unpersist(true)
+      val want = unionFindLabels(cells, gridN)
+      assert(got == want, {
+        val bad = (want.keySet ++ got.keySet).filter(c => got.get(c) != want.get(c)).take(5)
+        s"mismatches at ${bad.map(c => (c, got.get(c), want.get(c))).mkString(", ")}"
+      })
+    }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.bigraph.{Assembly, BigraphJson}
-import graft.hier.PlacePipeline
+import graft.hier.{PlacePipeline, PlaceStats}
 import graft.react.Reactions
 
 /** Reaction rules (SURVEY.md §2.9) applied to the real Dover bigraph, and
@@ -171,7 +171,10 @@ class ReactionsSpec extends AnyFunSuite {
 
   test("-id-parameter mode: nodes = B+S+Bu+J, edges = junction links only, loader round-trips") {
     val stDefault = PlacePipeline.stats(doverTables)
-    val stParam = PlacePipeline.stats(doverTables, idParameter = true)
+    val stParam = PlaceStats.fromCounts(stDefault.nBoundaries, stDefault.nStreets,
+      stDefault.nBuildings, stDefault.nJunctions,
+      nHyperedges = doverTables.junctionEdges.count(), nOpen = stDefault.nOpenNames,
+      idParameter = true)
     val (b, s, bu, j) = (stParam.nBoundaries, stParam.nStreets, stParam.nBuildings, stParam.nJunctions)
     assert(stParam.nNodes == b + s + bu + j)
     assert(stDefault.nNodes == 2 * (b + s + bu) + j)

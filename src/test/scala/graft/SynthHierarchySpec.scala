@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.bigraph.{Assembly, BigraphJson}
-import graft.hier.{Hierarchy, PlacePipeline}
+import graft.hier.{Hierarchy, PlacePipeline, PlaceStats}
 import graft.synth.SynthWorld
 
 /** PlacePipeline on the synthetic per-boundary extracts, checked against
@@ -120,7 +120,9 @@ class SynthHierarchySpec extends AnyFunSuite {
     assert(st.nOpenNames == cfg.gridP * cfg.gridP * cfg.gridC * cfg.gridC)
 
     // -id-parameter JSON loads back with names intact and no ID atoms
-    val stParam = PlacePipeline.stats(t, idParameter = true)
+    val stParam = PlaceStats.fromCounts(st.nBoundaries, st.nStreets, st.nBuildings,
+      st.nJunctions, nHyperedges = t.junctionEdges.count(), nOpen = st.nOpenNames,
+      idParameter = true)
     val paramPath = tmpJson()
     Assembly.writeJson(spark, t, paramPath, idParameter = true)
     val loaded = Assembly.loadJson(spark, paramPath)
