@@ -57,6 +57,18 @@ object StressBench {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
   }
 
+  /** The base corpus size of [[runIvf]]; its 10× leg is 50k vectors. */
+  private val IvfBase = 5000L
+
+  /** The directory of the n-vector [[writeEmbeddings]] corpus under
+    * java.io.tmpdir, written on first use and reused after. */
+  def embeddingsDir(spark: SparkSession, n: Long): String = {
+    val dir = s"${sys.props("java.io.tmpdir")}/graft-stress-emb-$n"
+    if (!new java.io.File(s"$dir/embeddings.parquet/_SUCCESS").exists())
+      writeEmbeddings(spark, n, dir)
+    dir
+  }
+
   /** IVF ANN at base and 10× corpus size — the scale contract the ≤10
     * time-ratio bar cannot express: candidate pairs follow nprobe·n^1.5
     * (so the 10× ratio is ~31.6 BY DESIGN, sub-quadratic but not linear),
@@ -64,24 +76,15 @@ object StressBench {
     * seconds, recall@3 against the brute-force oracle (bruteTopK — proven
     * equal to distributed exactTopK by NearDupAnnSpec), candidate-pair
     * count, and pairs/(nprobe·n^1.5) (the law fraction, must stay O(1)). */
-  def runIvf(spark: SparkSession, base: Long = 5000L)
-      : scala.collection.immutable.ListMap[String, Double] = {
-    val tmp = sys.props("java.io.tmpdir")
+  def runIvf(spark: SparkSession): scala.collection.immutable.ListMap[String, Double] = {
     var out = scala.collection.immutable.ListMap.empty[String, Double]
     // same warmup discipline as measure(): a cold first call pays one-time
     // codegen/JIT inside the timed window and flatters the base→10x ratio
-    locally {
-      val wDir = s"$tmp/graft-stress-emb-${base / 10}"
-      if (!new java.io.File(s"$wDir/embeddings.parquet/_SUCCESS").exists())
-        writeEmbeddings(spark, base / 10, wDir)
-      graft.sim.Ann.ivfTopK(spark, wDir, k = 3)
-        .write.format("noop").mode("overwrite").save()
-      spark.catalog.clearCache()
-    }
-    for ((label, n) <- Seq(("base", base), ("10x", base * 10))) {
-      val dir = s"$tmp/graft-stress-emb-$n"
-      if (!new java.io.File(s"$dir/embeddings.parquet/_SUCCESS").exists())
-        writeEmbeddings(spark, n, dir)
+    graft.sim.Ann.ivfTopK(spark, embeddingsDir(spark, IvfBase / 10), k = 3)
+      .write.format("noop").mode("overwrite").save()
+    spark.catalog.clearCache()
+    for ((label, n) <- Seq(("base", IvfBase), ("10x", IvfBase * 10))) {
+      val dir = embeddingsDir(spark, n)
       val t0 = System.nanoTime()
       val ivf = graft.sim.Ann.ivfTopK(spark, dir, k = 3)
         .select("vec_id", "neighbor_id")

@@ -178,9 +178,10 @@ object Ann {
     * (cos desc, cand_id asc). For [[ivfTopK]] Spark picks a broadcast or
     * shuffled join on `cluster` from its size estimate of the assign side;
     * at q29 sf0.1, and at 50k uncached rows, it broadcasts it.
-    * (`BenchExtra ivfprof` measured 178 → 215 s of task time when the 50k
-    * plan flipped to broadcast; pinning the join to a shuffle is a separate
-    * change, since no perfbench workload runs IVF and none could show it.)
+    * (The 50k profile, `Inspect profile <sf> ivf50k`, measured 178 → 215 s
+    * of task time when its plan flipped to broadcast; pinning the join to a
+    * shuffle is a separate change, since no perfbench workload runs IVF and
+    * none could show it.)
     *
     * A per-PARTITION streaming top-k per vec_id cuts the rows entering the
     * window to ≤ k per (vec_id, partition) with bounded state (k entries

@@ -4,25 +4,30 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
-import graft.{Bench, Session, SparkEntry}
+import graft.{Bench, Session, SparkEntry, StressBench}
+import graft.sim.Ann
 import graft.web.Flagship
 
-/** Plan and job inspection of the SparkEntry queries, on
-  * `local[SPARK_GRAFT_CPUS]` (default 32):
+/** Plan and job inspection of the SparkEntry queries and two named frames,
+  * on `local[SPARK_GRAFT_CPUS]` (default 32). The named frames are
+  * `flagship`, the parquet-scan Flagship.geocodePages plan, and `ivf50k`,
+  * `Ann.ivfTopK` over the 50k-vector StressBench corpus (written under
+  * java.io.tmpdir on first use). Both modes take either kind of name:
   *
   *   runMain graft.tools.Inspect plans <outDir> [suffix] [q…]
   *     writes `explain("formatted")` of each query to
-  *     `<outDir>/<q>_<suffix>.txt` (suffix default "after"; queries default
-  *     to all of them plus `flagship`, the parquet-scan
-  *     Flagship.geocodePages plan). Queries read SPARK_GRAFT_SF_DIR
+  *     `<outDir>/<q>_<suffix>.txt` (suffix default "after"; names default
+  *     to all queries plus `flagship`; `ivf50k` trains an index, so it
+  *     runs only when named). Queries read SPARK_GRAFT_SF_DIR
   *     (default: the sf0.1 set Bench reads). Iterative operators
   *     (q36/q38/q44) return a materialized frame whose plan is the final
   *     cached scan; for those the per-round plan story lives in the
   *     operator source and OPTIMIZATION notes.
   *   runMain graft.tools.Inspect profile <sfDir> [q…]
-  *     runs each query twice (JIT warm) and prints the second run's
+  *     runs each name twice (JIT warm) and prints the second run's
   *     build/plan/exec seconds and its jobs/stages with wall, task time, GC
-  *     and shuffle-write bytes.
+  *     and shuffle-write bytes. Only the second run is counted, so `ivf50k`
+  *     counts `ivfTopK`'s jobs without the corpus write.
   *
   * [[plans]] and [[profile]] leave the session running, so a spec can call
   * them on a shared session.
@@ -68,11 +73,13 @@ object Inspect {
   /** The plan name for the flagship geocode over a materialized pages scan. */
   val FlagshipPlan = "flagship"
 
-  private def frame(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == FlagshipPlan) {
+  private def frame(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
+    case FlagshipPlan =>
       val cfg = Bench.benchCfg(100000L)
       Flagship.geocodePages(spark, spark.read.parquet(Flagship.materializePages(spark, cfg)), cfg)
-    } else SparkEntry.queries(name)(spark, sfDir)
+    case "ivf50k" => Ann.ivfTopK(spark, StressBench.embeddingsDir(spark, 50000L), k = 3)
+    case q => SparkEntry.queries(q)(spark, sfDir)
+  }
 
   /** Writes `<outDir>/<name>_<suffix>.txt` per name and returns the files
     * written; a name whose plan fails is reported and skipped. */
@@ -93,7 +100,7 @@ object Inspect {
     }
   }
 
-  /** A query's warm run: build/plan/exec seconds and its jobs
+  /** A named frame's warm run: build/plan/exec seconds and its jobs
     * (jobId, description, wall seconds). */
   case class Profile(name: String, buildS: Double, planS: Double, execS: Double,
                      jobs: Seq[(Int, String, Double)])
@@ -102,10 +109,9 @@ object Inspect {
     val timer = new JobTimer
     spark.sparkContext.addSparkListener(timer)
     try names.map { n =>
-      val fn = SparkEntry.queries(n)
       def run(): (Double, Double, Double) = {
         val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
+        val df = frame(spark, sfDir, n)
         val t1 = System.nanoTime()
         df.queryExecution.executedPlan // force analysis+optimization+planning
         val t2 = System.nanoTime()

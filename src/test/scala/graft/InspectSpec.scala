@@ -27,11 +27,14 @@ class InspectSpec extends AnyFunSuite {
   }
 
   test("profile records the warm run's jobs and leaves the session usable") {
-    val Seq(p) = Inspect.profile(spark, sf, Seq("q12_broadcast_lookup"))
-    assert(p.name == "q12_broadcast_lookup")
-    assert(Seq(p.buildS, p.planS, p.execS).forall(_ >= 0.0))
-    assert(p.jobs.nonEmpty, "the noop write runs at least one job")
-    assert(p.jobs.forall(_._3 >= 0.0), s"negative job wall time: ${p.jobs}")
+    val names = Seq("q12_broadcast_lookup", Inspect.FlagshipPlan)
+    val profiles = Inspect.profile(spark, sf, names)
+    assert(profiles.map(_.name) == names, "a named frame profiles like a query")
+    for (p <- profiles) {
+      assert(Seq(p.buildS, p.planS, p.execS).forall(_ >= 0.0))
+      assert(p.jobs.nonEmpty, s"${p.name}: the noop write runs at least one job")
+      assert(p.jobs.forall(_._3 >= 0.0), s"${p.name}: negative job wall time: ${p.jobs}")
+    }
     assert(!spark.sparkContext.isStopped)
     assert(spark.range(10).count() == 10)
   }

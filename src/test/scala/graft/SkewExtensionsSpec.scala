@@ -2,13 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.GeoFunctions
 import graft.ops.Skew
-import graft.plans.CollapseCellParentOfCellOf
 
 class SkewExtensionsSpec extends AnyFunSuite {
-  private lazy val spark = { val s = SparkTestSession.spark; GeoFunctions.register(s); s }
-  import spark.implicits._
+  private lazy val spark = SparkTestSession.spark
 
   test("salted two-phase agg equals the direct aggregation on a skewed key") {
     // 90% of rows share one hot key
@@ -24,27 +21,5 @@ class SkewExtensionsSpec extends AnyFunSuite {
     val phase1 = df.withColumn("_salt", Skew.saltCol(32, col("id")))
       .filter(col("key") === "hot").select("_salt").distinct().count()
     assert(phase1 == 32)
-  }
-
-  test("optimizer rule collapses cell_parent(cell_of(...)) into one cell_of") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ CollapseCellParentOfCellOf
-    try {
-      val df = spark.range(100)
-        .withColumn("lat", col("id").cast("double") % 80)
-        .withColumn("lon", col("id").cast("double") % 170)
-        .withColumn("bucket",
-          GeoFunctions.cell_parent(GeoFunctions.cell_of(col("lat"), col("lon"), 14), 3))
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(!optimized.contains("cell_parent"), optimized)
-      assert(optimized.contains("cell_of"), optimized)
-      // semantics preserved
-      for (r <- df.collect())
-        assert(r.getAs[Long]("bucket") ==
-          graft.cells.CellIndex.cellOf(r.getAs[Double]("lat"), r.getAs[Double]("lon"), 3))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == CollapseCellParentOfCellOf)
-    }
   }
 }

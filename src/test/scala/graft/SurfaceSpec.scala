@@ -3,9 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import scala.sys.process._
 
-/** The library-surface check runs with the tests: every `def` in
-  * src/main/scala has a non-test caller or an allowlisted reason
-  * (tools/check_surface.py). */
+/** The library-surface check runs with the tests: every `def`, `object`,
+  * `class` and `trait` in src/main/scala has a non-test reference or an
+  * allowlisted reason (tools/check_surface.py). */
 class SurfaceSpec extends AnyFunSuite {
   test("tools/check_surface.py finds every library def called or allowlisted") {
     val out = new StringBuilder

@@ -1,17 +1,21 @@
 #!/usr/bin/env python3
-"""Library-surface check: every `def` in src/main/scala needs a caller.
+"""Library-surface check: every `def` and type in src/main/scala needs a reference.
 
-Lists each `def` under src/main/scala whose name appears nowhere else in
-src/main, perfbench/src or tools/ outside comment lines. A name counts
-as referenced if it occurs as a whole word more often than it is defined,
-so overloads and same-named defs in different objects share one verdict.
-String literals stay in the text: SQL strings call registered functions by
-name. `override def` and `main` are skipped.
+Lists each `def`, `object`, `class` and `trait` under src/main/scala whose
+name appears nowhere else in src/main, perfbench/src or tools/ outside
+comment lines. A name counts as referenced if it occurs as a whole word
+more often than it is declared, so overloads, companions and same-named
+members of different objects share one verdict. A type used again inside
+its own file (an expression class its registration builds, a helper trait)
+counts, as does a type that holds a `main`. String literals stay in the
+text: SQL strings call registered functions by name. `override def` and
+`main` are skipped.
 
-A def that is unreferenced on purpose goes in ALLOWLIST with its one-line
-reason. The script prints `path:line Owner.name` for every def that is
-neither referenced nor allowlisted, and every allowlist entry that no
-longer names an unreferenced def, and exits 1 if it printed anything.
+A def or type that is unreferenced on purpose goes in ALLOWLIST with its
+one-line reason. The script prints `path:line Owner.name` for every def or
+type that is neither referenced nor allowlisted, and every allowlist entry
+that no longer names an unreferenced one, and exits 1 if it printed
+anything.
 
     python3 tools/check_surface.py        # expected: no output, exit 0
 """
@@ -65,6 +69,15 @@ def sources():
                 yield p
 
 
+def unreferenced(decls, occurrences):
+    """The (path, line, owner, name) declarations whose name occurs no more
+    often than it is declared."""
+    declared = {}
+    for _, _, _, name in decls:
+        declared[name] = declared.get(name, 0) + 1
+    return [d for d in decls if occurrences.get(d[3], 0) <= declared[d[3]]]
+
+
 def main():
     texts = {}
     for p in sources():
@@ -75,7 +88,8 @@ def main():
         for w in WORD.findall(text):
             occurrences[w] = occurrences.get(w, 0) + 1
 
-    defs = []  # (path, line, owner, name)
+    defs, types = [], []  # (path, line, owner, name); a top-level type's owner is None
+    mains = set()  # (path, name) of each type that holds a `def main`
     for p, text in texts.items():
         if not str(p).startswith(str(ROOT / "src/main/scala")):
             continue
@@ -84,29 +98,33 @@ def main():
             m = OWNER.match(line)
             if m:
                 indent = len(m.group("indent"))
-                owners = [o for o in owners if o[0] < indent] + [(indent, m.group("name"))]
+                owners = [o for o in owners if o[0] < indent]
+                types.append((p, no, owners[-1][1] if owners else None, m.group("name")))
+                owners.append((indent, m.group("name")))
                 continue
             m = DEF.match(line)
-            if not m or "override" in m.group("mods").split() or m.group("name") == "main":
+            if not m or "override" in m.group("mods").split():
                 continue
             indent = len(m.group("indent"))
             owner = next((o[1] for o in reversed(owners) if o[0] < indent), p.stem)
-            defs.append((p, no, owner, m.group("name")))
+            if m.group("name") == "main":
+                mains.add((p, owner))
+            else:
+                defs.append((p, no, owner, m.group("name")))
 
-    defined = {}
-    for _, _, _, name in defs:
-        defined[name] = defined.get(name, 0) + 1
-    unreferenced = [d for d in defs if occurrences.get(d[3], 0) <= defined[d[3]]]
+    found = [(d, "no caller outside comments") for d in unreferenced(defs, occurrences)]
+    found += [(t, "type named nowhere outside comments") for t in unreferenced(types, occurrences)
+              if (t[0], t[3]) not in mains]
 
     problems = []
     seen = set()
-    for p, no, owner, name in unreferenced:
-        key = f"{owner}.{name}"
+    for (p, no, owner, name), why in found:
+        key = f"{owner}.{name}" if owner else name
         seen.add(key)
         if key not in ALLOWLIST:
-            problems.append(f"{p.relative_to(ROOT)}:{no} {key}: no caller outside comments")
+            problems.append(f"{p.relative_to(ROOT)}:{no} {key}: {why}")
     for key in sorted(set(ALLOWLIST) - seen):
-        problems.append(f"tools/check_surface.py: allowlisted {key} is not an unreferenced def")
+        problems.append(f"tools/check_surface.py: allowlisted {key} is not an unreferenced def or type")
     for line in problems:
         print(line)
     return 1 if problems else 0
