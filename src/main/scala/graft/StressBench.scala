@@ -137,22 +137,18 @@ object StressBench {
         .otherwise(pmod(xxhash64(col("id") * 13), lit(1000L))).as("key"),
       pmod(xxhash64(col("id") * 17), lit(10000L)).as("qty"))
 
-  private def consume(df: DataFrame): Unit = {
-    df.write.format("noop").mode("overwrite").save()
-    df.unpersist(false) // kNN/CC pin their materialized result by contract
-  }
-
   /** One (t_base, t_10x) measurement; f must build a FRESH plan per call.
     * A warmup at base/10 runs first so the base timing measures the
     * operator, not codegen/JIT compilation (a cold base flatters the
-    * ratio — q36 measured ratio 0.8 without it). Every run unpersists its
-    * result and the workload ends with a clearCache, so one workload's
-    * pinned storage (e.g. jaccard's internal token-set cache) cannot bias
-    * the next one's timings. */
+    * ratio — q36 measured ratio 0.8 without it). The workload ends with a
+    * clearCache, so one workload's pinned storage cannot bias the next
+    * one's timings. */
   private def measure(spark: SparkSession, label: String, base: Long)
                      (f: Long => DataFrame): (Double, Double) = {
     def time(n: Long): Double = {
-      val t0 = System.nanoTime(); consume(f(n)); (System.nanoTime() - t0) / 1e9
+      val t0 = System.nanoTime()
+      f(n).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
     }
     time(math.max(base / 10, 1L)) // warmup
     val t1 = time(base)

@@ -44,10 +44,9 @@ object DistributedKnn {
     * A point finalizes in exactly one round, and that round's window ranked
     * its pool by (d, tid) over unique (id, tid) rows with the sentinel last,
     * so the finalized slice's row number IS the rank: the result is the one
-    * union of those slices, with no second ranking pass. It is the ONLY
-    * cache this call leaves behind; callers may unpersist it once consumed
-    * (DistributedKnnSpec asserts the persistent-RDD count returns to
-    * baseline after that). */
+    * union of those slices, with no second ranking pass. Every round's
+    * cache is freed before the call returns; the result recomputes from
+    * their lineage. */
   def knn(spark: SparkSession, points: DataFrame, targets: DataFrame,
           level: Int, k: Int = 1, maxRing: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -69,12 +68,11 @@ object DistributedKnn {
     val wId = Window.partitionBy(col("id"))
     var unresolved = truncated(points.select("id", "lat", "lon"))
     var unresolvedCount = 0L
-    // each round's cached top-k frame; finalized rows are sliced out of
-    // these at the end (ONE union), so no per-round best-carry or anti
-    // joins exist — every round is exactly one window exchange + one job
-    val roundFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // finalized rows are sliced out of each round's top-k frame and joined
+    // by ONE union, so no per-round best-carry or anti joins exist — every
+    // round is exactly one window exchange + one action
     val finalizedParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var prevKept: DataFrame = null // unfinalized points' pools (≤ k rows per id)
+    var prevBest: DataFrame = null // the previous round's top-k frame
     var lo = 0
     // the first round always runs (its action fills the points cache), so
     // the union below has at least one slice even when `points` is empty
@@ -97,7 +95,11 @@ object DistributedKnn {
       // last (nulls_last) and are dropped from every kept slice
       val sentinel = unresolved.select(col("id"), col("lat"), col("lon"),
         lit(null).cast("long").as("tid"), lit(null).cast("double").as("d"))
-      val pool0 = (if (prevKept == null) cands else prevKept.unionByName(cands))
+      // unfinalized points carry their pools (≤ k rows per id) forward
+      val pool0 = (if (prevBest == null) cands
+        else prevBest.filter(!col("fin") && col("tid").isNotNull)
+          .select(col("id"), col("lat"), col("lon"), col("tid"), col("d"))
+          .unionByName(cands))
         .unionByName(sentinel)
       // longitude wrap can place ONE target cell at two Chebyshev ring
       // distances r and 2^level - r; ringBatch dedups within a batch, but
@@ -116,22 +118,18 @@ object DistributedKnn {
       // away (the point may sit on its own cell's edge); finalize once the
       // pool is full (cnt = k) AND its worst member beats that bound;
       // after the last batch finalize everything.
-      val roundBest = pool
+      val roundBest = truncated(pool
         .withColumn("rn", row_number().over(wBest)).filter(col("rn") <= k)
         .withColumn("cnt", count(col("tid")).over(wId))
         .withColumn("kth", max(col("d")).over(wId))
         .withColumn("fin",
           if (hi > maxRing) lit(true)
           else col("cnt") === k &&
-            col("kth") <= lit(hi - 1) * min_cell_extent_m(col("lat"), level))
-        .cache()
+            col("kth") <= lit(hi - 1) * min_cell_extent_m(col("lat"), level)))
       finalizedParts += roundBest
         .filter(col("fin") && col("tid").isNotNull)
         .select(col("id"), col("rn").as("rank"), col("tid").as("nearest_tid"),
           col("d").as("nearest_dist_m"))
-      prevKept = roundBest
-        .filter(!col("fin") && col("tid").isNotNull)
-        .select(col("id"), col("lat"), col("lon"), col("tid"), col("d"))
       // the rn = 1 row exists for EVERY unresolved point (sentinel floor),
       // so next round's unresolved set needs no join at all
       val newUnresolved = truncated(roundBest.filter(!col("fin") && col("rn") === 1)
@@ -139,17 +137,17 @@ object DistributedKnn {
       // ONE action per round: materializes roundBest (via its cache) and
       // newUnresolved, and returns the count that drives the loop
       unresolvedCount = newUnresolved.groupBy().count().collect()(0).getLong(0)
+      // this round's window shuffle was the last reader of the previous
+      // round's cache; that round's slice recomputes from its own shuffle
       unresolved.unpersist(false)
-      roundFrames += roundBest
+      if (prevBest != null) prevBest.unpersist(false)
+      prevBest = roundBest
       unresolved = newUnresolved
       lo = hi
     } while (lo <= maxRing && unresolvedCount > 0)
     targetsByCell.unpersist(false)
     unresolved.unpersist(false)
-    // the per-round caches die once the union's cache holds the slices
-    val out = truncated(finalizedParts.reduce(_ unionByName _))
-    out.count()
-    roundFrames.foreach(_.unpersist(false))
-    out
+    prevBest.unpersist(false)
+    finalizedParts.reduce(_ unionByName _)
   }
 }

@@ -94,7 +94,7 @@ object Raster {
     // phase 1: block-local union-find. Rows arrive partitioned by block and
     // SORTED by block within the partition, so one block is in memory at a
     // time (bounded by 4^blockBits occupied cells; 2^20 at the default).
-    val labeled = ids
+    val labeled = truncated(ids
       // ARITHMETIC shift — must group exactly like the task-side `>> B`
       // (shiftrightunsigned would split a negative-coordinate block across
       // partitions and silently lose its intra-block edges)
@@ -113,8 +113,7 @@ object Raster {
             labelBlock(rows, B, gridN)
           }
         }.flatten
-      }.toDF("i", "j", "key", "lbl")
-      .cache() // consumed by border probes + the final relabel join
+      }.toDF("i", "j", "key", "lbl")) // read by border probes + the final relabel join
     // phase 2: border cells probe out-of-block neighbors only; both
     // directions appear because each side of a cross-block edge probes the
     // other. Equivalences are (src lbl, dst lbl) pairs.
@@ -128,11 +127,10 @@ object Raster {
         if (j > 0 && ((j - 1) >> B) != (j >> B)) out += ((i, j - 1, lbl))
         out.result()
       }.toDF("i", "j", "src")
-    val edges = borderProbes
+    val edges = truncated(borderProbes
       .join(labeled.select(col("i"), col("j"), col("lbl").as("dst")), Seq("i", "j"))
       .select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .cache()
+      .filter(col("src") =!= col("dst")))
     // min-label propagation over the contracted label graph; labels not in
     // any equivalence keep their block-local lbl (coalesce at the end)
     val eqNodes = edges.select(col("src").as("key"))
@@ -172,20 +170,19 @@ object Raster {
       labels = next
       iter += 1
     }
-    // materialize the output, then release every intermediate cache: the
-    // returned frame is the ONLY pinned artifact of this call (callers may
-    // unpersist it when consumed — asserted by RasterSpec's hygiene test).
-    // Labels with no cross-block equivalence keep their block-local lbl.
-    val joined = labeled
-      .join(labels.withColumnRenamed("key", "lbl").withColumnRenamed("comp", "gcomp"),
-        Seq("lbl"), "left")
-      .select(col("i"), col("j"), coalesce(col("gcomp"), col("lbl")).as("comp"))
-    val out = truncated(joined)
-    out.count()
+    // free every cache before returning: the relabel join below reads
+    // truncated frames only, so it recomputes from their shuffle outputs.
+    // A truncated scan has no size statistics, so the contracted label
+    // table (≪ cells) is broadcast by hint; unhinted, the join would
+    // shuffle every cell. Labels with no cross-block equivalence keep
+    // their block-local lbl.
     labeled.unpersist(false)
     edges.unpersist(false)
     labels.unpersist(false)
-    out
+    labeled
+      .join(broadcast(labels.withColumnRenamed("key", "lbl").withColumnRenamed("comp", "gcomp")),
+        Seq("lbl"), "left")
+      .select(col("i"), col("j"), coalesce(col("gcomp"), col("lbl")).as("comp"))
   }
 
   /** Union-find over one block's occupied cells (4-adjacency, intra-block

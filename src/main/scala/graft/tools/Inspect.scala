@@ -20,9 +20,10 @@ import graft.web.Flagship
   *     to all queries plus `flagship`; `ivf50k` trains an index, so it
   *     runs only when named). Queries read SPARK_GRAFT_SF_DIR
   *     (default: the sf0.1 set Bench reads). Iterative operators
-  *     (q36/q38/q44) return a materialized frame whose plan is the final
-  *     cached scan; for those the per-round plan story lives in the
-  *     operator source and OPTIMIZATION notes.
+  *     (q36/q38/q44) run their rounds while the frame is built, so their
+  *     plan is the final step over the rounds' truncated scans; the
+  *     per-round plan story lives in the operator source and OPTIMIZATION
+  *     notes.
   *   runMain graft.tools.Inspect profile <sfDir> [q…]
   *     runs each name twice (JIT warm) and prints the second run's
   *     build/plan/exec seconds and its jobs/stages with wall, task time, GC

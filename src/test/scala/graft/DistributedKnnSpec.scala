@@ -143,18 +143,16 @@ class DistributedKnnSpec extends AnyFunSuite {
     assert(secs < 120.0, f"sparse ring walk took $secs%.1f s — plan blowup")
   }
 
-  test("nearest pins only its result; unpersist returns the session to baseline") {
+  test("knn leaves the session's persistent RDDs as it found them") {
     val points = (0L until 50L).map(i =>
       (i, 44.0 + (i % 10) * 0.001, 4.0 + (i / 10) * 0.001)).toDF("id", "lat", "lon")
     val targets = Seq((1L, 44.005, 4.002), (2L, 44.5, 4.5)).toDF("tid", "tlat", "tlon")
-    val baseline = spark.sparkContext.getPersistentRDDs.size
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val r1 = DistributedKnn.knn(spark, points, targets, level = 12, k = 1)
     val r2 = DistributedKnn.knn(spark, points, targets, level = 12, k = 1)
-    assert(spark.sparkContext.getPersistentRDDs.size == baseline + 2,
-      "targetsByCell / per-round best / unresolved must all be freed")
-    r1.unpersist(true)
-    r2.unpersist(true)
-    assert(spark.sparkContext.getPersistentRDDs.size == baseline)
+    assert(r1.count() == 50 && r2.count() == 50)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == baseline,
+      "targetsByCell, every round's top-k and unresolved frame must all be freed")
   }
 
   test("points with no target within maxRing are dropped, not mis-assigned") {
@@ -165,6 +163,5 @@ class DistributedKnnSpec extends AnyFunSuite {
     val none = DistributedKnn.knn(spark, points.limit(0), targets, level = 12, k = 3)
     assert(none.columns.toSeq == Seq("id", "rank", "nearest_tid", "nearest_dist_m"))
     assert(none.count() == 0)
-    none.unpersist(false)
   }
 }

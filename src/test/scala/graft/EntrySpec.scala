@@ -32,12 +32,18 @@ class EntrySpec extends AnyFunSuite {
   }
 
   test("all queries run non-empty on sf0.001") {
-    for ((name, fn) <- SparkEntry.queries) {
+    def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val leaks = for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) yield {
+      val baseline = persistentRdds
       val n = fn(spark, sf).count()
       assert(n >= 0, s"$name failed")
       if (!Set("q10_anti_join").contains(name)) // anti join may legitimately be empty
         assert(n > 0, s"$name returned 0 rows")
+      val after = persistentRdds
+      Option.when(after != baseline)(
+        s"$name left ${after -- baseline} and freed ${baseline -- after}")
     }
+    assert(leaks.flatten.isEmpty, leaks.flatten.mkString("; "))
   }
 
   test("window dedup keeps exactly one row per customer") {

@@ -114,20 +114,16 @@ class RasterSpec extends AnyFunSuite {
     val sizes = comps.groupBy("comp").count().collect().map(_.getLong(1)).sorted
     assert(sizes.toSeq == Seq(64L, 64L),
       s"expected two 64-cell components, got ${sizes.toSeq}")
-    comps.unpersist(true)
   }
 
-  test("connectedComponents pins only its result; unpersist returns to baseline") {
+  test("connectedComponents leaves the session's persistent RDDs as it found them") {
     val cells = Seq((5L, 5L), (5L, 6L), (6L, 5L), (9L, 9L)).toDF("i", "j")
-    val baseline = spark.sparkContext.getPersistentRDDs.size
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val r1 = Raster.connectedComponents(spark, cells, gridN = 16L)
     val r2 = Raster.connectedComponents(spark, cells, gridN = 16L)
-    assert(spark.sparkContext.getPersistentRDDs.size == baseline + 2,
-      "each call must pin exactly its materialized result")
-    r1.unpersist(true)
-    r2.unpersist(true)
-    assert(spark.sparkContext.getPersistentRDDs.size == baseline,
-      "unpersisting the results must return the session to baseline")
+    assert(r1.count() == 4 && r2.count() == 4)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == baseline,
+      "the block labels, the label edges and every round's labels must all be freed")
   }
 
   test("two-phase CC merges components across block borders (blockBits=2)") {
@@ -191,7 +187,6 @@ class RasterSpec extends AnyFunSuite {
       val comps = Raster.connectedComponents(spark, cells.toSeq.toDF("i", "j"), gridN,
         blockBits = blockBits)
       val got = comps.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      comps.unpersist(true)
       val want = unionFindLabels(cells, gridN)
       assert(got == want, {
         val bad = (want.keySet ++ got.keySet).filter(c => got.get(c) != want.get(c)).take(5)

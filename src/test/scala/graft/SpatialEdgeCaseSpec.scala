@@ -44,7 +44,6 @@ class SpatialEdgeCaseSpec extends AnyFunSuite {
         pts.toDF("id", "lat", "lon"), tgts.toDF("tid", "tlat", "tlon"), level = 8, k = 1)
     val rows = got.collect().map(r => r.getAs[Long]("id") ->
       (r.getAs[Long]("nearest_tid"), r.getAs[Double]("nearest_dist_m"))).toMap
-    got.unpersist(false) // by contract the result is the call's only pinned frame
     val idx = PointCellIndex.build(tgts, level = 8)
     pts.foreach { case (id, lat, lon) =>
       val Some((wantTid, wantD)) = idx.nearest(lat, lon)
