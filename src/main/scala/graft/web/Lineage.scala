@@ -84,11 +84,12 @@ object Lineage {
     * @param splitsPerBucket bounded salt WITHIN each bucket: a hot bucket
     *        (skewed web data) would otherwise hash to ONE shuffle partition
     *        and serialize its whole write into one straggler task. splits > 1
-    *        spreads each bucket over that many tasks — files per bucket stay
-    *        ≤ splits (bounded, not the unbounded tasks × buckets of a write
-    *        without the exchange) and write parallelism becomes
-    *        splits × buckets. 0 = AUTO: derive from the pending-bucket
-    *        count so total write parallelism reaches the cluster's cores
+    *        spreads each bucket over up to that many tasks — files per bucket
+    *        stay ≤ splits (bounded, not the unbounded tasks × buckets of a
+    *        write without the exchange). The write runs in
+    *        min(pending buckets × splits, cores) tasks: one per write key,
+    *        capped at the cluster's slots. 0 = AUTO: derive from the
+    *        pending-bucket count so the keys reach the cluster's cores
     *        (ceil(cores / pending buckets)) — the spatially-bucketed callers
     *        (cell_parent buckets concentrate a whole region into few
     *        buckets) stop serializing their write, while callers with
@@ -113,16 +114,24 @@ object Lineage {
       // deployment scale; measured 4× the whole commit wall at 200k rows
       // × 64 buckets locally). One exchange on the partition key buys
       // one file-set per bucket and a proportionally cheaper read-back
-      // audit and downstream scan.
+      // audit and downstream scan. The exchange takes an explicit count,
+      // min(write keys, slots): without one AQE coalesces it by bytes,
+      // so a small commit of any bucket count runs in ONE write task,
+      // though a partitioned write costs per file written, not per input
+      // byte. Each key still lands in one partition, so files per bucket
+      // stay ≤ splits. Curating 20k pages into 64 buckets on local[4],
+      // warm, the write stage took 0.9–1.1 s in 1 task, 0.4–0.5 s in 4,
+      // and 1.0–1.3 s in 64 (one per key: per-task commit cost).
       locally {
         val filtered = df.filter(col("bucket").isin(pending: _*))
+        val slots = spark.sparkContext.defaultParallelism
         val splits =
           if (splitsPerBucket > 0) splitsPerBucket
-          else math.max(1, (spark.sparkContext.defaultParallelism +
-            pending.length - 1) / pending.length) // auto: cores / buckets
-        if (splits == 1) filtered.repartition(col("bucket"))
-        else filtered.repartition(col("bucket"),
-          pmod(xxhash64(col("url")), lit(splits.toLong)))
+          else math.max(1, (slots + pending.length - 1) / pending.length) // auto: cores / buckets
+        val keys =
+          if (splits == 1) Seq(col("bucket"))
+          else Seq(col("bucket"), pmod(xxhash64(col("url")), lit(splits.toLong)))
+        filtered.repartition(math.min(pending.length.toLong * splits, slots).toInt, keys: _*)
       }.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")

@@ -269,12 +269,7 @@ class GeocodeSpec extends AnyFunSuite {
   test("splitsPerBucket bounds files per bucket while spreading hot buckets") {
     val outDir = java.nio.file.Files.createTempDirectory("graft-splits").toString
     val df = Flagship.geocode(spark, cfg).repartition(16).cache()
-    // AQE coalesces this toy-sized shuffle to one partition (correct at
-    // scale: only SMALL salt partitions merge; a hot bucket's stay apart) —
-    // disable it here so the split layout is observable
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try Lineage.run(spark, df, outDir, "snap-1", splitsPerBucket = 3)
-    finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    Lineage.run(spark, df, outDir, "snap-1", splitsPerBucket = 3)
     def filesOf(b: Long): Long = {
       val d = java.nio.file.Paths.get(outDir, "data", s"bucket=$b")
       java.nio.file.Files.list(d).toArray.count(_.toString.endsWith(".parquet"))
@@ -293,9 +288,7 @@ class GeocodeSpec extends AnyFunSuite {
     val cores = spark.sparkContext.defaultParallelism
     val expectSplits = math.max(1, (cores + nBuckets - 1) / nBuckets)
     assume(expectSplits > 1, "spatial world must concentrate into few buckets")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try Lineage.run(spark, df, outDir, "snap-1", splitsPerBucket = 0)
-    finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    Lineage.run(spark, df, outDir, "snap-1", splitsPerBucket = 0)
     def filesOf(b: Long): Long = {
       val d = java.nio.file.Paths.get(outDir, "data", s"bucket=$b")
       java.nio.file.Files.list(d).toArray.count(_.toString.endsWith(".parquet"))
@@ -307,6 +300,21 @@ class GeocodeSpec extends AnyFunSuite {
       "the hot bucket must spread over more than one write task")
     assert(Lineage.audit(spark, outDir).isEmpty)
     df.unpersist()
+  }
+
+  test("an unsalted commit spreads its buckets over more than one write task") {
+    assume(spark.sparkContext.defaultParallelism >= 2, "needs two task slots")
+    val outDir = java.nio.file.Files.createTempDirectory("graft-unsalted").toString
+    val df = spark.range(1000).select(
+      concat(lit("u"), col("id").cast("string")).as("url"), (col("id") % 16).as("bucket"))
+    Lineage.run(spark, df, outDir, "snap-1")
+    // part-NNNNN names the write task's partition
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(outDir, "data"))
+      .toArray.map(_.toString).filter(_.endsWith(".parquet"))
+    val tasks = files.map(f => "part-(\\d{5})".r.findFirstMatchIn(f).get.group(1)).toSet
+    assert(files.length == 16, "one file per bucket")
+    assert(tasks.size >= 2, s"one write task wrote every bucket: ${tasks.mkString(",")}")
+    assert(Lineage.audit(spark, outDir).isEmpty)
   }
 
   test("Lineage.run keeps a caller's cache of its input") {
